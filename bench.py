@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -44,10 +45,36 @@ def _warm_session(spark, sf_dir: str) -> None:
     ).agg(F.sum("w")).collect()
 
 
+def env_cpus(default: int = 32) -> int:
+    """``SPARK_GRAFT_CPUS`` as a positive int; an unset, malformed or
+    non-positive value falls back to ``default`` with a note on stderr
+    instead of crashing after the timed loop."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus <= 0:
+        if raw:
+            print(
+                f"bench: ignoring SPARK_GRAFT_CPUS={raw!r}, using {default}",
+                file=sys.stderr,
+            )
+        return default
+    return cpus
+
+
+def file_tag(cpus: int, sf: str) -> str:
+    """``c{cpus}_sf{sf}`` reduced to file-name-safe characters: ``sf``
+    is the tail of a user-supplied path."""
+    return re.sub(r"[^A-Za-z0-9._-]", "_", f"c{cpus}_sf{sf}")
+
+
 def main() -> None:
+    cpus = env_cpus()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("vectordb-light-spark-bench")
+    spark = get_spark("vectordb-light-spark-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     _warm_session(spark, sf_dir)
@@ -173,15 +200,14 @@ def main() -> None:
             "n_queries": len(timings),
             "queries": timings,
             **ingest,
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            "cpus": cpus,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         },
         indent=1,
     )
     here = Path(__file__).resolve().parent
     (here / "BENCH_FULL.json").write_text(full_blob)
-    tag = f"c{os.environ.get('SPARK_GRAFT_CPUS', '32')}_sf{sf}"
-    (here / f"BENCH_FULL_{tag}.json").write_text(full_blob)
+    (here / f"BENCH_FULL_{file_tag(cpus, sf)}.json").write_text(full_blob)
     headline = [
         "vq_topk_cosine",
         "vq_batch_topk",

@@ -328,8 +328,18 @@ def test_observability_metrics(built_db, spark):
     db = VectorDB.open(spark, root, "testdb", cache=False)
     hits = db.search("quick brown fox").collect()
     stats = db.last_search_stats
-    assert stats["n_scanned"] == meta["num_vectors"]
-    assert 0.0 <= stats["min_sim"] <= stats["avg_sim"] <= stats["max_sim"] <= 1.0
+    # the stats cover the whole scan, not just the top-k: compare them
+    # with numpy over every stored vector
+    mat = np.array(
+        [r["vector"] for r in db.vectors.select("vector").collect()], dtype=np.float64
+    )
+    q = np.asarray(db.embed("quick brown fox"), dtype=np.float64)
+    sims = np.clip(mat @ q, 0.0, 1.0)
+    assert stats["n_scanned"] == meta["num_vectors"] == len(sims)
+    assert abs(stats["min_sim"] - sims.min()) < 1e-12
+    assert abs(stats["max_sim"] - sims.max()) < 1e-12
+    assert abs(stats["avg_sim"] - sims.mean()) < 1e-12
+    assert stats["n_passing_threshold"] == int((sims >= SearchParams().threshold).sum())
     assert stats["n_passing_threshold"] >= len(hits)
     db.close()
 

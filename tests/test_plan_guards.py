@@ -57,6 +57,45 @@ def test_no_plan_antipatterns(spark, name):
         )
 
 
+# Entries whose exact cosine scan once ran the query similarity as an
+# Arrow pandas UDF (ArrowEvalPython). The single-query scan now scores
+# with one JVM higher-order-function column, so these plans carry no
+# Python stage at all; a Python round trip creeping back into the
+# exact scan fails here.
+PYTHON_FREE_EXACT_SCAN = (
+    "vq_chunks_only",
+    "vq_filtered_topk",
+    "vq_rag_prompt",
+    "vq_range_search",
+    "vq_threshold_after_topk",
+    "vq_topk_cosine",
+    "vq_topk_quantized",
+)
+
+# ANN entries keep the Arrow stages of their own index encoders (SRP
+# signature, PCA/OPQ projection, PQ/IVF codes); their exact-scan arm
+# lost its Arrow stage with the same change. Ceilings, not targets.
+ANN_ARROW_STAGE_CEILING = {
+    "ann_ivf_topk": 1,
+    "ann_ivfpq_topk": 2,
+    "ann_opq_topk": 1,
+    "ann_pca_topk": 1,
+    "ann_pq_topk": 1,
+    "ann_srp_topk": 1,
+}
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow")
+
+
+@pytest.mark.parametrize("name", PYTHON_FREE_EXACT_SCAN + tuple(ANN_ARROW_STAGE_CEILING))
+def test_exact_scan_has_no_python_round_trip(spark, name):
+    plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    if name in ANN_ARROW_STAGE_CEILING:
+        assert plan.count("ArrowEvalPython") <= ANN_ARROW_STAGE_CEILING[name], name
+    else:
+        assert not [n for n in _PYTHON_NODES if n in plan], name
+
+
 def test_runtime_bloom_filter_injected_for_selective_join(spark, sf_dir):
     """100 TB knob: with runtime bloom filters enabled (and the local
     size thresholds relaxed — real clusters hit them naturally), a

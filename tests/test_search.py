@@ -63,6 +63,8 @@ def test_cosine_similarity_known_values(spark):
 
 
 def test_topk_orders_by_similarity_with_tiebreak(spark):
+    import numpy as np
+
     out = topk_cosine(
         _vecs(spark), [1.0, 0.0, 0.0], SearchParams(k=3, threshold=0.0)
     ).collect()
@@ -70,6 +72,29 @@ def test_topk_orders_by_similarity_with_tiebreak(spark):
     assert [r["id"] for r in out] == [1, 3, 5]
     assert [r["rank"] for r in out] == [1, 2, 3]
     assert out[0]["similarity_score"] == 1.0
+
+    # un-normalized store and query (assume_normalized=False): cosine,
+    # not dot product. Rows 20-23 are 2x copies of rows 3-6 (exact
+    # cosine ties), so the ascending-id tiebreak decides their order.
+    rng = np.random.default_rng(5)
+    mat = rng.normal(size=(20, 4)) * rng.uniform(0.1, 9.0, size=(20, 1))
+    mat = np.vstack([mat, 2.0 * mat[3:7]])
+    ids = np.array([40 - i for i in range(24)])  # ids descend with row order
+    q = [3.0, -1.0, 0.5, 2.0]
+    df = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
+        "id long, vector array<double>",
+    )
+    sims = np.clip(
+        mat @ np.asarray(q) / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q)), 0.0, 1.0
+    )
+    want = sorted(zip(ids.tolist(), sims.tolist()), key=lambda t: (-t[1], t[0]))[:8]
+    got = topk_cosine(
+        df, q, SearchParams(k=8, threshold=0.0, assume_normalized=False)
+    ).collect()
+    assert [r["id"] for r in got] == [i for i, _ in want]
+    assert [r["rank"] for r in got] == list(range(1, 9))
+    assert max(abs(r["similarity_score"] - s) for r, (_, s) in zip(got, want)) < 1e-12
 
 
 def test_threshold_applied_after_topk_shrinks_result(spark):
@@ -110,6 +135,83 @@ def test_clip_to_unit_interval(spark):
     by_id = {r["id"]: r["similarity_score"] for r in out}
     assert by_id[4] == 1.0
     assert by_id[1] == 0.0  # cos=-1 clipped to 0
+
+
+def _python_stages_and_sim_count(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    python = [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
+    return python, plan.count("aggregate(zip_with(")
+
+
+def test_exact_scan_scores_each_row_once_in_the_jvm(spark):
+    """The exact read path has no Python stage, and the similarity
+    higher-order function appears ONCE in the executed plan: top-k,
+    the threshold and the range filter all read that one column."""
+    from vectordb_light_spark.operators.search import range_search
+
+    vecs = _vecs(spark)
+    for df in (
+        topk_cosine(vecs, [1.0, 0.0, 0.0], SearchParams(k=3, threshold=0.5)),
+        topk_cosine(
+            vecs, [1.0, 0.0, 0.0],
+            SearchParams(k=3, search_term="doc", document_type="document"),
+        ),
+        range_search(vecs, [1.0, 0.0, 0.0], radius=0.5),
+        range_search(vecs, [1.0, 0.0, 0.0], radius=0.5, assume_normalized=True),
+    ):
+        assert _python_stages_and_sim_count(df) == ([], 1)
+
+
+@pytest.fixture(scope="module")
+def small_db(spark, tmp_path_factory):
+    from vectordb_light_spark.engine import VectorDB
+    from vectordb_light_spark.operators.ingest import IngestConfig, create_database
+    from vectordb_light_spark.sources.extract import load_directory
+
+    src = tmp_path_factory.mktemp("scan_docs")
+    for i in range(6):
+        (src / f"d{i}.txt").write_text(f"subject{i % 3} body words " * 30)
+    db_root = str(tmp_path_factory.mktemp("scan_dbs"))
+    docs, _ = load_directory(spark, str(src))
+    create_database(
+        spark, docs, db_root, "scand",
+        IngestConfig(
+            chunk_size=150, chunk_overlap=30, target_files=1,
+            embedder_spec={"encoder": "hashing", "dim": 16, "seed": 3},
+        ),
+    )
+    db = VectorDB.open(spark, db_root, "scand", cache=False)
+    yield db
+    db.close()
+
+
+def test_vectordb_search_plan_scores_once_without_python(small_db):
+    """The facade's observe() stats read the same similarity column
+    as the top-k: one HOF evaluation, no Python stage."""
+    for params in (
+        SearchParams(),
+        SearchParams(k=3, threshold=0.0, search_term="body", document_type="x"),
+    ):
+        df = small_db.search("subject1 body", params=params)
+        assert _python_stages_and_sim_count(df) == ([], 1)
+    df.collect()
+    assert small_db.last_search_stats["n_scanned"] > 0
+
+
+def test_vectordb_search_rejects_non_finite_query_vector(small_db):
+    dim = small_db.meta["dimensions"]
+    with pytest.raises(ValueError, match="non-finite value nan at index 0"):
+        small_db.search(query_vector=[float("nan")] + [0.0] * (dim - 1))
+    with pytest.raises(ValueError, match="at index 2"):
+        small_db.search(query_vector=[0.5, 0.5, float("-inf")] + [0.0] * (dim - 3))
+
+
+def test_literal_array_sql_rejects_non_finite():
+    from vectordb_light_spark.session import literal_array_sql
+
+    assert literal_array_sql([0.5, -1e-05], "double") == "array(0.5D,-1e-05D)"
+    with pytest.raises(ValueError, match=r"inf at index 1"):
+        literal_array_sql([1.0, float("inf")], "double")
 
 
 def test_topk_batch_matches_single(spark):

@@ -28,9 +28,8 @@ from __future__ import annotations
 import json
 import os
 import re
-from dataclasses import replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_light_spark.functions.embedding import embed_query
@@ -38,8 +37,8 @@ from vectordb_light_spark.operators.citations import format_citations
 from vectordb_light_spark.operators.ingest import META_FILE
 from vectordb_light_spark.operators.search import (
     SearchParams,
-    similarity_column,
-    topk_cosine,
+    rank_topk,
+    score_query,
 )
 
 #: Reference prompt strings (constants.py:207-208), reproduced for
@@ -450,14 +449,6 @@ class VectorDB:
             if query_text is None:
                 raise ValueError("need query_text or query_vector")
             query_vector = self.embed(query_text)
-        # Write-path invariant: stored vectors are L2-normalized.
-        params = replace(params, assume_normalized=True)
-        # Per-query similarity distribution as observe() metrics — the
-        # reference logs min/max/mean distance and threshold-pass
-        # counts per search (vector_db_query.py:184-201). Computed in
-        # the same scan; read from .last_search_stats after an action.
-        from pyspark.sql import Observation
-
         base = self.vectors
         if ann_radius is not None:
             if "srp_sig" not in base.columns:
@@ -479,23 +470,23 @@ class VectorDB:
                 F.bit_count(F.col("srp_sig").bitwiseXOR(F.lit(qsig))) <= ann_radius
             )
 
+        # Per-query similarity distribution as observe() metrics — the
+        # reference logs min/max/mean distance and threshold-pass
+        # counts per search (vector_db_query.py:184-201). They read the
+        # column the top-k ranks on; .last_search_stats after an action.
+        # Write-path invariant: stored vectors are L2-normalized.
         self._last_obs = Observation("search_stats")
-        vectors = base.withColumn(
-            "__sim",
-            similarity_column("vector", query_vector, assume_normalized=True),
-        ).observe(
+        sim = F.col("similarity_score")
+        scored = score_query(base, query_vector, assume_normalized=True, drop=_INDEX_COLS)
+        scored = scored.observe(
             self._last_obs,
             F.count(F.lit(1)).alias("n_scanned"),
-            F.min("__sim").alias("min_sim"),
-            F.max("__sim").alias("max_sim"),
-            F.avg("__sim").alias("avg_sim"),
-            F.sum((F.col("__sim") >= params.threshold).cast("long")).alias(
-                "n_passing_threshold"
-            ),
-        ).drop("__sim")
-        return topk_cosine(
-            vectors, query_vector, params, id_col="id", vec_col="vector"
-        ).drop(*_INDEX_COLS)
+            F.min(sim).alias("min_sim"),
+            F.max(sim).alias("max_sim"),
+            F.avg(sim).alias("avg_sim"),
+            F.sum((sim >= params.threshold).cast("long")).alias("n_passing_threshold"),
+        )
+        return rank_topk(scored, params, id_col="id")
 
     def search_hybrid(
         self,

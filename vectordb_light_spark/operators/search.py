@@ -7,6 +7,10 @@ Reference pipeline (vector_db_query.py:140-263) in order:
   Q8 case-insensitive search-term substring filter →
   Q9 document-type equality filter → Q10 rank-ordered projection.
 
+Each row is scored once, JVM-side (:func:`score_query`); the
+observe() stats of ``VectorDB.search``, the top-k order and the
+threshold (:func:`rank_topk`) all read that one column.
+
 Order is semantics, not optimization: the threshold and post-filters
 are applied to the top-k result, so pushing them below the limit would
 be WRONG (they can only shrink the k rows, never admit replacements).
@@ -24,6 +28,8 @@ queries) rather than Q scans.
 
 from __future__ import annotations
 
+import functools
+import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -31,7 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from vectordb_light_spark.functions.vector import cosine_similarity, dot_product
+from vectordb_light_spark.session import literal_array_sql
 
 
 @dataclass(frozen=True)
@@ -48,43 +54,62 @@ class SearchParams:
     assume_normalized: bool = False  # write-path vectors are L2-normalized
 
 
-def similarity_column(vec_col: Column | str, query: list[float], *, assume_normalized: bool) -> Column:
+def similarity_column(vec_col: str, query: list[float], *, assume_normalized: bool) -> Column:
     """Cosine similarity of a vector column against one literal query
     vector, clipped to [0,1] like the reference's
     sim = clip(1 - distance, 0, 1) (vector_db_query.py:186-192).
-    Pure Catalyst expression form — fine for oracle queries and
-    derived columns; the hot scan path uses :func:`make_query_sim_udf`
-    (one BLAS matvec per Arrow batch instead of an interpreted lambda
-    fold per row)."""
-    from vectordb_light_spark.session import literal_array
-
-    q = literal_array(query, "double")
-    sim = dot_product(vec_col, q) if assume_normalized else cosine_similarity(vec_col, q)
-    return F.least(F.greatest(sim, F.lit(0.0)), F.lit(1.0))
-
-
-def make_query_sim_udf(query: list[float], *, assume_normalized: bool):
-    """Arrow-batched twin of :func:`similarity_column`: [n,d] batch @
-    query with BLAS, clip to [0,1]. Same doubles up to summation
-    order."""
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query, dtype=np.float64)
+    The higher-order-function math of functions/vector.py, built as ONE
+    parsed SQL expression like ``session.literal_array`` (lambda-built
+    HOF trees pay a py4j round trip per node at every plan build)."""
+    q, vec = [float(v) for v in query], "`" + vec_col.replace("`", "``") + "`"
+    sim = (
+        f"aggregate(zip_with({vec}, {literal_array_sql(q, 'double')}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
+    )
     if not assume_normalized:
-        q = q / max(float(np.linalg.norm(q)), 1e-12)
+        # ‖q‖ summed in the aggregate's order: bit-identical to the HOF form
+        q_norm = max(math.sqrt(functools.reduce(lambda acc, x: acc + x * x, q, 0.0)), 1e-12)
+        sim += (
+            f" / (greatest(sqrt(aggregate({vec}, 0.0D, (acc, x) -> acc + "
+            f"CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 1e-12D) * {q_norm!r}D)"
+        )
+    return F.expr(f"least(greatest({sim}, 0.0D), 1.0D)")
 
-    @pandas_udf("double")
-    def sim(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype="float64")
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        if not assume_normalized and len(mat):
-            n = np.linalg.norm(mat, axis=1, keepdims=True)
-            np.maximum(n, 1e-12, out=n)
-            mat = mat / n
-        return pd.Series(np.clip(mat @ q, 0.0, 1.0))
 
-    return sim
+def score_query(
+    vectors: DataFrame, query: list[float], *, vec_col: str = "vector",
+    assume_normalized: bool = False, drop: tuple[str, ...] = (),
+) -> DataFrame:
+    """Scoring step: one projection replacing the vector (and ``drop``
+    columns) with ``similarity_score``."""
+    gone = {vec_col, *drop}
+    sim = similarity_column(vec_col, query, assume_normalized=assume_normalized)
+    return vectors.select(
+        *[c for c in vectors.columns if c not in gone], sim.alias("similarity_score")
+    )
+
+
+def rank_topk(scored: DataFrame, params: SearchParams, *, id_col: str = "id") -> DataFrame:
+    """Ranking step over a :func:`score_query` frame: top-k (per-task
+    k-heaps, TakeOrderedAndProject), rank over the ≤k rows, THEN the
+    post-top-k filters Q5 → Q8 → Q9 as one predicate, so surviving rows
+    keep their original rank. Ties break on ``id_col`` ascending."""
+    order = (F.col("similarity_score").desc(), F.col(id_col).asc())
+    cond = F.col("similarity_score") >= F.lit(params.threshold)
+    if params.search_term:
+        # Q8: case-insensitive substring containment on chunk text
+        # (vector_db_query.py:243-250).
+        cond &= F.contains(F.lower(F.col("text")), F.lit(params.search_term.lower()))
+    if params.document_type:
+        # Q9: exact equality on document_type (vector_db_query.py:252-257).
+        cond &= F.col("document_type") == F.lit(params.document_type)
+    return (
+        scored.orderBy(*order)
+        .limit(params.k)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+        .where(cond)
+        .orderBy("rank")
+    )
 
 
 def topk_cosine(
@@ -97,7 +122,8 @@ def topk_cosine(
 ) -> DataFrame:
     """Exact brute-force top-k cosine search (reference Q2,
     vector_db_query.py:148-163) with rank, then the reference's
-    post-top-k filters (Q5/Q8/Q9).
+    post-top-k filters (Q5/Q8/Q9): :func:`score_query` then
+    :func:`rank_topk`.
 
     Returns the input columns (minus the vector) plus
     ``similarity_score`` (double, clipped) and ``rank`` (1..≤k).
@@ -105,32 +131,9 @@ def topk_cosine(
     (the reference's numpy argpartition tie order is unspecified;
     SURVEY §2.8 requires an explicit tiebreaker).
     """
-    sim_udf = make_query_sim_udf(query, assume_normalized=params.assume_normalized)
-    scored = vectors.withColumn("similarity_score", sim_udf(F.col(vec_col)))
-
-    # TakeOrderedAndProject: per-partition k-heaps, no full sort/shuffle.
-    topk = (
-        scored.orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-        .limit(params.k)
-    )
-
-    # Rank within the materialized top-k (window over ≤k rows — cheap),
-    # assigned BEFORE post-filters so surviving rows keep their original
-    # rank, matching the reference's ordered-list semantics.
-    w = Window.orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-    ranked = topk.withColumn("rank", F.row_number().over(w))
-
-    out = ranked.where(F.col("similarity_score") >= F.lit(params.threshold))
-    if params.search_term:
-        # Q8: case-insensitive substring containment on chunk text
-        # (vector_db_query.py:243-250).
-        out = out.where(
-            F.contains(F.lower(F.col("text")), F.lit(params.search_term.lower()))
-        )
-    if params.document_type:
-        # Q9: exact equality on document_type (vector_db_query.py:252-257).
-        out = out.where(F.col("document_type") == F.lit(params.document_type))
-    return out.drop(vec_col).orderBy("rank")
+    norm = params.assume_normalized
+    scored = score_query(vectors, query, vec_col=vec_col, assume_normalized=norm)
+    return rank_topk(scored, params, id_col=id_col)
 
 
 def range_search(
@@ -147,8 +150,9 @@ def range_search(
     which is what dedup sweeps and recall audits want, where top-k's
     fixed cutoff would truncate dense neighborhoods.
 
-    Plan shape: one scan + map-side filter — no shuffle at all until
-    the final (result-sized, not data-sized) sort. At 100 TB this is
+    Plan shape: one scan + map-side filter on the
+    :func:`similarity_column` score — no shuffle at all until the
+    final (result-sized, not data-sized) sort. At 100 TB this is
     strictly cheaper than top-k: no per-partition heaps, no ordered
     reduce; the scan parallelism IS the operator.
 
@@ -156,11 +160,15 @@ def range_search(
     ``similarity_score`` (double, clipped to [0,1]), ordered by
     (score desc, id).
     """
-    sim_udf = make_query_sim_udf(query, assume_normalized=assume_normalized)
+    sim = similarity_column(vec_col, query, assume_normalized=assume_normalized)
+    # Catalyst inlines a projected alias into a filter pushed below it,
+    # scoring passing rows twice; a generator output is never inlined.
     return (
-        vectors.withColumn("similarity_score", sim_udf(F.col(vec_col)))
+        vectors.select(
+            *[c for c in vectors.columns if c != vec_col],
+            F.explode(F.array(sim)).alias("similarity_score"),
+        )
         .where(F.col("similarity_score") >= F.lit(radius))
-        .drop(vec_col)
         .orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
     )
 

@@ -7,6 +7,7 @@ counts, AQE, broadcast thresholds) translate 1:1.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -282,28 +283,40 @@ def pushdown_barrier(df: DataFrame) -> DataFrame:
     return df.where(F.monotonically_increasing_id() >= 0)
 
 
-def literal_array(values, sql_type: str = "bigint"):
-    """Array literal as ONE parsed SQL expression. ``F.array`` over
+def literal_array_sql(values, sql_type: str = "bigint") -> str:
+    """Array literal as ONE SQL expression text. ``F.array`` over
     per-element ``F.lit`` pays a py4j driver round-trip per element —
     ~3 ms each, so a 2048-word Bloom filter literal cost ~6 s of plan
     CONSTRUCTION wall per query build (measured; the executed plan is
     identical either way). Integer types render exactly; doubles use
     repr (shortest round-trip) with the ``D`` suffix so the parsed
-    value is bit-identical to the Python float."""
-    from pyspark.sql import functions as F
-
+    value is bit-identical to the Python float. SQL has no NaN/inf
+    literal syntax, so a non-finite double raises ``ValueError``
+    naming its index instead of rendering unparseable text."""
     t = sql_type.lower()
     values = list(values)  # accept numpy arrays / generators (r13)
     if not values:
-        return F.expr(f"CAST(array() AS array<{t}>)")
+        return f"CAST(array() AS array<{t}>)"
     if t in ("bigint", "long", "int", "integer", "smallint", "tinyint"):
         suffix = "L" if t in ("bigint", "long") else ""
         body = ",".join(str(int(v)) + suffix for v in values)
     elif t in ("double", "float"):
-        body = ",".join(repr(float(v)) + "D" for v in values)
+        floats = [float(v) for v in values]
+        bad = next((i for i, v in enumerate(floats) if not math.isfinite(v)), None)
+        if bad is not None:
+            raise ValueError(
+                f"literal_array: non-finite value {floats[bad]!r} at index {bad}"
+            )
+        body = ",".join(repr(v) + "D" for v in floats)
     else:
         raise ValueError(f"unsupported literal_array type: {sql_type}")
-    arr = F.expr(f"array({body})")
-    return arr if t in ("bigint", "long", "double") else arr.cast(
-        f"array<{t}>"
-    )
+    if t in ("bigint", "long", "double"):
+        return f"array({body})"
+    return f"CAST(array({body}) AS array<{t}>)"
+
+
+def literal_array(values, sql_type: str = "bigint"):
+    """:func:`literal_array_sql` parsed into a Column."""
+    from pyspark.sql import functions as F
+
+    return F.expr(literal_array_sql(values, sql_type))
