@@ -46,9 +46,9 @@ def _warm_session(spark, sf_dir: str) -> None:
 
 
 def env_cpus(default: int = 32) -> int:
-    """``SPARK_GRAFT_CPUS`` as a positive int; an unset, malformed or
-    non-positive value falls back to ``default`` with a note on stderr
-    instead of crashing after the timed loop."""
+    """``SPARK_GRAFT_CPUS`` as a positive int, parsed once before any
+    timing work; an unset, malformed or non-positive value falls back
+    to ``default`` with a note on stderr instead of crashing."""
     raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
     try:
         cpus = int(raw)
