@@ -218,3 +218,38 @@ def test_pointer_jumping_rejects_unknown_mode(spark):
     # passes an equality check but misses the `is True` dispatch)
     with pytest.raises(ValueError, match="auto"):
         connected_components(df, pointer_jumping=1)
+
+
+def test_rounds_leave_the_session_conf_alone(spark):
+    """The round loop runs under the caller's session conf: while a
+    multi-round clustering runs on a worker thread, the main thread of
+    the same session polls AQE and the shuffle partition count and
+    never sees either value change."""
+    import threading
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    ids = random.Random(7).sample(range(1_000), 16)
+    pairs = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "doc_id_a long, doc_id_b long"
+    )
+    st: dict = {}
+    done = threading.Event()
+
+    def run():
+        try:
+            duplicate_clusters(pairs, stats=st).collect()
+        finally:
+            done.set()
+
+    worker = threading.Thread(target=run)
+    worker.start()
+    seen = []
+    while not done.wait(0.005):
+        seen.append({k: spark.conf.get(k) for k in keys})
+    worker.join(timeout=300)
+    assert not worker.is_alive() and st["rounds"] >= 4, st
+    assert len(seen) > 1 and all(s == before for s in seen), [
+        s for s in seen if s != before
+    ][:3]
+    assert {k: spark.conf.get(k) for k in keys} == before

@@ -314,3 +314,43 @@ def test_broadcast_detector_negative_control(spark):
     plan_ok = ok._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan_ok
     assert broadcast_subtrees_bounded(plan_ok)
+
+
+def test_training_corpus_gate_stays_above_the_rebalance_exchange(spark):
+    """``pipe_training_corpus`` wraps its scan in
+    ``session.pushdown_barrier``: the barrier filter and the
+    quality-fold filter must both sit above the round-robin exchange,
+    so the gate runs across every post-exchange task instead of inside
+    the single-split scan task. Nothing from the gate may reach the
+    scan below the exchange as a data or pushed filter."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from scale_probe import _node_indent
+
+    spark.catalog.clearCache()
+    prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
+    try:
+        df = QUERIES["pipe_training_corpus"](spark, SF)
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", prev)
+    (ex,) = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning" in ln]
+    ancestors, ind = [], _node_indent(lines[ex])
+    for ln in reversed(lines[:ex]):
+        if _node_indent(ln) < ind:
+            ancestors.append(ln)
+            ind = _node_indent(ln)
+    below = []
+    for ln in lines[ex + 1:]:
+        if _node_indent(ln) <= _node_indent(lines[ex]):
+            break
+        below.append(ln)
+    filters = [ln for ln in ancestors if "Filter (" in ln]
+    assert any("monotonically_increasing_id() >= 0" in f for f in filters), ancestors
+    assert any("regexp_extract_all" in f and ">= 0.5" in f for f in filters), ancestors
+    assert not [ln for ln in below if "Filter (" in ln], below
+    (scan,) = [ln for ln in below if "FileScan" in ln]
+    assert "DataFilters: []" in scan and "PushedFilters: []" in scan, scan

@@ -21,6 +21,9 @@ multi-partition layout a real corpus would have.
     python tools/scale_probe.py --cardscrub [--write] # PII card scrub, digit-soup adversarial
     python tools/scale_probe.py --curatechain [--write] # 7-stage curate chain e2e
     python tools/scale_probe.py --contract [--write] # flipped top-k contract bounds
+    python tools/scale_probe.py --cc                 # CC on five seeded graph shapes
+
+Replicated tables go under $SCALE_PROBE_WORK (default /tmp/scale_probe).
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from vectordb_light_spark.session import get_spark, load_table  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
-WORK = "/tmp/scale_probe"
+WORK = os.environ.get("SCALE_PROBE_WORK", "/tmp/scale_probe")
 SCALES = (1, 4, 16)
 
 
@@ -337,6 +340,7 @@ def _all_markers():
         CHAIN_MARKER,
         CONTRACT_MARKER,
         CCJUMP_MARKER,
+        CC_MARKER,
         LEAKAGE_MARKER,
     )
 
@@ -2416,123 +2420,96 @@ def main_contract(factors: tuple[int, ...] = (1, 4, 16)) -> None:
         _write_section(CONTRACT_MARKER, out)
 
 
+#: The retired --ccjump probe's section (its results stay in SCALING.md).
 CCJUMP_MARKER = "\n## pointer jumping in connected_components: rounds vs wall"
+#: The --cc section, written by hand from runs on two commits.
+CC_MARKER = "\n## connected components on five seeded graph shapes"
 
 
-def main_ccjump() -> None:
-    """VERDICT r9 item 5 prototype measurement: label-jumping
-    (``connected_components(pointer_jumping=True)``) vs plain
-    min-label propagation, on (a) adversarial chain graphs — the
-    O(diameter) worst case — and (b) the REAL registered entry shape
-    (sf0.1 minhash candidate pairs, the dd_duplicate_clusters edge
-    distribution). Reports converged-round counts and best-of-2 warm
-    wall so the r11 wire-or-not decision is a table lookup."""
-    spark = get_spark("scale-probe-ccjump")
+def cc_graphs(seed: int = 0) -> dict:
+    """The --cc probe's seeded edge lists, name -> (src, dst) id arrays.
+    Node ids are a random permutation, so min labels carry no locality.
+    Clique sizes 2-12 are Zipf-weighted (p ~ s^-1.8); the skewed shape
+    adds one 50k-node hot component (a hub star plus random chords);
+    the chain shape is the deep case (random-id paths of 2-20 nodes)."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    sizes = np.arange(2, 13)
+    p = sizes ** -1.8 / (sizes ** -1.8).sum()
+
+    def cliques(ids):
+        k = rng.choice(sizes, size=len(ids), p=p)
+        k = k[: np.searchsorted(np.cumsum(k), len(ids), side="right")]
+        starts = np.concatenate([[0], np.cumsum(k)[:-1]])
+        src, dst = [], []
+        for s in sizes:
+            rows = ids[starts[k == s][:, None] + np.arange(s)]
+            iu = np.triu_indices(s, 1)
+            src.append(rows[:, iu[0]].ravel())
+            dst.append(rows[:, iu[1]].ravel())
+        return np.concatenate(src), np.concatenate(dst)
+
+    graphs = {f"{n // 1000}k cliques": cliques(rng.permutation(n))
+              for n in (20_000, 200_000, 1_000_000)}
+    ids = rng.permutation(200_000)
+    cs, cd = cliques(ids[:150_000])
+    hot = ids[150_000:]
+    chords = rng.choice(hot, size=(2, 40_000))
+    graphs["150k cliques + 50k hot"] = (
+        np.concatenate([cs, np.full(len(hot) - 1, hot[0]), chords[0]]),
+        np.concatenate([cd, hot[1:], chords[1]]),
+    )
+    ids = rng.permutation(100_000)
+    k = rng.integers(2, 21, size=100_000)
+    k = k[: np.searchsorted(np.cumsum(k), len(ids), side="right")]
+    last = np.cumsum(k) - 1  # no edge from a chain's last node onward
+    link = np.ones(last[-1], bool)
+    link[last[:-1]] = False
+    graphs["100k random-id chains"] = (ids[:-1][: last[-1]][link],
+                                       ids[1:][: last[-1]][link])
+    return graphs
+
+
+def main_cc(runs: int = 3) -> None:
+    """Connected components on the five ``cc_graphs`` shapes:
+    ``duplicate_clusters(pointer_jumping="auto")`` after one warm-up,
+    then the median of ``runs`` runs by wall with its driver jobs and
+    shuffle-write bytes (Spark status store, per job group), rounds,
+    and a label hash (sum of pmod(xxhash64(doc_id, cluster_id),
+    2^31-1)), row count and largest cluster to compare commits."""
+    import pandas as pd
+
+    from perfbench.sparkstats import SparkAccounting
+    from vectordb_light_spark.operators.components import duplicate_clusters
+
+    spark = get_spark("scale-probe-cc")
     spark.sparkContext.setLogLevel("ERROR")
-
-    from vectordb_light_spark.operators.components import (
-        connected_components,
-    )
-    from vectordb_light_spark.operators.dedup import (
-        canonical_text,
-        minhash_lsh_candidates,
-    )
-
-    rows_tbl = []
-
-    def run(tag, edges_df, variants=(False, True, "auto"),
-            max_iter=96):
-        for jump in variants:
-            name = {False: "plain", True: "jump", "auto": "auto"}[jump]
-            stats: dict = {}
-            best = float("inf")
-            connected_components(
-                edges_df, max_iter=max_iter,
-                pointer_jumping=jump, stats=stats,
-            ).count()  # warm-up
-            for _ in range(2):
-                t0 = time.time()
-                connected_components(
-                    edges_df, max_iter=max_iter,
-                    pointer_jumping=jump, stats=stats,
-                ).count()
-                best = min(best, time.time() - t0)
-            if stats.get("escalated"):
-                name = "auto(escalated)"
-            rows_tbl.append((tag, name, stats["rounds"],
-                             round(best, 2)))
-            print(f"{tag} {name}: "
-                  f"{stats['rounds']} rounds, {best:.2f}s", flush=True)
-
-    def chain(n):
-        return spark.range(0, n - 1).select(
-            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-        )
-
-    # plain propagation needs O(n) rounds on a chain, so it only runs
-    # on the small one; the big chains are jump-only (plain would be
-    # thousands of ~0.3 s rounds — the pathology this flag insures
-    # against, recorded as a table note instead of burned wall-clock).
-    run("chain-64", chain(64))
-    run("chain-8192", chain(8_192), variants=(True, "auto"))
-    run("chain-65536", chain(65_536), variants=(True,))
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.length(canonical_text("text")) > 0
-    )
-    pairs = minhash_lsh_candidates(
-        docs, num_hashes=16, bands=4, hash_family="poly31",
-        max_bucket=None,
-    ).where(F.col("est_jaccard") >= 0.75).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).localCheckpoint(eager=True)
-    run("sf0.1-minhash-pairs", pairs)
-
-    lines = [
-        CCJUMP_MARKER.strip("\n"),
-        "",
-        "r11 re-measure of the r10 study, plus the new auto variant"
-        " (tools/scale_probe.py --ccjump, best-of-2 warm; chain"
-        " graphs force the O(diameter) worst case, the sf0.1 minhash"
-        " pair graph is the registered entry's real edge shape):",
-        "",
-        "| graph | variant | rounds to fixpoint | wall s |",
-        "|---|---|---|---|",
-    ]
-    for tag, variant, rounds, wall in rows_tbl:
-        lines.append(f"| {tag} | {variant} | {rounds} | {wall} |")
-    lines += [
-        "",
-        "Reading (the measurement OVERTURNED the pre-probe"
-        " assumption): jumping collapses chain-graph rounds from O(D)"
-        " to O(log D) as expected, but the real sf0.1 minhash pair"
-        " graph is NOT diameter-<=3 — plain propagation needs 12"
-        " rounds there, and jumping reaches the same fixed point in 5"
-        " rounds and ~1.7x less wall (2.04 vs 3.42 s this re-measure;"
-        " 2.92 vs 4.74 in r10) despite the"
-        " extra join+checkpoint per round: fewer, slightly-heavier"
-        " rounds beat many short ones because each round's fixed cost"
-        " (checkpoint job + convergence aggregate) dominates at this"
-        " SF and is exactly the jitter-amplification the r9 verdict"
-        " flagged. Wired r10 (slot-free) into pipe_leakage_safe_split"
-        " (its graph IS this minhash pair graph); dd_semantic_dedup's"
-        " embedding-clique graph A/B'd wash-to-slower and stays"
-        " plain; dd_duplicate_clusters flipped to jumping in its r11"
-        " rotation. r11 adds pointer_jumping='auto' (plain rounds,"
-        " escalate to jumping only if the fixed point is still open"
-        " after the prefix): on shallow graphs it IS plain (zero"
-        " extra cost), on deep graphs it pays the prefix then jumps"
-        " — the default for production surfaces whose graph shape is"
-        " corpus-dependent (VectorDB.train_val_test_split), while"
-        " registered entries keep their A/B-measured explicit flags.",
-        "",
-    ]
-    out = "\n".join(lines)
-    if "--write" in sys.argv:
-        _write_section(CCJUMP_MARKER, out)
-    print(out)
-
+    acct = SparkAccounting(spark, "cc")
+    print("| graph | edges | wall s (median) | jobs | shuffle MB | rounds"
+          " | label hash / rows / max cluster |\n|---|---|---|---|---|---|---|")
+    for name, (src, dst) in cc_graphs().items():
+        edges = spark.createDataFrame(
+            pd.DataFrame({"doc_id_a": src, "doc_id_b": dst})
+        ).localCheckpoint(eager=True)
+        calls = []
+        for _ in range(runs + 1):
+            st: dict = {}
+            out, call = acct.call(name, lambda: duplicate_clusters(
+                edges, pointer_jumping="auto", stats=st
+            ).localCheckpoint(eager=True))
+            calls.append((call, st["rounds"]))
+            print(f"{name}: {call.wall_s:.2f}s {call.jobs} jobs"
+                  f" {call.shuffle_write_bytes / 1e6:.1f} MB"
+                  f" {st['rounds']} rounds", flush=True)
+        row = out.agg(
+            F.sum(F.pmod(F.xxhash64("doc_id", "cluster_id"), F.lit(2**31 - 1))),
+            F.count(F.lit(1)), F.max("cluster_size"),
+        ).first()
+        call, rounds = sorted(calls[1:], key=lambda c: c[0].wall_s)[runs // 2]
+        print(f"| {name} | {len(src):,} | {call.wall_s:.2f} | {call.jobs}"
+              f" | {call.shuffle_write_bytes / 1e6:.1f} | {rounds}"
+              f" | {row[0]} / {row[1]:,} / {row[2]} |", flush=True)
 
 
 LEAKAGE_MARKER = "\n## leakage-safe split end-to-end at x1/x4/x16/x64"
@@ -2831,8 +2808,8 @@ if __name__ == "__main__":
         main_curatechain()
     elif "--contract" in sys.argv:
         main_contract((1, 4, 16, 64) if "--x64" in sys.argv else (1, 4, 16))
-    elif "--ccjump" in sys.argv:
-        main_ccjump()
+    elif "--cc" in sys.argv:
+        main_cc()
     elif "--leakage" in sys.argv:
         main_leakage((1, 4, 16, 64) if "--x64" in sys.argv else SCALES)
     else:

@@ -36,6 +36,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["connected_components", "duplicate_clusters"]
 
+#: Plain rounds that ``pointer_jumping="auto"`` runs before it switches
+#: jumping on: clique-shaped near-dup graphs converge within them.
+ESCALATE_AFTER = 3
+
 
 def connected_components(
     edges: DataFrame,
@@ -44,7 +48,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 20,
     pointer_jumping: bool | str = False,
-    escalate_after: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with the
@@ -69,11 +72,11 @@ def connected_components(
     unchanged.
 
     ``pointer_jumping="auto"`` (r11) escalates instead of choosing:
-    the first ``escalate_after`` rounds run plain (clique-shaped
+    the first ``ESCALATE_AFTER`` rounds run plain (clique-shaped
     near-dup graphs converge there at the cheapest per-round cost,
     and the r10 A/B showed jumping is a wash-to-slower on them), and
     only if the fixed point is still open does jumping switch on for
-    the remaining rounds (deep graphs pay ~escalate_after extra plain
+    the remaining rounds (deep graphs pay ~ESCALATE_AFTER extra plain
     rounds, then O(log D)). This is the default for production
     surfaces whose graph shape is corpus-dependent; registered
     entries keep their explicitly A/B-measured flags.
@@ -139,7 +142,7 @@ def connected_components(
     # labels only ever DECREASE, so an unchanged sum ⇔ no label moved
     # ⇔ fixed point. One cheap aggregate over the checkpointed round
     # output instead of a per-round change-flag join.
-    def label_sum(df) -> tuple:
+    def label_sum(df):
         row = df.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
             F.count(F.lit(1)).alias("n"),
@@ -153,9 +156,9 @@ def connected_components(
                 "connected_components label sum overflowed decimal(38,0) "
                 "— exact-sum convergence check is no longer sound"
             )
-        return row["s"], row["n"]
+        return row["s"]
 
-    prev_sum, n_nodes = label_sum(comp)
+    prev_sum = label_sum(comp)
     setup_wall = _time.time() - t_setup
     round_walls: list = []
     escalated = False
@@ -174,94 +177,53 @@ def connected_components(
     # already-converged (hence tiny-delta) labels. Lineage grows only
     # `check_every` plans deep between checkpoints.
     check_every = 2
-    # --- fixed-partition round regime (r13, guide §2.2/§2.4) ---
-    # The r12 profile left CC entries at 43-65 driver jobs: with AQE
-    # on, EVERY exchange of every 2-round block runs as its own
-    # query-stage job, and on post-threshold graphs (thousands of
-    # rows) per-job scheduling, not data, was the wall. Inside the
-    # round loop the row counts are KNOWN (n_nodes from the setup
-    # aggregate — the one thing AQE would rediscover per stage at the
-    # cost of one scheduled job each), so the rounds run with AQE off
-    # and a shuffle-partition count derived from the measured node
-    # count: each 2-round block is then ONE job whose stages pipeline
-    # through the DAG scheduler. sym is additionally hash-partitioned
-    # by its probe key ONCE (and comp by node — which each round's
-    # groupBy re-establishes), so with the fixed partition count the
-    # per-round join needs NO exchange on either side — only the
-    # groupBy shuffles. The r12 "AQE off" negative (13-16 s) kept the
-    # static 32-partition default for every tiny exchange; deriving
-    # the count from n_nodes is what makes the regime scale-adaptive
-    # (~1M labels ≈ 16 MB per task here; sym fanout lands partitions
-    # in the guide's 100 MB band at corpus scale, and a 10^10-node
-    # graph gets ~10^4 partitions).
-    spark = edges.sparkSession
-    nparts = max(1, -(-int(n_nodes or 0) // 1_000_000))
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-    try:
-        # Re-key both carried frames under the fixed layout; the lazy
-        # checkpoints materialize inside the first block's aggregate
-        # job (sym's blocks were already materialized by the setup
-        # aggregate, so this shuffles the edge list exactly once —
-        # replacing the per-round sym exchange the old plan paid).
-        sym = sym.repartition(nparts, "b").localCheckpoint(eager=False)
-        comp = comp.repartition(nparts, "node").localCheckpoint(
-            eager=False
+    for rounds in range(1, max_iter + 1):
+        t_round = _time.time()
+        jump_now = pointer_jumping is True or (
+            pointer_jumping == "auto" and rounds > ESCALATE_AFTER
         )
-        for rounds in range(1, max_iter + 1):
-            t_round = _time.time()
-            jump_now = pointer_jumping is True or (
-                pointer_jumping == "auto" and rounds > escalate_after
+        escalated = escalated or (pointer_jumping == "auto" and jump_now)
+        # propagate: node's label ← min(own, neighbors' labels) — the
+        # current labels UNION into the same min-aggregate, so each
+        # round is ONE join + ONE groupBy instead of join + groupBy +
+        # a second change-flag join
+        nxt = (
+            sym.join(comp.withColumnRenamed("node", "b"), "b")
+            .select(F.col("a").alias("node"), "component")
+            .unionByName(comp)
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
+        )
+        if jump_now:
+            # jump: label ← label's label. Every label IS a node id
+            # present in comp (labels are mins over node ids and every
+            # sym endpoint is a comp node), so the left join's
+            # coalesce is a guard, not a semantic branch.
+            lbl = nxt.select(
+                F.col("node").alias("component"),
+                F.col("component").alias("__cc"),
             )
-            escalated = escalated or (
-                pointer_jumping == "auto" and jump_now
+            nxt = nxt.join(lbl, "component", "left").select(
+                "node",
+                F.coalesce("__cc", "component").alias("component"),
             )
-            # propagate: node's label ← min(own, neighbors' labels) —
-            # the current labels UNION into the same min-aggregate, so
-            # each round is ONE join + ONE groupBy instead of join +
-            # groupBy + a second change-flag join
-            nxt = (
-                sym.join(comp.withColumnRenamed("node", "b"), "b")
-                .select(F.col("a").alias("node"), "component")
-                .unionByName(comp)
-                .groupBy("node")
-                .agg(F.min("component").alias("component"))
-            )
-            if jump_now:
-                # jump: label ← label's label. Every label IS a node
-                # id present in comp (labels are mins over node ids
-                # and every sym endpoint is a comp node), so the left
-                # join's coalesce is a guard, not a semantic branch.
-                lbl = nxt.select(
-                    F.col("node").alias("component"),
-                    F.col("component").alias("__cc"),
-                )
-                nxt = nxt.join(lbl, "component", "left").select(
-                    "node",
-                    F.coalesce("__cc", "component").alias("component"),
-                )
-            comp = nxt
-            if rounds % check_every and rounds < max_iter:
-                round_walls.append(_time.time() - t_round)
-                continue
-            # lazy: label_sum's aggregate action materializes the
-            # block's checkpoint in the same job (1 job per block)
-            comp = comp.localCheckpoint(eager=False)
-            cur_sum, _ = label_sum(comp)
+        comp = nxt
+        if rounds % check_every and rounds < max_iter:
             round_walls.append(_time.time() - t_round)
-            if cur_sum == prev_sum:
-                if stats is not None:
-                    stats["rounds"] = rounds
-                    stats["escalated"] = escalated
-                    stats["round_walls"] = round_walls
-                    stats["setup_wall"] = setup_wall
-                return comp
-            prev_sum = cur_sum
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+            continue
+        # lazy: label_sum's aggregate action materializes the block's
+        # checkpoint in the same job
+        comp = comp.localCheckpoint(eager=False)
+        cur_sum = label_sum(comp)
+        round_walls.append(_time.time() - t_round)
+        if cur_sum == prev_sum:
+            if stats is not None:
+                stats["rounds"] = rounds
+                stats["escalated"] = escalated
+                stats["round_walls"] = round_walls
+                stats["setup_wall"] = setup_wall
+            return comp
+        prev_sum = cur_sum
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )
