@@ -149,6 +149,7 @@ def main() -> None:
                 "text",
                 F.lit(".txt").alias("file_type"),
                 F.col("doc_id"),
+                F.col("doc_id").cast("string").alias("file_name"),
             )
         )
         # Same denoising as the queries (r3 verdict: the one

@@ -190,9 +190,10 @@ def test_create_database_layout_and_meta(built_db, spark):
     assert {"id", "doc_hash", "chunk_index", "page_number", "text", "vector"} <= set(
         vec.columns
     )
-    # ids are deterministic: xxhash64(doc_hash, chunk_index)
+    # ids are deterministic: xxhash64(doc_hash, file_name, chunk_index)
     recomputed = vec.where(
-        F.xxhash64(F.col("doc_hash"), F.col("chunk_index")) != F.col("id")
+        F.xxhash64(F.col("doc_hash"), F.col("file_name"), F.col("chunk_index"))
+        != F.col("id")
     ).count()
     assert recomputed == 0
     # write-path invariant: all vectors unit-norm
@@ -210,6 +211,92 @@ def test_exists_guard(built_db, spark):
     )
     with pytest.raises(FileExistsError):
         create_database(spark, docs, root, "testdb")
+
+
+def test_identical_files_get_unique_ids_and_their_own_numbering(spark, tmp_path):
+    """Two identical .txt files and two identical .pdf files share a
+    doc_hash. Every chunk still gets its own id, and each file numbers
+    its chunks 0..n-1 in offset order."""
+    import re
+
+    from test_chunker import _ref_fixed_split
+    from test_pdf_text import make_pdf
+
+    from vectordb_light_spark.functions.text import normalize_text_py
+
+    words = [f"w{i:03d}" for i in range(160)]
+    body = " ".join(words)
+    pdf = make_pdf(
+        [f"BT ({' '.join(ws)}) Tj ET".encode() for ws in (words[:80], words[80:])]
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    for name in ("a.txt", "b.txt"):
+        (src / name).write_text(body)
+    for name in ("c.pdf", "d.pdf"):
+        (src / name).write_bytes(pdf)
+    docs, _ = load_directory(spark, str(src))
+    cfg = IngestConfig(
+        chunk_size=100,
+        chunk_overlap=20,
+        embedder_spec={"encoder": "hashing", "dim": 8, "seed": 0},
+        target_files=1,
+    )
+    create_database(spark, docs, str(tmp_path / "root"), "dups", cfg)
+    rows = (
+        spark.read.parquet(str(tmp_path / "root" / "dups" / "vectors"))
+        .select("id", "file_name", "chunk_index", "text")
+        .collect()
+    )
+    assert len({r["id"] for r in rows}) == len(rows)
+
+    chunks: dict[str, list] = {}
+    for r in sorted(rows, key=lambda r: r["chunk_index"]):
+        chunks.setdefault(r["file_name"], []).append(r)
+    assert set(chunks) == {"a.txt", "b.txt", "c.pdf", "d.pdf"}
+    for name, rs in chunks.items():
+        assert [r["chunk_index"] for r in rs] == list(range(len(rs))), name
+        # offset order: the first whole word of each chunk only grows
+        firsts = [int(re.search(r"w(\d{3})", r["text"]).group(1)) for r in rs]
+        assert firsts == sorted(set(firsts)), name
+    texts = {name: [r["text"] for r in rs] for name, rs in chunks.items()}
+    want = [normalize_text_py(c, True) for c in _ref_fixed_split(body, 100, 20)]
+    assert texts["a.txt"] == texts["b.txt"] == want
+    assert texts["c.pdf"] == texts["d.pdf"]
+
+
+def test_write_path_plan_is_map_only_and_runs_no_job(spark, doc_dir):
+    """Chunk numbering is a posexplode: the vectors plan has no Window
+    and no hash exchange before the embed stage, normalize runs once,
+    and building the frame (embed_documents' partition-count probe
+    included) launches no Spark job."""
+    from vectordb_light_spark.operators.ingest import build_chunks, build_vectors
+
+    docs, _ = load_directory(spark, doc_dir)
+    cfg = IngestConfig(chunk_size=200, chunk_overlap=50)
+    vectors, n_jobs = _jobs_during(
+        spark, "wp-build", lambda: build_vectors(build_chunks(docs, cfg), cfg)
+    )
+    assert n_jobs == 0
+    plan = vectors._jdf.queryExecution().executedPlan().toString()
+    below_embed = plan[plan.index("MapInPandas"):]
+    assert "Window" not in plan
+    assert "hashpartitioning" not in below_embed
+    arrow = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert sum("normalize(" in ln for ln in arrow) == 1, arrow
+
+
+def test_create_database_job_budget(spark, doc_dir, tmp_path):
+    """The whole build (vectors write, documents write, row count)
+    stays within 8 Spark jobs."""
+    docs, _ = load_directory(spark, doc_dir)
+    cfg = IngestConfig(chunk_size=200, chunk_overlap=50, target_files=2)
+    _, n_jobs = _jobs_during(
+        spark,
+        "wp-create",
+        lambda: create_database(spark, docs, str(tmp_path), "budget", cfg),
+    )
+    assert n_jobs <= 8
 
 
 def test_search_end_to_end(built_db, spark):
@@ -395,26 +482,30 @@ def test_compact_vectors_reduces_files_keeps_rows(spark, built_db, tmp_path):
     assert stats["num_vectors"] == meta["num_vectors"]
 
 
+def _jobs_during(spark, label, fn):
+    """Run ``fn()`` under job group ``label``; return (result, number of
+    Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, "job-count assertion")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(label))
+
+
 def test_facade_dedup_runs_zero_probe_jobs(built_db, spark):
     """r6 verdict item 6: tier dispatch over a built DB must read
     n_rows/dim from _meta.json instead of running count()/first()
     probe jobs — asserted by job-group job count at plan time."""
     root, _, _ = built_db
     db = VectorDB.open(spark, root, "testdb", cache=False)
-    sc = spark.sparkContext
-
-    def jobs_during(label, fn):
-        sc.setJobGroup(label, "probe-count assertion")
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(label))
 
     # LSH tier is pure plan construction: with the meta dim hint it
     # must schedule ZERO jobs before the first action
-    df, n_jobs = jobs_during(
-        "zp-lsh", lambda: db.near_duplicates(threshold=0.5, tier="lsh")
+    df, n_jobs = _jobs_during(
+        spark, "zp-lsh", lambda: db.near_duplicates(threshold=0.5, tier="lsh")
     )
     assert n_jobs == 0
     df.collect()  # and the hinted plan executes
@@ -424,11 +515,11 @@ def test_facade_dedup_runs_zero_probe_jobs(built_db, spark):
     # (count + first) relative to the unhinted operator call
     from vectordb_light_spark.operators.similarity import cosine_pairs
 
-    hinted, n_hinted = jobs_during(
-        "zp-auto", lambda: db.near_duplicates(threshold=0.5)
+    hinted, n_hinted = _jobs_during(
+        spark, "zp-auto", lambda: db.near_duplicates(threshold=0.5)
     )
-    unhinted, n_unhinted = jobs_during(
-        "zp-raw",
+    unhinted, n_unhinted = _jobs_during(
+        spark, "zp-raw",
         lambda: cosine_pairs(
             db.vectors, id_col="id", vec_col="vector", threshold=0.5
         ),

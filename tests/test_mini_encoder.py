@@ -22,6 +22,8 @@ import pytest
 
 from vectordb_light_spark.functions.embedding import (
     MiniTransformerEmbedder,
+    _gelu,
+    _softmax,
     embed_documents,
     embed_query,
     model_encode_batch_size,
@@ -92,6 +94,32 @@ def test_dtype_policy_float16_compute_float32_storage():
         MiniTransformerEmbedder(32, dtype="bfloat16")
     with pytest.raises(ValueError):
         MiniTransformerEmbedder(33, n_heads=4)
+
+
+@pytest.mark.parametrize("dtype", [np.float16, np.float32, np.float64])
+def test_gelu_and_softmax_keep_the_input_dtype(dtype):
+    """The in-place kernels compute in the input dtype (float16 compute
+    stays float16), leave the input alone, and match the closed forms
+    evaluated in float64 to within a few units of the dtype's eps."""
+    x = np.random.default_rng(0).normal(0.0, 3.0, (4, 8, 16)).astype(dtype)
+    before = x.copy()
+    x64 = x.astype(np.float64)
+    tol = 16 * np.finfo(dtype).eps
+
+    g = _gelu(x)
+    want = 0.5 * x64 * (1.0 + np.tanh(np.sqrt(2 / np.pi) * (x64 + 0.044715 * x64**3)))
+    assert g.dtype == dtype
+    np.testing.assert_allclose(g, want, rtol=tol, atol=tol)
+    np.testing.assert_array_equal(x, before)
+
+    x[..., -1] = -1e4  # a masked key: its weight underflows to 0
+    before, x64 = x.copy(), x.astype(np.float64)
+    p = _softmax(x)
+    e = np.exp(x64 - x64.max(axis=-1, keepdims=True))
+    assert p.dtype == dtype
+    np.testing.assert_allclose(p, e / e.sum(axis=-1, keepdims=True), rtol=tol, atol=tol)
+    assert (p[..., -1] == 0).all()
+    np.testing.assert_array_equal(x, before)
 
 
 def test_e4_batch_table_matches_reference_semantics():

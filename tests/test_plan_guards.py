@@ -354,3 +354,22 @@ def test_training_corpus_gate_stays_above_the_rebalance_exchange(spark):
     assert not [ln for ln in below if "Filter (" in ln], below
     (scan,) = [ln for ln in below if "FileScan" in ln]
     assert "DataFilters: []" in scan and "PushedFilters: []" in scan, scan
+
+
+def test_pdf_page_split_runs_once_per_document(spark):
+    """``split_pdf_pages`` explodes with posexplode_outer and a not-null
+    filter: a plain posexplode makes Catalyst infer a
+    ``size(__chunks) > 0`` filter below the generator, which plans the
+    page_split UDF a second time."""
+    from pyspark.sql import functions as F
+
+    from vectordb_light_spark.operators.chunker import split_pdf_pages
+    from vectordb_light_spark.session import load_table
+
+    docs = load_table(spark, SF, "documents").select(
+        "doc_id", F.concat(F.lit("[[page1]]"), "text").alias("text")
+    )
+    out = split_pdf_pages(docs, chunk_size=300, chunk_overlap=100)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    arrow = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(arrow) == 1 and "page_split(" in arrow[0], arrow

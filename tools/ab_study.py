@@ -114,6 +114,7 @@ def facade_split_jump_vs_plain():
                     "text",
                     F.lit(".txt").alias("file_type"),
                     F.col("doc_id"),
+                    F.col("doc_id").cast("string").alias("file_name"),
                 )
             )
             root = tempfile.mkdtemp(prefix="ab-split-")

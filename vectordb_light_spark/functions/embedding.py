@@ -108,14 +108,28 @@ def _layer_norm(x: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 
 def _softmax(x: np.ndarray) -> np.ndarray:
-    x = x - x.max(axis=-1, keepdims=True)
-    e = np.exp(x)
-    return e / e.sum(axis=-1, keepdims=True)
+    """Softmax over the last axis in ``x``'s dtype; one buffer, the
+    max-shift, exp and divide all write into it."""
+    e = x - x.max(axis=-1, keepdims=True)
+    np.exp(e, out=e)
+    return np.divide(e, e.sum(axis=-1, keepdims=True), out=e)
 
 
 def _gelu(x: np.ndarray) -> np.ndarray:
-    # tanh approximation (GPT-2/BERT convention)
-    return 0.5 * x * (1.0 + np.tanh(0.7978845608028654 * (x + 0.044715 * x**3)))
+    """tanh-approximate GELU (Hendrycks & Gimpel 2016, the GPT-2/BERT
+    convention) in ``x``'s dtype; one buffer, every step in place.
+    The cube is ``x*x*x``: numpy has no fast path for a float32
+    ``x**3`` (~80x slower on an encoder-sized tensor)."""
+    t = x * x
+    t *= x
+    t *= 0.044715
+    t += x
+    t *= 0.7978845608028654
+    np.tanh(t, out=t)
+    t += 1.0
+    t *= x
+    t *= 0.5
+    return t
 
 
 class MiniTransformerEmbedder:
@@ -260,7 +274,9 @@ class MiniTransformerEmbedder:
             q = q.reshape(sh).transpose(0, 2, 1, 3)
             k = k.reshape(sh).transpose(0, 2, 1, 3)
             v = v.reshape(sh).transpose(0, 2, 1, 3)
-            scores = (q @ k.swapaxes(-1, -2)) / np.sqrt(dt(h)) + attn_bias
+            scores = q @ k.swapaxes(-1, -2)
+            scores /= np.sqrt(dt(h))
+            scores += attn_bias
             ctx = _softmax(scores) @ v  # [B, H, L, h]
             ctx = ctx.transpose(0, 2, 1, 3).reshape(len(ids), L, self.dim)
             x = x + ctx @ w[f"attn_out_{i}"]

@@ -56,11 +56,11 @@ def load_checkpoint(path: str) -> dict[str, np.ndarray]:
 
 
 def _gelu(x):
-    return 0.5 * x * (1.0 + np.tanh(0.7978845608028654 * (x + 0.044715 * x**3)))
+    return 0.5 * x * (1.0 + np.tanh(0.7978845608028654 * (x + 0.044715 * x * x * x)))
 
 
 def _gelu_grad(x):
-    u = 0.7978845608028654 * (x + 0.044715 * x**3)
+    u = 0.7978845608028654 * (x + 0.044715 * x * x * x)
     t = np.tanh(u)
     return 0.5 * (1.0 + t) + 0.5 * x * (1.0 - t * t) * 0.7978845608028654 * (
         1.0 + 3 * 0.044715 * x * x

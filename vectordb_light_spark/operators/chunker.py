@@ -10,9 +10,10 @@ T3 FixedSizeTextSplitter (reference document_processor.py:368-408):
     emptiness check; empty pieces dropped silently (:400-403)
   - parent metadata copied onto every chunk
 
-Implemented with pure Catalyst builtins: posexplode(sequence(...)) +
-substr + trim. No Python in the loop → whole-stage codegen, linear
-scan, embarrassingly parallel across documents at any scale. The
+Implemented with pure Catalyst builtins:
+posexplode(filter(transform(sequence(...)))) + substr + strip. No
+Python in the loop → whole-stage codegen, linear scan, embarrassingly
+parallel across documents at any scale. The
 explode multiplies rows ~len/step ×, which is exactly the data
 amplification the pipeline needs — no shuffle until a downstream agg.
 
@@ -27,7 +28,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -68,31 +69,42 @@ def split_fixed_size(
 ) -> DataFrame:
     """Explode each row into overlapping fixed-size character chunks.
 
-    Returns the input columns (text_col dropped) plus ``out_col`` (the
-    stripped chunk), ``chunk_start`` (offset into the stripped text)
+    Returns the input columns (text_col dropped) plus ``chunk_start``
+    (offset into the stripped text), ``out_col`` (the stripped chunk)
     and ``index_col`` (0-based among this row's kept chunks, ordered
-    by offset — computed with a per-document window, cheap because a
-    document's chunks are narrow).
+    by offset).
+
+    Each row's kept pieces are built as one array — a transform over
+    the window starts, then a filter dropping the empty ones — and
+    numbered by ``posexplode``, so the plan is map-only: no window, no
+    exchange. ``partition_cols`` is accepted and ignored; numbering is
+    per row.
     """
     step = chunk_step(chunk_size, chunk_overlap)
-    part = partition_cols or [c for c in df.columns if c != text_col]
+    keep = [c for c in df.columns if c != text_col]
 
-    stripped = pystrip(F.col(text_col))
-    base = df.withColumn("__text", stripped).where(F.length("__text") > 0)
-    starts = F.sequence(
-        F.lit(0), F.greatest(F.length("__text") - 1, F.lit(0)), F.lit(step)
+    # the stripped text stages once: the piece lambda reads the column
+    # instead of re-running the strip regex. No emptiness filter: an
+    # empty or null text yields no kept piece, so posexplode emits
+    # nothing for it.
+    base = df.select(*keep, pystrip(F.col(text_col)).alias("__text"))
+    text = F.col("__text")
+    starts = F.sequence(F.lit(0), F.greatest(F.length(text) - 1, F.lit(0)), F.lit(step))
+    # the array goes to posexplode as an expression, not a staged
+    # column: on a column, Catalyst infers a size() > 0 filter below
+    # the generator and would build every row's pieces twice
+    pieces = F.filter(
+        F.transform(
+            starts,
+            lambda s: F.struct(
+                s.alias("chunk_start"),
+                pystrip(text.substr(s + 1, F.lit(chunk_size))).alias(out_col),
+            ),
+        ),
+        lambda p: p[out_col] != "",
     )
-    piece = pystrip(F.col("__text").substr(F.col("chunk_start") + 1, F.lit(chunk_size)))
-
-    exploded = (
-        base.select("*", F.explode(starts).alias("chunk_start"))
-        .withColumn(out_col, piece)
-        .where(F.col(out_col) != "")
-    )
-    w = Window.partitionBy(*part).orderBy("chunk_start")
-    return (
-        exploded.withColumn(index_col, F.row_number().over(w) - 1)
-        .drop("__text", text_col)
+    return base.select(*keep, F.posexplode(pieces).alias(index_col, "__p")).select(
+        *keep, "__p.chunk_start", F.col("__p")[out_col].alias(out_col), index_col
     )
 
 
@@ -166,12 +178,18 @@ def split_pdf_pages(
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
     """Apply the page-aware splitter and explode to one row per chunk
-    with ``chunk``, ``page_number`` and ``chunk_index`` columns."""
+    with ``chunk``, ``page_number`` and ``chunk_index`` columns.
+
+    The explode is ``posexplode_outer`` plus a not-null filter: a plain
+    ``posexplode`` of the UDF column makes Catalyst infer a
+    ``size(__chunks) > 0`` filter and push it below the generator,
+    which plans a second run of the splitter UDF."""
     part = partition_cols or [c for c in df.columns if c != text_col]
     udf = make_page_split_udf(chunk_size, chunk_overlap)
     exploded = (
         df.withColumn("__chunks", udf(F.col(text_col)))
-        .select("*", F.posexplode("__chunks").alias("chunk_index", "__c"))
+        .select("*", F.posexplode_outer("__chunks").alias("chunk_index", "__c"))
+        .where(F.col("__c").isNotNull())
         .select(
             *part,
             "chunk_index",

@@ -10,10 +10,11 @@ The reference's 6-stage subprocess pipeline (vector_db_creator.py:
 
 Sink-semantics parity:
   K1  batched TileDB write            → partitioned parquet write
-  K2  random uint64 ids               → xxhash64(doc_hash, chunk_index)
-      (deterministic by design — SURVEY §7 hard-parts list; the
-      reference's random ids at vector_db_creator.py:288-291 are a
-      testability bug we do not reproduce)
+  K2  random uint64 ids               → xxhash64(doc_hash, file_name,
+      chunk_index) (deterministic by design — SURVEY §7 hard-parts
+      list; the reference's random ids at vector_db_creator.py:288-291
+      are a testability bug we do not reproduce). file_name keeps two
+      files with the same content apart.
   K4  FLAT index ingest               → no-op: FLAT ≡ full scan of the
       vectors table (index = the L2-normalized vector column)
   K5  index metadata sidecar          → _meta.json with the same keys
@@ -80,12 +81,12 @@ class IngestConfig:
 def build_chunks(documents: DataFrame, cfg: IngestConfig) -> DataFrame:
     """T3/T4 + T5: split every document into normalized chunks.
 
-    ``documents`` needs (hash, text, file_type); all other columns
-    pass through (the reference copies parent metadata onto every
-    chunk, document_processor.py:404-406). PDFs (by ``file_type``) go
-    through the page-aware splitter; everything else through the
-    fixed-size builtin splitter. Output adds chunk_index, page_number
-    (null for non-PDF), chunk text in ``text``.
+    ``documents`` needs (hash, file_name, text, file_type); all other
+    columns pass through (the reference copies parent metadata onto
+    every chunk, document_processor.py:404-406). PDFs (by
+    ``file_type``) go through the page-aware splitter; everything else
+    through the fixed-size builtin splitter. Output adds chunk_index,
+    page_number (null for non-PDF), chunk text in ``text``.
     """
     meta_cols = [c for c in documents.columns if c != "text"]
     is_pdf = F.col("file_type") == ".pdf"
@@ -94,7 +95,6 @@ def build_chunks(documents: DataFrame, cfg: IngestConfig) -> DataFrame:
         documents.where(~is_pdf),
         chunk_size=cfg.chunk_size,
         chunk_overlap=cfg.chunk_overlap,
-        partition_cols=["hash"],
     ).select(*meta_cols, "chunk_index", F.col("chunk"), F.lit(None).cast("int").alias("page_number"))
 
     pdf = split_pdf_pages(
@@ -124,13 +124,19 @@ def build_chunks(documents: DataFrame, cfg: IngestConfig) -> DataFrame:
 def build_vectors(chunks: DataFrame, cfg: IngestConfig) -> DataFrame:
     """E-stage + K2: embed chunks, assign deterministic 64-bit ids.
 
-    id = xxhash64(doc_hash, chunk_index) — stable across runs and
-    executors; collision odds at 100 TB (~2^40 chunks) stay below the
-    reference's own random-uint64 scheme.
+    id = xxhash64(doc_hash, file_name, chunk_index) — stable across
+    runs and executors, and distinct for two files with identical
+    content (chunk_index numbers each file's chunks from 0, so
+    (doc_hash, chunk_index) alone would collide); collision odds at
+    100 TB (~2^40 chunks) stay below the reference's own random-uint64
+    scheme. The file NAME, not the full path: the same corpus gets the
+    same ids wherever it is mounted. The loaders scan one flat
+    directory, so names are unique within a load; identical content
+    under one name in two directories of a glob load would share ids.
     """
     embedded = embed_documents(chunks, cfg.embedder_spec, text_col="text")
     return embedded.withColumn(
-        "id", F.xxhash64(F.col("hash"), F.col("chunk_index"))
+        "id", F.xxhash64(F.col("hash"), F.col("file_name"), F.col("chunk_index"))
     ).withColumnRenamed("hash", "doc_hash")
 
 

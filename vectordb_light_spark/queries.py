@@ -501,15 +501,14 @@ def vq_rag_prompt(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipe_chunk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 fixed-size overlapping chunker (size=300, overlap=100) as
-    pure builtins: explode(sequence) + substr + strip. Row-parallel,
-    no shuffle except the per-doc chunk_index window (reference
-    document_processor.py:368-408)."""
+    pure builtins: posexplode(filter(transform(sequence))) + substr +
+    strip. Row-parallel and map-only: chunk_index comes from the
+    posexplode position, so no window and no shuffle before the
+    output sort (reference document_processor.py:368-408)."""
     from vectordb_light_spark.operators.chunker import split_fixed_size
 
     docs = load_docs(spark, sf_dir, "doc_id", "text")
-    out = split_fixed_size(
-        docs, chunk_size=300, chunk_overlap=100, partition_cols=["doc_id"]
-    )
+    out = split_fixed_size(docs, chunk_size=300, chunk_overlap=100)
     return out.select("doc_id", "chunk_start", "chunk", "chunk_index").orderBy(
         "doc_id", "chunk_index"
     )
@@ -886,9 +885,7 @@ def pipe_chunk_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectordb_light_spark.operators.chunker import split_fixed_size
 
     docs = load_docs(spark, sf_dir, "doc_id", "text")
-    chunks = split_fixed_size(
-        docs, chunk_size=300, chunk_overlap=100, partition_cols=["doc_id"]
-    )
+    chunks = split_fixed_size(docs, chunk_size=300, chunk_overlap=100)
     normalize = make_normalize_udf(preserve_whitespace=True)
     # The UDF appears in exactly ONE expression: a Filter and a Project
     # each referencing the UDF column would get their own
