@@ -191,40 +191,3 @@ def test_make_embedder_weight_tag_roundtrip_and_mismatch_guard():
     bad = dict(enc.spec, layers=1)
     with pytest.raises(ValueError, match="mismatched weights"):
         make_embedder(bad)
-
-
-_CKPT128 = et.checkpoint_path(128, 2, 4, 128)
-
-
-@pytest.mark.skipif(
-    not os.path.isfile(_CKPT128), reason="d128 checkpoint not trained yet"
-)
-def test_d128_checkpoint_beats_seeded_and_reports_vs_d64():
-    """r4 capacity notch: the shipped d128/2-layer checkpoint (4x the
-    d64 default's parameter count via width — the 4-layer variant did
-    not converge within a round budget, see tools/train_mini_encoder.py)
-    must beat the seeded init by a wide margin on held-out span
-    retrieval (the same contract as d64); its delta vs the d64
-    checkpoint is reported in ANN_EVAL.md rather than asserted."""
-    import pyarrow.parquet as pq
-
-    enc = MiniTransformerEmbedder(128, n_layers=2, n_heads=4, max_seq=128)
-    assert enc.weights_tag == "pretrained-v1"
-    seeded = MiniTransformerEmbedder(
-        128, n_layers=2, n_heads=4, max_seq=128, weights_mode="seeded"
-    )
-    texts = (
-        pq.read_table(
-            "/root/testdata/sf0.01/documents.parquet", columns=["text"]
-        )
-        .column("text")
-        .to_pylist()
-    )
-    trained = et.eval_retrieval(
-        enc._w, texts, n_layers=2, n_heads=4, max_seq=128, seed=77
-    )
-    base = et.eval_retrieval(
-        seeded._w, texts, n_layers=2, n_heads=4, max_seq=128, seed=77
-    )
-    assert trained["mrr"] > base["mrr"] * 2
-    assert trained["top1"] >= 0.3

@@ -162,32 +162,57 @@ def test_exact_scan_scores_each_row_once_in_the_jvm(spark):
         assert _python_stages_and_sim_count(df) == ([], 1)
 
 
-@pytest.fixture(scope="module")
-def small_db(spark, tmp_path_factory):
+def test_topk_cosine_keeps_a_cached_input_cached(spark):
+    """The search reads a cached input from memory, leaves it cached
+    for the next consumer (dropping a temp view through spark.catalog
+    uncaches the view's plan) and leaves no view behind."""
+    vecs = _vecs(spark).cache()
+    vecs.count()
+    try:
+        for _ in range(2):
+            df = topk_cosine(vecs, [1.0, 0.0, 0.0], SearchParams(k=3, threshold=0.0))
+            assert "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
+        assert [r["id"] for r in df.collect()] == [1, 3, 5]
+    finally:
+        vecs.unpersist()
+    assert not [t for t in spark.catalog.listTables() if t.name.startswith("topk_")]
+
+
+def _build_db(spark, tmp_path, name, texts, *, cache=False):
     from vectordb_light_spark.engine import VectorDB
     from vectordb_light_spark.operators.ingest import IngestConfig, create_database
     from vectordb_light_spark.sources.extract import load_directory
 
-    src = tmp_path_factory.mktemp("scan_docs")
-    for i in range(6):
-        (src / f"d{i}.txt").write_text(f"subject{i % 3} body words " * 30)
-    db_root = str(tmp_path_factory.mktemp("scan_dbs"))
+    src = tmp_path / f"{name}_docs"
+    src.mkdir()
+    for i, body in enumerate(texts):
+        (src / f"d{i}.txt").write_text(body)
+    db_root = tmp_path / f"{name}_dbs"
+    db_root.mkdir()
     docs, _ = load_directory(spark, str(src))
     create_database(
-        spark, docs, db_root, "scand",
+        spark, docs, str(db_root), name,
         IngestConfig(
             chunk_size=150, chunk_overlap=30, target_files=1,
             embedder_spec={"encoder": "hashing", "dim": 16, "seed": 3},
         ),
     )
-    db = VectorDB.open(spark, db_root, "scand", cache=False)
+    return VectorDB.open(spark, str(db_root), name, cache=cache)
+
+
+@pytest.fixture(scope="module")
+def small_db(spark, tmp_path_factory):
+    db = _build_db(
+        spark, tmp_path_factory.mktemp("scan"), "scand",
+        [f"subject{i % 3} body words " * 30 for i in range(6)],
+    )
     yield db
     db.close()
 
 
 def test_vectordb_search_plan_scores_once_without_python(small_db):
-    """The facade's observe() stats read the same similarity column
-    as the top-k: one HOF evaluation, no Python stage."""
+    """The facade's one SQL text scores each row once: one HOF
+    evaluation, no Python stage; the stats are readable after it."""
     for params in (
         SearchParams(),
         SearchParams(k=3, threshold=0.0, search_term="body", document_type="x"),
@@ -204,6 +229,203 @@ def test_vectordb_search_rejects_non_finite_query_vector(small_db):
         small_db.search(query_vector=[float("nan")] + [0.0] * (dim - 1))
     with pytest.raises(ValueError, match="at index 2"):
         small_db.search(query_vector=[0.5, 0.5, float("-inf")] + [0.0] * (dim - 3))
+
+
+def _numpy_search(rows, q, params, *, normalized=True):
+    """Reference search over collected rows: clip(cos) top-k by
+    (score desc, id asc), ranked, THEN threshold + post-filters."""
+    import numpy as np
+
+    mat = np.array([r["vector"] for r in rows], dtype=np.float64)
+    qv = np.asarray(q, dtype=np.float64)
+    if not normalized:
+        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        qv = qv / max(np.linalg.norm(qv), 1e-12)
+    sims = np.clip(mat @ qv, 0.0, 1.0)
+    order = sorted(range(len(rows)), key=lambda i: (-sims[i], rows[i]["id"]))
+    out = []
+    for rank, i in enumerate(order[: params.k], start=1):
+        r = rows[i]
+        if sims[i] < params.threshold:
+            continue
+        if params.search_term and params.search_term.lower() not in r["text"].lower():
+            continue
+        if params.document_type and r["document_type"] != params.document_type:
+            continue
+        out.append((r["id"], rank))
+    return out, sims
+
+
+def _read_stats(db, timeout_s=60.0):
+    """``last_search_stats`` read on a thread, failing (not hanging)
+    if the read does not return within ``timeout_s``."""
+    import threading
+
+    got = {}
+    t = threading.Thread(target=lambda: got.update(s=db.last_search_stats), daemon=True)
+    t.start()
+    t.join(timeout_s)
+    assert not t.is_alive(), "last_search_stats blocked"
+    return got["s"]
+
+
+@pytest.mark.parametrize("case", ["built_never_run", "earlier_search_collected"])
+def test_last_search_stats_read_does_not_wait_for_an_action(small_db, case):
+    """Stats describe the latest BUILT search, whether or not it ran,
+    and whichever earlier search was collected since: computed on
+    read, checked against numpy over the whole store."""
+    rows = small_db.vectors.select("id", "vector").collect()
+    p_a, p_b = SearchParams(threshold=0.5), SearchParams(k=2, threshold=0.7)
+    if case == "built_never_run":
+        text, params = "subject1 body", p_a
+        small_db.search(text, params=params)
+    else:
+        a = small_db.search("subject1 body", params=p_a)
+        text, params = "subject2 words", p_b
+        small_db.search(text, params=params)
+        a.collect()
+
+    stats = _read_stats(small_db)
+    _, sims = _numpy_search(rows, small_db.embed(text), params)
+    assert stats["n_scanned"] == len(rows)
+    assert abs(stats["min_sim"] - sims.min()) < 1e-12
+    assert abs(stats["max_sim"] - sims.max()) < 1e-12
+    assert abs(stats["avg_sim"] - sims.mean()) < 1e-12
+    assert stats["n_passing_threshold"] == int((sims >= params.threshold).sum())
+
+
+def test_search_params_reject_unrenderable_values():
+    for bad in (float("nan"), float("inf"), -float("inf"), "0.4", None, True):
+        with pytest.raises(ValueError, match="threshold"):
+            SearchParams(threshold=bad)
+    for bad in (-1, 2.0, "6", None, True):
+        with pytest.raises(ValueError, match="k must"):
+            SearchParams(k=bad)
+    assert SearchParams(k=0, threshold=-2).k == 0
+
+
+#: Values that would break, or change the meaning of, SQL text they
+#: were pasted into: quotes, escapes, comments, LIKE wildcards,
+#: parameter markers and str.format fields.
+_HOSTILE = ("'", "\\", "--", "%", "_", ":x", "{}", "o'{0}--%_")
+
+
+def test_post_filter_values_are_bound_not_pasted(spark):
+    rows = [
+        (i, [1.0, i / 10.0, 0.0], text, dtype)
+        for i, (text, dtype) in enumerate(
+            [
+                ("it's here", "'"),
+                ("back\\slash", "\\"),
+                ("a -- comment", "--"),
+                ("100% sure", "%"),
+                ("snake_case", "_"),
+                ("label :x", ":x"),
+                ("json {} body", "{}"),
+                ("O'{0}--%_ all", "o'{0}--%_"),
+                ("plain words", "document"),
+                ("xy", "x"),
+            ],
+            start=1,
+        )
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, vector array<double>, text string, document_type string"
+    )
+    collected = df.collect()
+    q = [1.0, 0.3, 0.0]
+    for value in _HOSTILE:
+        for params in (
+            SearchParams(k=10, threshold=0.0, search_term=value),
+            SearchParams(k=10, threshold=0.0, document_type=value),
+            SearchParams(k=6, threshold=0.0, search_term=value, document_type=value),
+        ):
+            want, _ = _numpy_search(collected, q, params, normalized=False)
+            got = [(r["id"], r["rank"]) for r in topk_cosine(df, q, params).collect()]
+            assert got == want, (value, params)
+            # every value names at least one row by text and by type
+            assert want or params.k == 6, (value, params)
+
+
+def test_vectordb_post_filter_values_are_bound(spark, tmp_path):
+    db = _build_db(
+        spark, tmp_path, "hostile",
+        [f"row{i} it's a back\\slash -- 100% snake_case :x {{}} O'{{0}}--%_ " * 8
+         for i in range(3)] + ["plain words only " * 20],
+    )
+    rows = db.vectors.select("id", "vector", "text", "document_type").collect()
+    text = "row1 snake_case"
+    q = db.embed(text)
+    for value in _HOSTILE + ("document",):
+        for params in (
+            SearchParams(k=20, threshold=0.0, search_term=value),
+            SearchParams(k=20, threshold=0.0, document_type=value),
+        ):
+            want, _ = _numpy_search(rows, q, params)
+            got = [(r["id"], r["rank"]) for r in db.search(text, params=params).collect()]
+            assert got == want, (value, params)
+    db.close()
+
+
+def test_vectordb_search_build_round_trip_cap(spark, small_db):
+    """Building a facade search is one ``spark.sql`` call: a handful of
+    py4j round trips, plain and with both post-filters."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return send(*a, **kw)
+
+    q = small_db.embed("subject1 body")
+    for params in (
+        SearchParams(),
+        SearchParams(k=3, threshold=0.0, search_term="body", document_type="document"),
+    ):
+        small_db.search(query_vector=q, params=params)  # warm
+        calls.clear()
+        client.send_command = counting
+        try:
+            small_db.search(query_vector=q, params=params)
+        finally:
+            client.send_command = send
+        assert 0 < len(calls) <= 25, (params, len(calls))
+
+
+def test_vectordb_search_view_lifecycle(spark, small_db, tmp_path):
+    """Each open database searches its own temp view: two databases on
+    one session keep their own results, a cached store is what the
+    search scans, an index swap re-registers the view, close drops it."""
+    db = _build_db(
+        spark, tmp_path, "lifecycle",
+        [f"other{i} corpus entirely " * 25 for i in range(3)], cache=True,
+    )
+    text = "subject1 body"
+    params = SearchParams(k=4, threshold=0.0)
+    for each in (small_db, db):
+        rows = each.vectors.select("id", "vector").collect()
+        want, _ = _numpy_search(rows, each.embed(text), params)
+        got = [(r["id"], r["rank"]) for r in each.search(text, params=params).collect()]
+        assert got == want
+    assert db._view != small_db._view
+
+    plan = db.search(text)._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan
+
+    exact = [(r["id"], r["rank"]) for r in db.search(text, params=params).collect()]
+    db.build_srp_index(n_planes=8, seed=1)
+    assert db.vectors.is_cached and "srp_sig" in db.vectors.columns
+    full = db.search(text, params=params, ann_radius=8)
+    assert [(r["id"], r["rank"]) for r in full.collect()] == exact
+    assert "srp_sig" not in full.columns
+    assert db.last_search_stats["n_scanned"] == db.meta["num_vectors"]
+
+    views = {t.name for t in spark.catalog.listTables()}
+    assert db._view in views and small_db._view in views
+    db.close()
+    views = {t.name for t in spark.catalog.listTables()}
+    assert db._view not in views and small_db._view in views
 
 
 def test_literal_array_sql_rejects_non_finite():
@@ -324,7 +546,7 @@ def test_mean_pool_vectors_means_and_unit_norm(spark):
 def test_vectordb_srp_index_and_ann_search(spark, tmp_path):
     """build_srp_index rewrites the store atomically with signatures;
     search(ann_radius=full) equals the exact search; a modest radius
-    scans fewer rows (observe metrics prove the pruning) while the
+    scans fewer rows (the search stats prove the pruning) while the
     plane spec round-trips through _meta.json."""
     import json as _json
     import os as _os

@@ -18,28 +18,33 @@ plus the three presentation operators:
     Q12 RAG prompt assembly (chat_llm.py:30-51)
     Q14 citation aggregation (operators.citations)
 
+Q2-Q10 run as ONE SQL text (operators/search.py:search_sql, shared
+with ``topk_cosine``) over a temp view of the vectors table private
+to each open ``VectorDB``. The reference's per-search stats
+(vector_db_query.py:184-201) are computed on read by
+``last_search_stats``.
+
 The per-database warm cache (Q15, vector_db_query.py:289-317) maps to
-``DataFrame.cache()`` on the vectors table: first search materializes
-the columnar scan, later searches skip I/O.
+``DataFrame.cache()`` on the vectors table: the view reads the cached
+frame, so the first search materializes the columnar scan and later
+searches skip I/O.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
+import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_light_spark.functions.embedding import embed_query
 from vectordb_light_spark.operators.citations import format_citations
 from vectordb_light_spark.operators.ingest import META_FILE
-from vectordb_light_spark.operators.search import (
-    SearchParams,
-    rank_topk,
-    score_query,
-)
+from vectordb_light_spark.operators.search import SearchParams, search_sql
 
 #: Reference prompt strings (constants.py:207-208), reproduced for
 #: Q12 parity.
@@ -98,11 +103,29 @@ class VectorDB:
         with open(os.path.join(path, META_FILE)) as f:
             self.meta = json.load(f)
         self._recover_interrupted_swap()
-        self.vectors = spark.read.parquet(os.path.join(path, "vectors"))
-        if cache:
-            # Q15 warm cache: keep the columnar scan hot across queries.
-            self.vectors = self.vectors.cache()
+        # every open database searches through its own view name
+        self._view = f"vectordb_{uuid.uuid4().hex}"
+        self._last_search: tuple[str, float] | None = None
+        self._load_vectors()
         self.documents = spark.read.parquet(os.path.join(path, "documents"))
+
+    @property
+    def vectors(self) -> DataFrame:
+        return self._vectors
+
+    @vectors.setter
+    def vectors(self, df: DataFrame) -> None:
+        """Replacing the store re-registers the search view over it
+        (Spark uncaches the plan of the view it replaces)."""
+        self._vectors = df
+        self._columns = df.columns
+        df.createOrReplaceTempView(self._view)
+
+    def _load_vectors(self) -> None:
+        vectors = self.spark.read.parquet(os.path.join(self.path, "vectors"))
+        # Q15 warm cache: keep the columnar scan hot across queries
+        # (the CLI opens cache=False).
+        self.vectors = vectors.cache() if self._cache else vectors
 
     def _recover_interrupted_swap(self) -> None:
         """Restore a consistent (vectors, _index artifacts) snapshot
@@ -215,10 +238,7 @@ class VectorDB:
         self.meta["srp_index"] = {"n_planes": n_planes, "seed": seed}
         with open(os.path.join(self.path, META_FILE), "w") as f:
             json.dump(self.meta, f)
-        self.vectors = self.spark.read.parquet(vectors_dir)
-        if self._cache:
-            # Honor the open()-time cache policy (CLI opens cache=False).
-            self.vectors = self.vectors.cache()
+        self._load_vectors()
 
     def build_pq_index(
         self, *, m: int = 16, n_codes: int = 64, seed_note: str | None = None
@@ -270,9 +290,7 @@ class VectorDB:
         self.meta["pq_index"] = {"m": m, "n_codes": n_codes}
         with open(os.path.join(self.path, META_FILE), "w") as f:
             json.dump(self.meta, f)
-        self.vectors = self.spark.read.parquet(vectors_dir)
-        if self._cache:
-            self.vectors = self.vectors.cache()
+        self._load_vectors()
 
     def search_pq(
         self,
@@ -354,9 +372,7 @@ class VectorDB:
         self.meta["ivf_index"] = {"n_centroids": n_centroids}
         with open(os.path.join(self.path, META_FILE), "w") as f:
             json.dump(self.meta, f)
-        self.vectors = self.spark.read.parquet(vectors_dir)
-        if self._cache:
-            self.vectors = self.vectors.cache()
+        self._load_vectors()
 
     def search_ivf(
         self,
@@ -436,7 +452,9 @@ class VectorDB:
         ann_radius: int | None = None,
     ) -> DataFrame:
         """Q1-Q10; returns a rank-ordered DataFrame of surviving hits
-        with similarity_score, text and the chunk metadata columns.
+        with similarity_score, text and the chunk metadata columns:
+        the :func:`search_sql` ranked text over this database's view,
+        built in one ``spark.sql`` call.
 
         ``ann_radius`` switches the scan from exact-FLAT to
         signature-pruned ANN: only rows whose SRP signature lies
@@ -449,9 +467,9 @@ class VectorDB:
             if query_text is None:
                 raise ValueError("need query_text or query_vector")
             query_vector = self.embed(query_text)
-        base = self.vectors
+        where = None
         if ann_radius is not None:
-            if "srp_sig" not in base.columns:
+            if "srp_sig" not in self._columns:
                 raise ValueError(
                     "no SRP index on this database — run build_srp_index() "
                     "or ingest with index_srp=True"
@@ -466,27 +484,16 @@ class VectorDB:
                 len(query_vector), int(spec["n_planes"]), int(spec["seed"])
             )
             qsig = srp_signature_of(query_vector, planes)
-            base = base.where(
-                F.bit_count(F.col("srp_sig").bitwiseXOR(F.lit(qsig))) <= ann_radius
-            )
+            where = f"bit_count(srp_sig ^ {qsig}L) <= {int(ann_radius)}"
 
-        # Per-query similarity distribution as observe() metrics — the
-        # reference logs min/max/mean distance and threshold-pass
-        # counts per search (vector_db_query.py:184-201). They read the
-        # column the top-k ranks on; .last_search_stats after an action.
         # Write-path invariant: stored vectors are L2-normalized.
-        self._last_obs = Observation("search_stats")
-        sim = F.col("similarity_score")
-        scored = score_query(base, query_vector, assume_normalized=True, drop=_INDEX_COLS)
-        scored = scored.observe(
-            self._last_obs,
-            F.count(F.lit(1)).alias("n_scanned"),
-            F.min(sim).alias("min_sim"),
-            F.max(sim).alias("max_sim"),
-            F.avg(sim).alias("avg_sim"),
-            F.sum((sim >= params.threshold).cast("long")).alias("n_passing_threshold"),
+        scored, ranked, args = search_sql(
+            self._view, self._columns, query_vector,
+            dataclasses.replace(params, assume_normalized=True),
+            drop=_INDEX_COLS, where=where,
         )
-        return rank_topk(scored, params, id_col="id")
+        self._last_search = (scored, params.threshold)
+        return self.spark.sql(ranked, args)
 
     def search_hybrid(
         self,
@@ -688,11 +695,22 @@ class VectorDB:
 
     @property
     def last_search_stats(self) -> dict:
-        """Metrics of the most recent search AFTER its action ran:
-        n_scanned, min/max/avg similarity, n_passing_threshold."""
-        if getattr(self, "_last_obs", None) is None:
+        """The reference's per-search similarity stats
+        (vector_db_query.py:184-201) for the most recently BUILT
+        search: n_scanned, min/max/avg similarity over every scanned
+        row, and n_passing_threshold at that search's threshold. One
+        aggregate job over the search's scored text, run on each read
+        (over the store as it is registered now), so searches that
+        nobody asks about never pay for it."""
+        if self._last_search is None:
             raise ValueError("no search has run yet")
-        return dict(self._last_obs.get)
+        scored, threshold = self._last_search
+        return self.spark.sql(
+            "SELECT count(1) AS n_scanned, min(similarity_score) AS min_sim, "
+            "max(similarity_score) AS max_sim, avg(similarity_score) AS avg_sim, "
+            f"count_if(similarity_score >= {float(threshold)!r}D) AS n_passing_threshold "
+            f"FROM ({scored}) AS scored"
+        ).first().asDict()
 
     # -- presentation ---------------------------------------------------
 
@@ -740,3 +758,4 @@ class VectorDB:
 
     def close(self) -> None:
         self.vectors.unpersist()
+        self.spark.catalog.dropTempView(self._view)

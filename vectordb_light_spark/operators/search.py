@@ -7,16 +7,21 @@ Reference pipeline (vector_db_query.py:140-263) in order:
   Q8 case-insensitive search-term substring filter →
   Q9 document-type equality filter → Q10 rank-ordered projection.
 
-Each row is scored once, JVM-side (:func:`score_query`); the
-observe() stats of ``VectorDB.search``, the top-k order and the
-threshold (:func:`rank_topk`) all read that one column.
+Q2-Q10 are ONE SQL text rendered in one place (:func:`search_sql`)
+and run by both :func:`topk_cosine` and ``VectorDB.search`` in a
+single ``spark.sql`` call: a DataFrame-API build of the same plan
+costs hundreds of py4j round trips. Each row is scored once,
+JVM-side; the top-k order, the threshold and ``VectorDB``'s
+on-read stats all read that one column. User strings (the search
+term, the document type) are bound as named parameters, never
+pasted into the text.
 
 Order is semantics, not optimization: the threshold and post-filters
 are applied to the top-k result, so pushing them below the limit would
 be WRONG (they can only shrink the k rows, never admit replacements).
-We encode that by materializing the top-k with a row_number rank
-before filtering — the limit is a hard barrier Catalyst cannot (and
-must not) push filters through.
+We encode that by ranking the top-k with row_number before filtering
+— the limit is a hard barrier Catalyst cannot (and must not) push
+filters through.
 
 Scale notes (100 TB): the top-k itself is a TakeOrderedAndProject —
 each task keeps a k-sized heap, the driver merges per-partition heaps;
@@ -30,6 +35,8 @@ from __future__ import annotations
 
 import functools
 import math
+import numbers
+import uuid
 from dataclasses import dataclass
 
 import numpy as np
@@ -45,7 +52,8 @@ class SearchParams:
     """Query-time knobs, mirroring the reference's config
     (reference config.py:28-32): k ('contexts') default 6, similarity
     threshold default 0.4, optional substring search term and
-    document-type equality filter."""
+    document-type equality filter. ``k`` must be a non-negative int and
+    ``threshold`` a finite number: both are rendered into SQL text."""
 
     k: int = 6
     threshold: float = 0.4
@@ -53,15 +61,33 @@ class SearchParams:
     document_type: str | None = None
     assume_normalized: bool = False  # write-path vectors are L2-normalized
 
+    def __post_init__(self):
+        if not isinstance(self.k, numbers.Integral) or isinstance(self.k, bool) or self.k < 0:
+            raise ValueError(f"SearchParams.k must be a non-negative int, got {self.k!r}")
+        if (
+            not isinstance(self.threshold, numbers.Real)
+            or isinstance(self.threshold, bool)
+            or not math.isfinite(self.threshold)
+        ):
+            raise ValueError(
+                f"SearchParams.threshold must be a finite number, got {self.threshold!r}"
+            )
 
-def similarity_column(vec_col: str, query: list[float], *, assume_normalized: bool) -> Column:
+
+def _quote(name: str) -> str:
+    """Back-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def similarity_sql(vec_col: str, query: list[float], *, assume_normalized: bool) -> str:
     """Cosine similarity of a vector column against one literal query
-    vector, clipped to [0,1] like the reference's
+    vector as SQL text, clipped to [0,1] like the reference's
     sim = clip(1 - distance, 0, 1) (vector_db_query.py:186-192).
-    The higher-order-function math of functions/vector.py, built as ONE
-    parsed SQL expression like ``session.literal_array`` (lambda-built
-    HOF trees pay a py4j round trip per node at every plan build)."""
-    q, vec = [float(v) for v in query], "`" + vec_col.replace("`", "``") + "`"
+    The higher-order-function math of functions/vector.py, rendered
+    as ONE parsed SQL expression like ``session.literal_array``
+    (lambda-built HOF trees pay a py4j round trip per node at every
+    plan build)."""
+    q, vec = [float(v) for v in query], _quote(vec_col)
     sim = (
         f"aggregate(zip_with({vec}, {literal_array_sql(q, 'double')}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
@@ -73,43 +99,60 @@ def similarity_column(vec_col: str, query: list[float], *, assume_normalized: bo
             f" / (greatest(sqrt(aggregate({vec}, 0.0D, (acc, x) -> acc + "
             f"CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 1e-12D) * {q_norm!r}D)"
         )
-    return F.expr(f"least(greatest({sim}, 0.0D), 1.0D)")
+    return f"least(greatest({sim}, 0.0D), 1.0D)"
 
 
-def score_query(
-    vectors: DataFrame, query: list[float], *, vec_col: str = "vector",
-    assume_normalized: bool = False, drop: tuple[str, ...] = (),
-) -> DataFrame:
-    """Scoring step: one projection replacing the vector (and ``drop``
-    columns) with ``similarity_score``."""
+def similarity_column(vec_col: str, query: list[float], *, assume_normalized: bool) -> Column:
+    """:func:`similarity_sql` as a Column."""
+    return F.expr(similarity_sql(vec_col, query, assume_normalized=assume_normalized))
+
+
+def search_sql(
+    source: str,
+    columns: list[str],
+    query: list[float],
+    params: SearchParams,
+    *,
+    id_col: str = "id",
+    vec_col: str = "vector",
+    drop: tuple[str, ...] = (),
+    where: str | None = None,
+) -> tuple[str, str, dict]:
+    """Render one exact search over the table or view ``source`` as
+    SQL: ``(scored, ranked, args)``.
+
+    ``scored`` is the scan: ``columns`` minus the vector (and ``drop``)
+    plus ``similarity_score``, optionally behind a ``where`` predicate
+    on the unscored rows. ``ranked`` takes its top-k (per-task
+    k-heaps, TakeOrderedAndProject), ranks the ≤k rows, THEN applies
+    the post-top-k filters Q5 → Q8 → Q9 as one predicate, so
+    surviving rows keep their original rank; ties break on ``id_col``
+    ascending. ``search_term`` (lower-cased) and ``document_type`` are
+    bound as the named parameters in ``args``, never pasted."""
     gone = {vec_col, *drop}
-    sim = similarity_column(vec_col, query, assume_normalized=assume_normalized)
-    return vectors.select(
-        *[c for c in vectors.columns if c not in gone], sim.alias("similarity_score")
-    )
-
-
-def rank_topk(scored: DataFrame, params: SearchParams, *, id_col: str = "id") -> DataFrame:
-    """Ranking step over a :func:`score_query` frame: top-k (per-task
-    k-heaps, TakeOrderedAndProject), rank over the ≤k rows, THEN the
-    post-top-k filters Q5 → Q8 → Q9 as one predicate, so surviving rows
-    keep their original rank. Ties break on ``id_col`` ascending."""
-    order = (F.col("similarity_score").desc(), F.col(id_col).asc())
-    cond = F.col("similarity_score") >= F.lit(params.threshold)
+    keep = ", ".join(_quote(c) for c in columns if c not in gone)
+    sim = similarity_sql(vec_col, query, assume_normalized=params.assume_normalized)
+    scored = f"SELECT {keep}, {sim} AS similarity_score FROM {_quote(source)}"
+    if where:
+        scored += f" WHERE {where}"
+    order = f"similarity_score DESC, {_quote(id_col)} ASC"
+    cond = [f"similarity_score >= {float(params.threshold)!r}D"]
+    args = {}
     if params.search_term:
         # Q8: case-insensitive substring containment on chunk text
         # (vector_db_query.py:243-250).
-        cond &= F.contains(F.lower(F.col("text")), F.lit(params.search_term.lower()))
+        cond.append("contains(lower(`text`), :search_term)")
+        args["search_term"] = params.search_term.lower()
     if params.document_type:
         # Q9: exact equality on document_type (vector_db_query.py:252-257).
-        cond &= F.col("document_type") == F.lit(params.document_type)
-    return (
-        scored.orderBy(*order)
-        .limit(params.k)
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        .where(cond)
-        .orderBy("rank")
+        cond.append("`document_type` = :document_type")
+        args["document_type"] = params.document_type
+    ranked = (
+        f"SELECT * FROM (SELECT *, row_number() OVER (ORDER BY {order}) AS `rank` "
+        f"FROM ({scored} ORDER BY {order} LIMIT {int(params.k)}) AS top) AS ranked "
+        f"WHERE {' AND '.join(cond)} ORDER BY `rank`"
     )
+    return scored, ranked, args
 
 
 def topk_cosine(
@@ -122,8 +165,8 @@ def topk_cosine(
 ) -> DataFrame:
     """Exact brute-force top-k cosine search (reference Q2,
     vector_db_query.py:148-163) with rank, then the reference's
-    post-top-k filters (Q5/Q8/Q9): :func:`score_query` then
-    :func:`rank_topk`.
+    post-top-k filters (Q5/Q8/Q9): the :func:`search_sql` ranked text
+    run over ``vectors`` in one ``spark.sql`` call.
 
     Returns the input columns (minus the vector) plus
     ``similarity_score`` (double, clipped) and ``rank`` (1..≤k).
@@ -131,9 +174,19 @@ def topk_cosine(
     (the reference's numpy argpartition tie order is unspecified;
     SURVEY §2.8 requires an explicit tiebreaker).
     """
-    norm = params.assume_normalized
-    scored = score_query(vectors, query, vec_col=vec_col, assume_normalized=norm)
-    return rank_topk(scored, params, id_col=id_col)
+    spark, view = vectors.sparkSession, f"topk_{uuid.uuid4().hex}"
+    _, ranked, args = search_sql(
+        view, vectors.columns, query, params, id_col=id_col, vec_col=vec_col
+    )
+    vectors.createOrReplaceTempView(view)
+    try:
+        return spark.sql(ranked, args)
+    finally:
+        # The session catalog's drop: spark.catalog.dropTempView, and so
+        # spark.sql(..., vectors=df), also uncaches the view's plan,
+        # which would unpersist a cached ``vectors`` for every later
+        # consumer. The analyzed result no longer needs the name.
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
 
 
 def range_search(

@@ -122,7 +122,7 @@ def ordered_once(df: DataFrame, *cols: str) -> DataFrame:
     costs more than the recompute.
 
     ``SPARK_GRAFT_EXPLAIN_FULL=1`` (plan-dump transparency mode, used
-    by tools/gen_plans.py and tools/dump_plans_r12.py) skips the
+    by tools/gen_plans.py) skips the
     checkpoint so explain shows the full child plan instead of the
     checkpoint's opaque ``Scan ExistingRDD``; timing paths never set
     it."""
