@@ -21,11 +21,13 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from adversarial_oracle_check import (  # noqa: E402
-    compare_entry,
     make_docs,
     write_docs_parquet,
     write_embeddings_parquet,
 )
+from check_oracle import check_entry  # noqa: E402
+
+from vectordb_light_spark.queries import ORACLES, QUERIES  # noqa: E402
 
 #: Cheap pinned entries; the full 32-entry sweep (incl. minhash, BPE
 #: learning, the curate chain) is tools/adversarial_oracle_check.py.
@@ -74,7 +76,7 @@ def test_pinned_entry_survives_adversarial_whitespace(
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"'{adversarial_dir}/embeddings.parquet'"
     )
-    why = compare_entry(spark, con, name, adversarial_dir)
+    why = check_entry(spark, con, adversarial_dir, QUERIES[name], ORACLES[name])
     con.close()
     assert not why, (name, why)
 

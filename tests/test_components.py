@@ -210,6 +210,24 @@ def test_stats_hook_reports_round_walls(spark):
     assert len(st2["round_walls"]) == st2["rounds"] >= 1
 
 
+def test_empty_edge_list_runs_no_rounds(spark):
+    """An empty graph returns right after the setup aggregate: no
+    rounds, at most 2 jobs (AQE submits the aggregate's shuffle stage
+    as a job of its own), no rows; duplicate_clusters over it is empty
+    too."""
+    from perfbench.sparkstats import SparkAccounting
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    st: dict = {}
+    out, call = SparkAccounting(spark, "cc-empty").call(
+        "cc", lambda: connected_components(edges, stats=st)
+    )
+    assert st["rounds"] == 0 and call.jobs <= 2, (st, call.jobs)
+    assert out.count() == 0
+    pairs = spark.createDataFrame([], "doc_id_a long, doc_id_b long")
+    assert duplicate_clusters(pairs, pointer_jumping="auto").count() == 0
+
+
 def test_pointer_jumping_rejects_unknown_mode(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError, match="auto"):

@@ -7,12 +7,17 @@ from Spark (HUGEINT/UBIGINT/DECIMAL — the r1 hash-fail class)."""
 from __future__ import annotations
 
 import os
+import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-from vectordb_light_spark.queries import ORACLES, QUERIES
-from vectordb_light_spark.session import TESTDATA_TABLES
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+
+from check_oracle import EXOTIC_TYPES, oracle_connection  # noqa: E402
+
+from vectordb_light_spark.queries import ORACLES, QUERIES  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -23,10 +28,7 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return c
+    return oracle_connection(SF_DIR)
 
 
 def test_every_oracle_key_is_a_registered_query():
@@ -39,7 +41,7 @@ def test_oracle_executes_without_exotic_types(con, name):
     exotic = {
         c: str(t)
         for c, t in zip(rel.columns, rel.types)
-        if any(b in str(t) for b in ("HUGEINT", "UBIGINT", "UINTEGER", "DECIMAL"))
+        if any(b in str(t) for b in EXOTIC_TYPES)
     }
     assert not exotic, f"CAST these columns: {exotic}"
     con.execute(ORACLES[name]).fetchall()  # must actually run
@@ -84,84 +86,18 @@ def test_shingle_hash_cte_matches_numpy(text, n):
     assert got == want
 
 
-def test_registry_iteration_is_globally_rank_ordered():
-    """Guards the apply-at-module-end fix: every registration —
-    including ones defined BELOW the order list — must participate in
-    the fastest-first sort, or a sequential grading budget starves
-    the late-defined entries."""
-    from vectordb_light_spark.queries import _REGISTRY_ORDER, QUERIES
-
-    rank = {n: i for i, n in enumerate(_REGISTRY_ORDER)}
-    tail = len(_REGISTRY_ORDER)
-    ranks = [rank.get(n, tail) for n in QUERIES]
-    assert ranks == sorted(ranks)
-
-
-def test_registry_order_policy_staleness_first():
-    """VERDICT r5 item 1: the grading order must front-load staleness.
-    Recomputes the order from the checked-in maps and asserts
-    (a) pre-oracle-stale entries lead, (b) new/changed-this-round
-    next, (c) the rest ascend by last-graded round, cost-ascending
-    within each block."""
-    from vectordb_light_spark import queries as q
-
-    order = q._REGISTRY_ORDER
-    assert order == q._compute_registry_order()
-    assert len(order) == len(set(order))
-    # every registered query participates
-    assert set(order) == set(q.QUERIES)
-
-    # the policy inputs must name real entries — a typo in the
-    # checked-in sets would silently drop its priority effect
-    assert q._PRE_ORACLE_STALE <= set(q.QUERIES)
-    assert q._CHANGED_THIS_ROUND <= set(q.QUERIES)
-    assert set(q._LAST_GRADED) <= set(q.QUERIES)
-
-    n_a = len(q._PRE_ORACLE_STALE)
-    assert set(order[:n_a]) == set(q._PRE_ORACLE_STALE)
-
-    changed = {
-        n for n in order
-        if n not in q._PRE_ORACLE_STALE
-        and (n in q._CHANGED_THIS_ROUND or n not in q._LAST_GRADED)
-    }
-    assert set(order[n_a:n_a + len(changed)]) == changed
-
-    rest = order[n_a + len(changed):]
-    rounds = [q._LAST_GRADED[n] for n in rest]
-    assert rounds == sorted(rounds), "class (c) must ascend by last-graded round"
-    for rnd in set(rounds):
-        block = [n for n in rest if q._LAST_GRADED[n] == rnd]
-        costs = [q._SOLO_COST_S.get(n, 1.0) for n in block]
-        assert costs == sorted(costs), f"round-{rnd} block must be cost-ascending"
-
-
-def test_changed_entries_carry_no_unpinned_tokenization_sites():
-    """COVERAGE.md protocol rule 2 enforced at CI time: an entry
-    spending a grading slot this round must ALSO pin its latent
-    cross-engine tokenization sites (bare \\s, 1-arg trim) — the
-    migration rides slots already being paid. The one documented
-    exception is a site living in a CTE shared with out-of-cut
-    entries (pinning it would consume slots the cut doesn't have);
-    those entries are declared PARTIALLY_PINNED in the adversarial
-    harness, which reports them as holds-on-margin."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(
-        0, str(Path(__file__).resolve().parent.parent / "tools")
-    )
+def test_registered_entries_carry_no_unpinned_tokenization_sites():
+    """No registered entry's oracle may carry a latent cross-engine
+    tokenization site (bare \\s, 1-arg trim, regex \\b). The one
+    documented exception is a site living in a CTE shared with other
+    entries; those entries are declared PARTIALLY_PINNED in the
+    adversarial harness, which reports them as holds-on-margin."""
     from adversarial_oracle_check import PARTIALLY_PINNED
     from audit_cross_engine_tokens import audit
 
-    from vectordb_light_spark import queries as q
-
-    flagged = set(audit())
-    violations = (
-        q._CHANGED_THIS_ROUND & flagged - set(PARTIALLY_PINNED)
-    )
+    violations = set(audit()) - set(PARTIALLY_PINNED)
     assert not violations, (
-        f"changed-this-round entries with unpinned oracle sites: "
+        f"registered entries with unpinned oracle sites: "
         f"{sorted(violations)} — pin them (tools/audit_cross_engine_"
         f"tokens.py prints the rewrites) or declare them "
         f"PARTIALLY_PINNED with the shared-CTE justification"

@@ -49,7 +49,7 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from check_oracle import _canon, table_hash  # noqa: E402
+from check_oracle import check_entry  # noqa: E402
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 from vectordb_light_spark.session import get_spark  # noqa: E402
@@ -338,37 +338,6 @@ def write_embeddings_parquet(
     con.close()
 
 
-def compare_entry(spark, con, name: str, sf_dir: str) -> str:
-    """The driver's compare for ONE registry entry over ``sf_dir``:
-    row count, lowercased schema, order-insensitive value hash.
-    Returns '' on match, else a human-readable reason. ``con`` must
-    already expose the tables the oracle reads as views. Shared by
-    the CLI report below and tests/test_adversarial_oracles.py so
-    the two cannot drift."""
-    qs, oracles = queries(), oracle_sql()
-    sdf = qs[name](spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = sdf.columns
-    res = con.execute(oracles[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    if len(srows) != len(orows):
-        return f"rows {len(srows)} vs {len(orows)}"
-    if sorted(c.lower() for c in scols) != sorted(c.lower() for c in ocols):
-        return f"schema {sorted(scols)} vs {sorted(ocols)}"
-    sh, oh = table_hash(scols, srows), table_hash(ocols, orows)
-    if sh != oh:
-        order = sorted(range(len(scols)), key=lambda i: scols[i])
-        oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
-        sset = sorted("|".join(_canon(r[i]) for i in order) for r in srows)
-        oset = sorted("|".join(_canon(r[i]) for i in oorder) for r in orows)
-        diff = next(
-            (f"{a!r} vs {b!r}" for a, b in zip(sset, oset) if a != b), ""
-        )
-        return f"hash {sh} vs {oh}  first-diff {diff[:160]}"
-    return ""
-
-
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 400
     rows = make_docs(n)
@@ -387,8 +356,10 @@ def main() -> int:
     spark = get_spark("adversarial-oracle")
     fatal = 0
 
+    qs, oracles = queries(), oracle_sql()
+
     def compare(name: str) -> str:
-        return compare_entry(spark, con, name, tmp)
+        return check_entry(spark, con, tmp, qs[name], oracles[name]) or ""
 
     print(f"# adversarial documents: {n} rows -> {tmp}\n")
     print("## PINNED entries (must pass)")

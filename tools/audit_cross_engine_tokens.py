@@ -31,9 +31,9 @@ Divergence classes the r8/r9 property tests pinned down:
 
 All classes are invisible on the ASCII single-line driver corpus —
 every oracle is hash-green today — but bite on real text. This tool
-prints the remaining sites per registry entry so a round can bundle
-the migration into its grading cut deliberately (COVERAGE.md
-"Registry grading budget" rule 2). Pure-Python: no Spark session.
+prints the remaining sites per registry entry; tier-1
+(tests/test_oracle_sql.py) fails on any flagged entry that is not
+PARTIALLY_PINNED. Pure-Python: no Spark session.
 
 A third, MEASURED (not latent) boundary is case mapping: Spark's
 ``lower`` applies the full Unicode mapping while DuckDB's is simple
@@ -247,10 +247,9 @@ def main() -> None:
             )
         print()
     print(
-        "Migration rule: when an entry above enters _CHANGED_THIS_ROUND\n"
-        "for any reason, ALSO pin its \\s sites to PINNED_WS_RE and its\n"
-        "1-arg trims to trim(expr, ' ') on both engines — the entry is\n"
-        "already paying its grading slot."
+        "Migration rule: tests/test_oracle_sql.py fails on every entry\n"
+        "above that is not PARTIALLY_PINNED — pin its \\s sites to\n"
+        "PINNED_WS_RE and its 1-arg trims to trim(expr, ' ') on both engines."
     )
 
 

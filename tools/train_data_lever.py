@@ -5,10 +5,10 @@ limited at the 5k-doc sf0.1 corpus. This script tests the DATA half
 of that hypothesis exactly once, then the encoder thread closes
 either way:
 
-- corpus: x16 ``replicate_unique`` protocol (tools/scale_probe.py) —
-  16 perturbed copies (copy i rewrites every word boundary with a
-  ``v{i}x`` token), built here driver-side in pandas (no Spark
-  needed). 80k texts, 16x the token diversity of the base corpus.
+- corpus: x16 word-boundary-token replication — 16 perturbed
+  copies (copy i rewrites every word boundary with a ``v{i}x``
+  token), built here in pandas (no Spark needed).
+  80k texts, 16x the token diversity of the base corpus.
 - config: the d64 default (dim=64, 2 layers, 4 heads, seq 128) —
   the shipped checkpoint's own config, whose top1 sits at 0.297,
   just under the 0.3 gate; if data is the limiter, more data should
@@ -60,9 +60,8 @@ def main() -> None:
     base_texts = (
         pq.read_table(CORPUS, columns=["text"]).column("text").to_pylist()
     )
-    # replicate_unique protocol, driver-side: copy i rewrites every
-    # word boundary with a per-copy token (cross-copy shingle overlap
-    # ~0; within-copy structure preserved).
+    # copy i rewrites every word boundary with a per-copy token
+    # (cross-copy shingle overlap ~0).
     train_texts = [
         t.replace(" ", f" v{i}x ") for i in range(FACTOR) for t in base_texts
     ]

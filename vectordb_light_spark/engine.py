@@ -203,6 +203,52 @@ class VectorDB:
         """Q1: embed with the database's own stored embedder spec."""
         return embed_query(query_text, self.meta["embedder"])
 
+    def _swap_vectors(
+        self, tier: str, write, meta: dict, *, artifacts: dict | None = None
+    ) -> None:
+        """Replace ``vectors/`` with the store ``write(dir)`` writes and
+        record ``meta`` in ``_meta.json``, in the crash-safe order
+        :meth:`_recover_interrupted_swap` relies on. ``artifacts`` are
+        STAGED before the write and committed only after the vectors
+        swap: committed artifacts must never get ahead of it (a crash
+        would pair NEW codebooks/centroids with OLD codes/cluster
+        assignments — silent wrong results)."""
+        import shutil
+
+        from vectordb_light_spark.operators.ingest import (
+            commit_index_artifacts,
+            stage_index_artifacts,
+        )
+
+        if artifacts:
+            stage_index_artifacts(self.path, artifacts)
+        vectors_dir = os.path.join(self.path, "vectors")
+        tmp_dir = f"{vectors_dir}.{tier}-tmp"
+        old_dir = f"{vectors_dir}.{tier}-old"
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+        write(tmp_dir)
+        # Release the old cached scan BEFORE the swap — re-caching
+        # without unpersisting leaks the superseded blocks for the
+        # session's lifetime.
+        self.vectors.unpersist()
+        # a stale -old dir from a crashed earlier build must not block
+        # the rename below
+        shutil.rmtree(old_dir, ignore_errors=True)
+        os.rename(vectors_dir, old_dir)
+        os.rename(tmp_dir, vectors_dir)
+        if artifacts:
+            commit_index_artifacts(self.path)
+        # joint cleanup LAST: while vectors.<tier>-old exists, open-time
+        # recovery still has the matching pre-build snapshot to restore
+        shutil.rmtree(old_dir)
+        shutil.rmtree(
+            os.path.join(self.path, "_index.old"), ignore_errors=True
+        )
+        self.meta.update(meta)
+        with open(os.path.join(self.path, META_FILE), "w") as f:
+            json.dump(self.meta, f)
+        self._load_vectors()
+
     def build_srp_index(self, *, n_planes: int = 16, seed: int = 42) -> None:
         """One-time ANN index build for an existing database: rewrite
         ``vectors/`` with the SRP signature column (atomic tmp+swap —
@@ -211,34 +257,17 @@ class VectorDB:
         always agree with the store. Streaming databases get the same
         column live via ``start_incremental_ingest(index_srp=True)``.
         """
-        import shutil
-
         from vectordb_light_spark.operators.similarity import add_srp_signature
 
-        vectors_dir = os.path.join(self.path, "vectors")
-        dim = int(self.meta.get("dimensions", 64))
-        fresh = self.spark.read.parquet(vectors_dir)
+        fresh = self.spark.read.parquet(os.path.join(self.path, "vectors"))
         indexed = add_srp_signature(
-            fresh, vec_col="vector", n_planes=n_planes, seed=seed, dim=dim
+            fresh, vec_col="vector", n_planes=n_planes,
+            seed=seed, dim=int(self.meta.get("dimensions", 64)),
         )
-        tmp_dir = vectors_dir + ".srp-tmp"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        indexed.write.parquet(tmp_dir)
-        # Release the old cached scan BEFORE the swap — re-caching
-        # without unpersisting leaks the superseded blocks for the
-        # session's lifetime.
-        self.vectors.unpersist()
-        old_dir = vectors_dir + ".srp-old"
-        # a stale -old dir from a crashed earlier build must not block
-        # the rename below
-        shutil.rmtree(old_dir, ignore_errors=True)
-        os.rename(vectors_dir, old_dir)
-        os.rename(tmp_dir, vectors_dir)
-        shutil.rmtree(old_dir)
-        self.meta["srp_index"] = {"n_planes": n_planes, "seed": seed}
-        with open(os.path.join(self.path, META_FILE), "w") as f:
-            json.dump(self.meta, f)
-        self._load_vectors()
+        self._swap_vectors(
+            "srp", indexed.write.parquet,
+            {"srp_index": {"n_planes": n_planes, "seed": seed}},
+        )
 
     def build_pq_index(
         self, *, m: int = 16, n_codes: int = 64, seed_note: str | None = None
@@ -249,48 +278,21 @@ class VectorDB:
         atomic tmp+swap discipline as :meth:`build_srp_index`). After
         this, ``search(pq=True)`` scans codes (m bytes/row) instead of
         float vectors and exact-re-ranks the ADC pool."""
-        import shutil
-
-        from vectordb_light_spark.operators.ingest import (
-            commit_index_artifacts,
-            stage_index_artifacts,
-        )
         from vectordb_light_spark.operators.similarity import (
             add_pq_codes,
             train_pq_codebooks,
         )
 
-        vectors_dir = os.path.join(self.path, "vectors")
-        fresh = self.spark.read.parquet(vectors_dir)
+        fresh = self.spark.read.parquet(os.path.join(self.path, "vectors"))
         books = train_pq_codebooks(
             fresh, vec_col="vector", id_col="id", m=m, n_codes=n_codes
         )
-        # STAGED, not committed: committed artifacts must never get
-        # ahead of the vectors swap (a crash would pair NEW codebooks
-        # with OLD pq_code assignments — silent wrong results).
-        stage_index_artifacts(self.path, {"pq_codebooks": books})
         coded = add_pq_codes(fresh, books, vec_col="vector")
-        tmp_dir = vectors_dir + ".pq-tmp"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        coded.write.parquet(tmp_dir)
-        self.vectors.unpersist()
-        old_dir = vectors_dir + ".pq-old"
-        # a stale -old dir from a crashed earlier build must not block
-        # the rename below
-        shutil.rmtree(old_dir, ignore_errors=True)
-        os.rename(vectors_dir, old_dir)
-        os.rename(tmp_dir, vectors_dir)
-        commit_index_artifacts(self.path)
-        # joint cleanup LAST: while vectors.<tier>-old exists, open-time
-        # recovery still has the matching pre-build snapshot to restore
-        shutil.rmtree(old_dir)
-        shutil.rmtree(
-            os.path.join(self.path, "_index.old"), ignore_errors=True
+        self._swap_vectors(
+            "pq", coded.write.parquet,
+            {"pq_index": {"m": m, "n_codes": n_codes}},
+            artifacts={"pq_codebooks": books},
         )
-        self.meta["pq_index"] = {"m": m, "n_codes": n_codes}
-        with open(os.path.join(self.path, META_FILE), "w") as f:
-            json.dump(self.meta, f)
-        self._load_vectors()
 
     def search_pq(
         self,
@@ -334,45 +336,21 @@ class VectorDB:
         probe is a partition-pruned read that never opens the other
         clusters' files. Same atomic tmp+swap discipline as
         :meth:`build_pq_index`."""
-        import shutil
-
-        from vectordb_light_spark.operators.ingest import (
-            commit_index_artifacts,
-            stage_index_artifacts,
-        )
         from vectordb_light_spark.operators.similarity import (
             add_ivf_cluster,
             train_ivf_centroids,
         )
 
-        vectors_dir = os.path.join(self.path, "vectors")
-        fresh = self.spark.read.parquet(vectors_dir)
+        fresh = self.spark.read.parquet(os.path.join(self.path, "vectors"))
         centroids = train_ivf_centroids(
             fresh, vec_col="vector", id_col="id", n_centroids=n_centroids
         )
-        # STAGED, not committed — see build_pq_index: new centroids
-        # must never go live before the matching cluster assignments.
-        stage_index_artifacts(self.path, {"ivf_centroids": centroids})
         clustered = add_ivf_cluster(fresh, centroids, vec_col="vector")
-        tmp_dir = vectors_dir + ".ivf-tmp"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        clustered.write.partitionBy("ivf_cluster").parquet(tmp_dir)
-        self.vectors.unpersist()
-        old_dir = vectors_dir + ".ivf-old"
-        # a stale -old dir from a crashed earlier build must not block
-        # the rename below
-        shutil.rmtree(old_dir, ignore_errors=True)
-        os.rename(vectors_dir, old_dir)
-        os.rename(tmp_dir, vectors_dir)
-        commit_index_artifacts(self.path)
-        shutil.rmtree(old_dir)
-        shutil.rmtree(
-            os.path.join(self.path, "_index.old"), ignore_errors=True
+        self._swap_vectors(
+            "ivf", clustered.write.partitionBy("ivf_cluster").parquet,
+            {"ivf_index": {"n_centroids": n_centroids}},
+            artifacts={"ivf_centroids": centroids},
         )
-        self.meta["ivf_index"] = {"n_centroids": n_centroids}
-        with open(os.path.join(self.path, META_FILE), "w") as f:
-            json.dump(self.meta, f)
-        self._load_vectors()
 
     def search_ivf(
         self,

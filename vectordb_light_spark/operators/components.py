@@ -56,7 +56,8 @@ def connected_components(
     Raises if the fixed point is not reached within ``max_iter``
     rounds (diameter larger than expected — raise ``max_iter``).
     Isolated nodes (no edges) are the caller's to add; every node
-    appearing in ``edges`` is labeled.
+    appearing in ``edges`` is labeled. An empty edge list returns
+    right after the setup aggregate, with no rounds.
 
     ``pointer_jumping=True`` (r10 prototype, OFF by default) adds a
     label-jump step after each propagation round —
@@ -156,12 +157,25 @@ def connected_components(
                 "connected_components label sum overflowed decimal(38,0) "
                 "— exact-sum convergence check is no longer sound"
             )
-        return row["s"]
+        return row["s"], row["n"]
 
-    prev_sum = label_sum(comp)
+    prev_sum, n_nodes = label_sum(comp)
     setup_wall = _time.time() - t_setup
     round_walls: list = []
     escalated = False
+
+    def done(comp, rounds):
+        if stats is not None:
+            stats["rounds"] = rounds
+            stats["escalated"] = escalated
+            stats["round_walls"] = round_walls
+            stats["setup_wall"] = setup_wall
+        return comp
+
+    if n_nodes == 0:
+        # no edges: nothing to label, so no rounds
+        return done(comp, 0)
+
     # Convergence is CHECKED every `check_every` rounds instead of
     # every round (r12 optimization round): labels are monotone
     # non-increasing, so the exact label sum is unchanged across a
@@ -214,15 +228,10 @@ def connected_components(
         # lazy: label_sum's aggregate action materializes the block's
         # checkpoint in the same job
         comp = comp.localCheckpoint(eager=False)
-        cur_sum = label_sum(comp)
+        cur_sum, _ = label_sum(comp)
         round_walls.append(_time.time() - t_round)
         if cur_sum == prev_sum:
-            if stats is not None:
-                stats["rounds"] = rounds
-                stats["escalated"] = escalated
-                stats["round_walls"] = round_walls
-                stats["setup_wall"] = setup_wall
-            return comp
+            return done(comp, rounds)
         prev_sum = cur_sum
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"

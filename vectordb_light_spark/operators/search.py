@@ -248,7 +248,8 @@ def topk_cosine_batch(
     query per partition — the O(N·M) similarity matrix never exists as
     rows. (A crossJoin + per-row higher-order-function dot product
     computes the same thing ~20× slower: the HOF lambda runs in the
-    expression interpreter per row; measured in tools/scale_probe.py.)
+    expression interpreter per row. SCALING.md's first table has this
+    operator's timings at x1–x16.)
     Local and global orderings are identical (similarity desc, id asc),
     which makes the two-phase top-k exact, ties included.
 

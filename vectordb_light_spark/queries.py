@@ -7292,166 +7292,8 @@ def pipe_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Registry ordering
-# ---------------------------------------------------------------------------
-
-#: Round-6 grading-order policy (VERDICT r5 item 1). The correctness
-#: driver grades a ~50-entry prefix of this order each round, so the
-#: order is COMPUTED from checked-in state, front-loading staleness:
-#:   (a) oracle-backed entries whose latest driver row PREDATES their
-#:       oracle (they have literally never been driver-graded against
-#:       it) — `_PRE_ORACLE_STALE`;
-#:   (b) entries new or implementation-changed this round —
-#:       `_CHANGED_THIS_ROUND` (new entries have no `_LAST_GRADED`
-#:       row and land here automatically);
-#:   (c) everything else by ASCENDING last-graded round (oldest
-#:       driver signal re-earns its row first), cheapest-first within
-#:       a round so a time-capped driver still covers most of a block.
-#: `_LAST_GRADED` = latest round with any driver row per entry
-#: (rebuilt each round from CORRECTNESS_r0*.json); `_SOLO_COST_S` =
-#: sf0.1 solo seconds from the latest full bench (tiebreak only).
-#: `tests/test_plan_guards.py` recomputes the order from these maps
-#: and asserts the policy holds.
-
-_LAST_GRADED = {
-    'ann_ivf_topk': 12,
-    'ann_ivfpq_topk': 11,
-    'ann_opq_topk': 9,
-    'ann_pca_topk': 12,
-    'ann_pq_topk': 11,
-    'ann_recall_contract': 12,
-    'ann_srp_topk': 10,
-    'ann_topk_join': 10,
-    'dd_containment_pairs': 10,
-    'dd_cross_corpus_candidates': 12,
-    'dd_duplicate_clusters': 12,
-    'dd_duplicate_groups': 11,
-    'dd_embedding_near_dups': 10,
-    'dd_exact_dedup': 12,
-    'dd_image_near_dups': 12,
-    'dd_jaccard_pairs': 12,
-    'dd_line_dedup': 10,
-    'dd_minhash_candidates': 12,
-    'dd_remove_boilerplate': 12,
-    'dd_repeated_spans': 11,
-    'dd_semantic_dedup': 12,
-    'dd_simhash_near_dups': 12,
-    'dd_strip_repeated_spans': 11,
-    'dq_events_constraints': 10,
-    'emb_doc_mean_pool': 11,
-    'emb_feature_hash_topk': 12,
-    'emb_mini_encoder_topk': 9,
-    'kw_bm25_topk': 12,
-    'kw_hybrid_rrf': 12,
-    'mm_audio_features': 12,
-    'mm_audio_windows': 10,
-    'mm_frame_counts': 10,
-    'mm_image_decode': 12,
-    'mm_image_pipeline': 12,
-    'mm_jpeg_decode': 12,
-    'mm_video_frames': 12,
-    'pipe_bloom_decontaminate': 11,
-    'pipe_bpe_encode': 12,
-    'pipe_bpe_merges': 12,
-    'pipe_cdc_chunks': 12,
-    'pipe_chunk_fixed': 10,
-    'pipe_chunk_normalized': 12,
-    'pipe_corpus_mix': 10,
-    'pipe_corpus_shuffle': 11,
-    'pipe_corpus_split': 10,
-    'pipe_curate_chain': 12,
-    'pipe_curate_split_chain': 12,
-    'pipe_curriculum_order': 12,
-    'pipe_decontaminate': 11,
-    'pipe_doc_hash': 11,
-    'pipe_domain_mix': 10,
-    'pipe_dsir_select': 10,
-    'pipe_hash_embed_topk': 9,
-    'pipe_leakage_safe_split': 12,
-    'pipe_negative_samples': 10,
-    'pipe_pdf_page_chunks': 12,
-    'pipe_semantic_decontaminate': 12,
-    'pipe_sequence_pack': 10,
-    'pipe_stratified_take': 11,
-    'pipe_temperature_mix': 10,
-    'pipe_token_budget_mix': 11,
-    'pipe_token_windows': 12,
-    'pipe_training_corpus': 9,
-    'pipe_url_dedup': 10,
-    'pipe_weighted_sample': 10,
-    'prof_corpus_quantiles': 10,
-    'prof_events_corr': 11,
-    'prof_events_cube': 10,
-    'prof_events_pivot': 11,
-    'prof_events_rollup': 10,
-    'prof_events_sketch': 11,
-    'prof_sketch_accuracy': 10,
-    'prof_value_histogram': 10,
-    'rel_big_orders': 10,
-    'rel_customer_activity': 11,
-    'rel_events_asof': 10,
-    'rel_events_cohorts': 12,
-    'rel_events_funnel': 11,
-    'rel_events_gapfill': 11,
-    'rel_events_gaps': 11,
-    'rel_events_interval': 11,
-    'rel_events_json': 11,
-    'rel_events_moving_avg': 12,
-    'rel_events_scd2': 11,
-    'rel_forecast_revenue': 10,
-    'rel_join_nation_customers': 10,
-    'rel_orders_pareto': 12,
-    'rel_pricing_summary': 11,
-    'rel_region_volume': 11,
-    'rel_scd2_merge': 11,
-    'rel_sessions_overlap': 10,
-    'rel_shipping_priority': 11,
-    'rel_top_orders_by_revenue': 12,
-    'rel_user_retention': 11,
-    'rel_window_order_rank': 10,
-    'sim_cosine_pairs_exact': 12,
-    'sim_sparse_cosine_pairs': 12,
-    'skew_salted_user_join': 11,
-    'src_binary_roundtrip': 12,
-    'src_markup_roundtrip': 12,
-    'src_office_roundtrip': 12,
-    'st_clicks_attribution': 10,
-    'st_events_dedup': 11,
-    'st_events_sessions': 9,
-    'st_events_sliding': 10,
-    'st_events_window': 10,
-    'st_heavy_hitters': 10,
-    'st_user_running_totals': 10,
-    'st_windowed_quantiles': 9,
-    'ts_bigram_lm_score': 10,
-    'ts_c4_filter': 12,
-    'ts_gopher_filter': 12,
-    'ts_lang_id': 12,
-    'ts_pii_scrub': 10,
-    'ts_pii_scrub_extended': 12,
-    'ts_quality_classifier': 12,
-    'ts_quality_score': 12,
-    'ts_readability': 10,
-    'ts_repetition_filter': 11,
-    'ts_text_stats': 11,
-    'ts_tfidf_top_terms': 10,
-    'ts_vocab_topk': 11,
-    'ts_winnow_fingerprints': 12,
-    'vq_batch_topk': 12,
-    'vq_chunks_only': 12,
-    'vq_citations': 11,
-    'vq_filtered_topk': 11,
-    'vq_grouped_topk': 11,
-    'vq_mmr_rerank': 10,
-    'vq_postfilters': 11,
-    'vq_rag_prompt': 12,
-    'vq_range_search': 10,
-    'vq_threshold_after_topk': 11,
-    'vq_topk_cosine': 11,
-    'vq_topk_quantized': 11,
-}
-
+#: sf0.1 solo seconds per entry from the latest full bench run:
+#: ``bench.py``'s outlier re-check compares a timed run against it.
 _SOLO_COST_S = {
     'ann_ivf_topk': 0.715,
     'ann_ivfpq_topk': 1.41,
@@ -7589,111 +7431,6 @@ _SOLO_COST_S = {
     'vq_topk_cosine': 0.298,
     'vq_topk_quantized': 0.341,
 }
-
-
-#: Oracle-backed entries whose latest driver row predates their
-#: oracle. Emptied r7: the r6 driver graded all three former members
-#: (ann_ivf/pca/opq_topk) hash-green. Class (a).
-_PRE_ORACLE_STALE: set = set()
-
-
-#: r13 cut (grading-budget protocol, COVERAGE.md; second optimization
-#: round, OPTIMIZATION_r13.md). `_LAST_GRADED` carries the r12
-#: driver rows (50 entries bumped to 12, incl. the then-new
-#: `pipe_curate_split_chain`), so the r9-stale remainder rotates in
-#: right behind this round's changed set (VERDICT r12 item 8).
-#: Changes this round — every entry below had its registered body or
-#: a shared operator under it change plan shape; outputs
-#: oracle-verified identical (135/135 at sf0.01 plus per-entry
-#: sf0.001 checks):
-#: (1) `dd_containment_pairs` — rewrite per VERDICT r12 item 2:
-#:     xxhash64 shingle keys (8-byte exchanges, never gram text),
-#:     map-side |A| carried through the pair exchange (sizes
-#:     aggregate + join-back eliminated), broadcast-ANTI hot-shingle
-#:     prefilter instead of the rare-set equi-join.
-#: (2) CC entries (`dd_duplicate_clusters`, `dd_semantic_dedup`,
-#:     `pipe_leakage_safe_split`, `pipe_curate_split_chain`) — the
-#:     shared connected_components round loop now runs AQE-off with
-#:     a node-count-derived fixed partition layout (one job per
-#:     2-round block; sym hash-partitioned once).
-#: (3) `dd_image_near_dups` — synth+encode+decode+dHash fused into
-#:     ONE Arrow stage (two MapInPandas → one; the BMP bytes never
-#:     cross the JVM boundary).
-#: (4) `ann_ivf_topk` — the Lloyd-rescan cache routed through the
-#:     released persist ledger (bench integrity; plan unchanged, but
-#:     runtime caching semantics changed — conservative rule-6 mark).
-#: The session-wide per-build cache release (queries.register wrapper)
-#: changes RUNTIME cache lifetime for every entry but no plan shape;
-#: entries are not blanket-marked for it.
-#: (5) `dd_simhash_near_dups` — documented (4,2) scheme pinned
-#:     explicitly (kills the per-build canonical-filtered count).
-#: (6) `mm_image_pipeline` — fused decode+features Arrow stage.
-#: (7) `ann_recall_contract` — IVFPQ tier stacked on the cached PQ
-#:     tier (one corpus encode pass).
-#: (8) `pipe_training_corpus` — pushdown barrier keeps the quality
-#:     fold above the rebalance exchange.
-#: (9) `dd_repeated_spans` / `dd_strip_repeated_spans` — binary md5
-#:     anchor keys through the hot aggregate / cover join.
-#: (The literal_array change rebuilds identical literal trees — plans
-#: unchanged — and the dHash bit-pack vectorization is inside an
-#: opaque Python stage; neither is plan-affecting.)
-_CHANGED_THIS_ROUND = {
-    "dd_containment_pairs",
-    "dd_duplicate_clusters",
-    "dd_semantic_dedup",
-    "pipe_leakage_safe_split",
-    "pipe_curate_split_chain",
-    "dd_image_near_dups",
-    "ann_ivf_topk",
-    "dd_simhash_near_dups",
-    "mm_image_pipeline",
-    "ann_recall_contract",
-    "pipe_training_corpus",
-    "dd_repeated_spans",
-    "dd_strip_repeated_spans",
-}
-
-
-def _compute_registry_order() -> list:
-    """(a) pre-oracle stale, (b) new/changed this round, (c) ascending
-    last-graded round; cost-ascending within each class/round.
-    Computed over every REGISTERED query (new entries registered below
-    this point have no `_LAST_GRADED` row and land in class b), so it
-    must run at module end — see `_apply_registry_order`."""
-    names = (
-        set(QUERIES) | set(_LAST_GRADED)
-        | set(_CHANGED_THIS_ROUND) | set(_PRE_ORACLE_STALE)
-    )
-
-    def key(name):
-        cost = _SOLO_COST_S.get(name, 1.0)
-        if name in _PRE_ORACLE_STALE:
-            return (0, 0, cost, name)
-        if name in _CHANGED_THIS_ROUND or name not in _LAST_GRADED:
-            return (1, 0, cost, name)
-        return (2, _LAST_GRADED[name], cost, name)
-
-    return sorted(names, key=key)
-
-
-#: Populated by `_apply_registry_order()` at module end, AFTER every
-#: registration — computing it here would miss late-defined entries.
-_REGISTRY_ORDER: list = []
-
-
-def _apply_registry_order() -> None:
-    _REGISTRY_ORDER[:] = _compute_registry_order()
-    rank = {name: i for i, name in enumerate(_REGISTRY_ORDER)}
-    tail = len(_REGISTRY_ORDER)
-    for mapping in (QUERIES, ORACLES):
-        ordered = sorted(
-            mapping.items(),
-            key=lambda kv: (rank.get(kv[0], tail), kv[0]),
-        )
-        mapping.clear()
-        mapping.update(ordered)
-
-
 
 
 def _feature_hash_oracle_sql() -> str:
@@ -8762,7 +8499,3 @@ def pipe_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
     )
 
-
-# Applied at module end so EVERY registration (including those defined
-# below the order list) participates in the fastest-first sort.
-_apply_registry_order()
