@@ -364,6 +364,21 @@ def test_minhash_cap_neutral_below_threshold(spark):
     assert a == b
 
 
+def test_minhash_zero_width_bands_raise(spark):
+    """bands > num_hashes leaves 0 rows per band: every document would
+    share every band key and the candidate join would go all-pairs
+    (40 random docs: 780/780 pairs). Both MinHash banders reject it."""
+    import pytest
+
+    from vectordb_light_spark.operators.dedup import minhash_lsh_candidates_cross
+
+    df = _df(spark)
+    with pytest.raises(ValueError, match="zero-width LSH bands"):
+        minhash_lsh_candidates(df, num_hashes=16, bands=32, max_bucket=None)
+    with pytest.raises(ValueError, match="zero-width LSH bands"):
+        minhash_lsh_candidates_cross(df, df, num_hashes=16, bands=32)
+
+
 def test_cross_corpus_hot_bucket_links_to_min_ref(spark):
     from vectordb_light_spark.operators.dedup import minhash_lsh_candidates_cross
 

@@ -319,7 +319,7 @@ def test_run_curation_split_stage_is_leakage_safe(spark):
 
 
 def test_split_straddle_counter_detects_planted_leak(spark):
-    """Negative control for the chain probe's leak invariant
+    """Negative control for the split leak invariant
     (tools/scale_probe.py count_split_straddlers): on the stage's own
     output it reads 0, and flipping ONE near-dup's split assignment
     must be detected — proving the counter is not vacuous (the

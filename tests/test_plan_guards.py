@@ -248,7 +248,7 @@ def test_flipped_contract_entries_broadcast_only_bounded_frames(spark):
     so the v1 shape (broadcasting a projection of EVERY corpus id,
     multi-GB at real scale) can never come back. r10 (ADVICE r9): the
     detector is the tree-anchored ``broadcast_subtrees_bounded``
-    shared with tools/scale_probe.py --contract, not a substring
+    kept in tools/scale_probe.py, not a substring
     window — a keyed aggregate adjacent to an unbounded scan no
     longer masks it. Negative control below."""
     import sys

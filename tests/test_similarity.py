@@ -13,7 +13,6 @@ from vectordb_light_spark.operators.similarity import (
     ann_topk_ivf,
     ann_topk_srp,
     cosine_pairs_exact,
-    embedding_near_dup_pairs,
     srp_planes,
     srp_signature_of,
     train_ivf_centroids,
@@ -102,38 +101,6 @@ def test_cosine_pairs_exact_symmetric_threshold(spark, emb):
     pairs = cosine_pairs_exact(emb, threshold=0.3).collect()
     assert all(r["id_a"] < r["id_b"] for r in pairs)
     assert all(r["cosine"] >= 0.3 for r in pairs)
-
-
-def test_embedding_near_dup_subset_of_exact(spark):
-    """Near-dup pairs on hash-embedded documents: every reported pair
-    must appear in the exact O(N²) pair set, and for a generous block
-    radius most exact pairs are recovered."""
-    from vectordb_light_spark.functions.embedding import embed_documents
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    emb_docs = embed_documents(docs, {"encoder": "hashing", "dim": 64, "seed": 0}).drop(
-        "text"
-    ).cache()
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_pairs_exact(
-            emb_docs, id_col="doc_id", vec_col="vector", threshold=0.8
-        ).collect()
-    }
-    approx = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(
-            emb_docs,
-            id_col="doc_id",
-            vec_col="vector",
-            threshold=0.8,
-            n_planes=16,
-            max_hamming=3,
-        ).collect()
-    }
-    assert approx <= exact
-    if exact:
-        assert len(approx) / len(exact) >= 0.5
 
 
 def test_banded_near_dup_containment_and_recall(spark):
@@ -681,40 +648,6 @@ def test_opq_full_pool_rerank_equals_exact(spark, emb):
     assert got == want
 
 
-def test_embedding_near_dup_hot_bucket_and_scheme_invariance(spark):
-    """r3: identical embeddings collapse to a cosine-verified star
-    above max_bucket (linear rows), and the combo blocking scheme
-    leaves the output invariant below the cap."""
-    import numpy as np
-
-    from vectordb_light_spark.operators.similarity import embedding_near_dup_pairs
-
-    rng = np.random.default_rng(4)
-    base = rng.normal(size=16)
-    base /= np.linalg.norm(base)
-    rows = [(i, [float(x) for x in base]) for i in range(60)]  # 60 identical
-    for j in range(8):
-        v = rng.normal(size=16)
-        v /= np.linalg.norm(v)
-        rows.append((100 + j, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    capped = embedding_near_dup_pairs(df, threshold=0.99, max_bucket=16).collect()
-    ids = {(r["id_a"], r["id_b"]) for r in capped}
-    # the 60-dup cluster is a min-id star: 59 pairs, not 1770
-    assert ids == {(0, i) for i in range(1, 60)}
-    assert all(abs(r["cosine"] - 1.0) < 1e-5 for r in capped)
-
-    small = spark.createDataFrame(rows[55:], "vec_id long, embedding array<float>")
-    out_a = sorted(
-        (r["id_a"], r["id_b"]) for r in embedding_near_dup_pairs(
-            small, threshold=0.9, max_bucket=None).collect())
-    out_b = sorted(
-        (r["id_a"], r["id_b"]) for r in embedding_near_dup_pairs(
-            small, threshold=0.9, max_bucket=None, n_docs_hint=10**9).collect())
-    assert out_a == out_b
-
-
 def test_topk_join_right_bucket_cap(spark):
     """r3: a hot right-side bucket (many near-identical rights) is
     truncated deterministically; every left still gets k results and
@@ -774,6 +707,59 @@ def test_banded_near_dup_hot_bucket_star(spark):
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in out} == {(0, i) for i in range(1, 50)}
     assert all(abs(r["cosine"] - 1.0) < 1e-5 for r in out)
+
+
+def test_banded_near_dup_cap_neutral_below_threshold(spark):
+    """The shared hot-bucket cap is inert while no band bucket exceeds
+    it: a 12-row identical cluster under max_bucket=16 keeps its full
+    clique, exactly as with the cap off."""
+    import numpy as np
+
+    from vectordb_light_spark.operators.similarity import (
+        embedding_near_dup_pairs_banded,
+    )
+
+    rng = np.random.default_rng(11)
+    base = rng.normal(size=16)
+    base /= np.linalg.norm(base)
+    rows = [(i, [float(x) for x in base]) for i in range(12)]
+    for j in range(20):
+        v = rng.normal(size=16)
+        rows.append((100 + j, [float(x) for x in v / np.linalg.norm(v)]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def pairs(max_bucket):
+        return sorted(
+            (r["id_a"], r["id_b"], round(r["cosine"], 9))
+            for r in embedding_near_dup_pairs_banded(
+                df, threshold=0.95, max_bucket=max_bucket
+            ).collect()
+        )
+
+    capped = pairs(16)
+    assert capped == pairs(None)
+    assert {(0, 1), (10, 11)} <= {(a, b) for a, b, _ in capped}
+    assert len(capped) >= 66
+
+
+def test_srp_zero_width_bands_raise(spark):
+    """bands > n_planes leaves 0 bits per band: every row would share
+    every band value and the band join would go all-pairs. Both SRP
+    banders reject it before planning anything."""
+    from vectordb_light_spark.operators.similarity import (
+        ann_topk_join_lsh,
+        embedding_near_dup_pairs_banded,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="zero-width SRP bands"):
+        embedding_near_dup_pairs_banded(df, n_planes=64, bands=128)
+    left = df.withColumnsRenamed({"vec_id": "l_id", "embedding": "l_vec"})
+    right = df.withColumnsRenamed({"vec_id": "r_id", "embedding": "r_vec"})
+    with pytest.raises(ValueError, match="zero-width SRP bands"):
+        ann_topk_join_lsh(left, right, n_planes=16, bands=32)
 
 
 def test_topk_join_left_bucket_salting_is_output_neutral(spark):

@@ -63,13 +63,6 @@ def cosine_similarity(a: Column | str, b: Column | str, eps: float = 1e-12) -> C
     )
 
 
-def cosine_distance(a: Column | str, b: Column | str) -> Column:
-    """1 - cosine similarity (the reference's metric at query time,
-    converted back via sim = clip(1-d, 0, 1), reference
-    vector_db_query.py:186-192)."""
-    return F.lit(1.0) - cosine_similarity(a, b)
-
-
 def quantize_int8(a: Column | str) -> Column:
     """Symmetric int8 quantization of a unit-norm embedding:
     ``q = floor(clamp(x, -1, 1) * 127 + 0.5)`` per element, stored as

@@ -317,7 +317,16 @@ def lsh_band_keys(
     never exceeds 2^40, so DuckDB ``list_reduce`` over BIGINT
     reproduces it exactly (the oracle-twin path). The join is on
     (band_idx, band_key), so cross-band key collisions are harmless
-    either way."""
+    either way.
+
+    Raises ``ValueError`` for a zero-width band (``bands`` > signature
+    length gives ``rows_per_band`` 0): every row would share every
+    band key and the join would silently go all-pairs."""
+    if rows_per_band < 1:
+        raise ValueError(
+            f"zero-width LSH bands: rows_per_band={rows_per_band} "
+            f"(bands={bands} exceeds the signature length)"
+        )
     if key_family == "poly31":
         m31 = F.lit(2147483647).cast("long")
         return F.transform(
@@ -341,6 +350,88 @@ def lsh_band_keys(
             b,
         ),
     )
+
+
+def over_cap(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """The hot-bucket probe every capped band/block join shares: the
+    ``keys`` buckets holding more than ``cap`` rows, as ``(*keys,
+    __bc)`` with ``__bc`` the bucket's row count. The count aggregate
+    is a cheap partial-agg shuffle of the key columns only, and the
+    hot-key set is tiny in practice, so AQE turns the anti/semi joins
+    that consume it into broadcasts."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__bc"))
+        .where(F.col("__bc") > cap)
+    )
+
+
+def _signature_stars(
+    hot: DataFrame, group: list[str], *star_cols: Column
+) -> tuple[DataFrame, DataFrame]:
+    """Duplicates-by-signature star for hot buckets: within each
+    ``group`` (bucket keys plus the FULL signature — one shuffle,
+    output linear in bucket size), link every member ``__id`` to the
+    group's min id. Returns ``(mins, stars)``: ``mins`` is ``(*group,
+    id_a)``, ``stars`` is ``(id_a, id_b, *star_cols)``. Singleton
+    groups emit nothing."""
+    mins = hot.groupBy(*group).agg(F.min("__id").alias("id_a"))
+    stars = (
+        hot.join(mins, group)
+        .where(F.col("__id") != F.col("id_a"))
+        .select("id_a", F.col("__id").alias("id_b"), *star_cols)
+    )
+    return mins, stars
+
+
+def capped_band_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    max_bucket: int | None,
+    *,
+    verify: Column | None = None,
+    pair_cols: tuple[Column, ...] = (),
+    star_cols: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b, *pair_cols)`` with id_a < id_b
+    from a banded frame ``(__id, __sig, *keys)`` — the band self-join
+    of every LSH pair generator, under one hot-bucket policy.
+
+    Buckets within ``max_bucket`` self-equi-join on ``keys``;
+    ``verify`` (over ``id_a``/``sig_a``/``id_b``/``sig_b``) filters the
+    matched rows map-side, before the pair-dedup exchange, and
+    ``pair_cols`` are computed per matched row from the same columns.
+    Buckets above the cap skip the pairwise join (it would emit
+    |bucket|²/2 rows in one task): members sharing a FULL signature
+    link to the group's min id (:func:`_signature_stars`, carrying
+    ``star_cols``). Connected components over the star equal those
+    over the clique, so cluster-level dedup is unaffected; only
+    direct pairs between NON-identical signatures inside a hot
+    bucket are dropped (they can still surface via their other,
+    colder bands). ``max_bucket=None`` disables the cap. Pairs found
+    in several bands are deduplicated on ``(id_a, id_b)``.
+
+    The caller persists ``banded`` when it has several consumers."""
+    if max_bucket is not None:
+        hot_keys = over_cap(banded, keys, max_bucket).select(*keys)
+        cold = banded.join(hot_keys, keys, "left_anti")
+        hot = banded.join(hot_keys, keys, "left_semi")
+    else:
+        cold, hot = banded, None
+    a = cold.select(
+        F.col("__id").alias("id_a"), F.col("__sig").alias("sig_a"), *keys
+    )
+    b = cold.select(
+        F.col("__id").alias("id_b"), F.col("__sig").alias("sig_b"), *keys
+    )
+    pairs = a.join(b, keys).where(F.col("id_a") < F.col("id_b"))
+    if verify is not None:
+        pairs = pairs.where(verify)
+    pairs = pairs.select("id_a", "id_b", *pair_cols)
+    if hot is not None:
+        _, stars = _signature_stars(hot, [*keys, "__sig"], *star_cols)
+        pairs = pairs.unionByName(stars)
+    return pairs.dropDuplicates(["id_a", "id_b"])
 
 
 def minhash_lsh_candidates(
@@ -368,15 +459,10 @@ def minhash_lsh_candidates(
     are uniform 64-bit hashes, so RANDOM collisions never skew the
     join; but near-identical documents share identical band keys BY
     CONSTRUCTION, and a boilerplate cluster of D docs would emit
-    D²/2 pairs in one task. ``max_bucket`` bounds that: buckets above
-    the cap skip the pairwise join and instead link members sharing a
-    FULL signature to the group's min id (a star — est_jaccard is
-    exactly 1.0 for identical signatures). Connected components over
-    the star equal those over the clique at ANY downstream
-    est_jaccard threshold, so cluster-level dedup is unaffected; only
-    direct pairs between NON-identical signatures inside a hot bucket
-    are dropped (documented recall tradeoff — they can still surface
-    via their other, colder bands). ``max_bucket=None`` disables the
+    D²/2 pairs in one task. ``max_bucket`` bounds that with the
+    shared hot-bucket star (:func:`capped_band_pairs`; est_jaccard is
+    exactly 1.0 for identical signatures, so components are the same
+    at ANY downstream threshold). ``max_bucket=None`` disables the
     cap.
 
     ``hash_family="poly31"`` switches signature AND band keys to the
@@ -396,7 +482,7 @@ def minhash_lsh_candidates(
     # eager 1.28/4.24 s medians on dd_minhash_candidates /
     # pipe_leakage_safe_split. The duplicated pass is a documented
     # local trade; on a saturated cluster flip to
-    # session.materialize_if_batch.
+    # localCheckpoint(eager=True).
     banded = persist_if_batch(
         add_minhash_signature(
             df,
@@ -419,68 +505,29 @@ def minhash_lsh_candidates(
             ).alias("__band_idx", "__band_key"),
         )
     )
-    keys = ["__band_idx", "__band_key"]
-    if max_bucket is not None:
-        # Hot-bucket split: the count aggregate is a cheap partial-agg
-        # shuffle of the key columns only; the hot-key set is tiny in
-        # practice, so AQE turns the anti/semi joins into broadcasts.
-        hot_keys = (
-            banded.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__bc"))
-            .where(F.col("__bc") > max_bucket)
-            .select(*keys)
-        )
-        cold = banded.join(hot_keys, keys, "left_anti")
-        hot = banded.join(hot_keys, keys, "left_semi")
-    else:
-        cold, hot = banded, None
-    a = cold.select(
-        F.col("__id").alias("id_a"), F.col("__sig").alias("sig_a"),
-        *keys,
-    )
-    b = cold.select(
-        F.col("__id").alias("id_b"), F.col("__sig").alias("sig_b"),
-        *keys,
-    )
     # est_jaccard computed PER MATCHED BAND ROW, before the pair-dedup
     # exchange (r12, guide §2.3 shuffle fewer bytes): signatures are
     # unique per id so the estimate is copy-invariant, and the dedup
     # exchange then carries (id_a, id_b, est) — 24 bytes — instead of
     # two num_hashes-long signature arrays per candidate row. A
     # ``min_est`` threshold additionally drops non-candidates map-side
-    # BEFORE they ever shuffle.
+    # BEFORE they ever shuffle. Hot-bucket stars have identical
+    # signatures, so their estimate is exactly 1.0 — never filtered by
+    # any min_est ≤ 1.
     est = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
             lambda v: v == 1,
         )
     ) / F.lit(float(num_hashes))
-    pairs = (
-        a.join(b, keys)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", est.alias("est_jaccard"))
+    return capped_band_pairs(
+        banded,
+        ["__band_idx", "__band_key"],
+        max_bucket,
+        verify=None if min_est is None else est >= float(min_est),
+        pair_cols=(est.alias("est_jaccard"),),
+        star_cols=(F.lit(1.0).alias("est_jaccard"),),
     )
-    if min_est is not None:
-        pairs = pairs.where(F.col("est_jaccard") >= float(min_est))
-    if hot is not None:
-        # Duplicates-by-signature star: within a hot bucket, group on
-        # the full signature (array equi-key — one shuffle, output
-        # linear in bucket size) and link members to the group min.
-        # Singleton-signature members of hot buckets emit nothing.
-        # Identical signatures agree on every hash, so the estimate is
-        # exactly 16/16 = 1.0 — never filtered by any min_est ≤ 1.
-        mins = hot.groupBy(*keys, "__sig").agg(F.min("__id").alias("id_a"))
-        stars = (
-            hot.join(mins, [*keys, "__sig"])
-            .where(F.col("__id") != F.col("id_a"))
-            .select(
-                "id_a",
-                F.col("__id").alias("id_b"),
-                F.lit(1.0).alias("est_jaccard"),
-            )
-        )
-        pairs = pairs.unionByName(stars)
-    return pairs.dropDuplicates(["id_a", "id_b"])
 
 
 def minhash_lsh_candidates_cross(
@@ -551,14 +598,6 @@ def minhash_lsh_candidates_cross(
 
     ref_b = banded(ref, "ref")
     new_b = banded(new, "new")
-    def over_cap(side_df: DataFrame) -> DataFrame:
-        return (
-            side_df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__bc"))
-            .where(F.col("__bc") > max_bucket)
-            .select(*keys)
-        )
-
     # est_jaccard computed per matched band row BEFORE the pair-dedup
     # exchange (r12, same as the self-join variant): signatures are
     # unique per id so the estimate is copy-invariant, and the dedup
@@ -571,7 +610,11 @@ def minhash_lsh_candidates_cross(
         )
     ) / F.lit(float(num_hashes))
     if max_bucket is not None:
-        hot_keys = over_cap(ref_b).unionByName(over_cap(new_b)).distinct()
+        hot_keys = (
+            over_cap(ref_b, keys, max_bucket).select(*keys)
+            .unionByName(over_cap(new_b, keys, max_bucket).select(*keys))
+            .distinct()
+        )
         cold_pairs = (
             ref_b.join(hot_keys, keys, "left_anti")
             .join(new_b.join(hot_keys, keys, "left_anti"), keys)
@@ -909,36 +952,24 @@ def hamming_near_dup_pairs(
     # recompute; the eager-localCheckpoint alternative was A/B-tested
     # (r12) and measured SLOWER on wall (3.96 vs 3.27 s median on
     # dd_image_near_dups — the barrier serializes what the racing
-    # copies overlap). Flip to session.materialize_if_batch on a
+    # copies overlap). Flip to localCheckpoint(eager=True) on a
     # saturated cluster.
     keyed = persist_if_batch(keyed)
     stars = None
     if max_cluster is not None:
-        # Hot-sketch split BEFORE the C(m,k) explode: the group count
-        # is one narrow (sim, id) shuffle, and the hot-sketch set is
-        # tiny in practice so AQE broadcasts the semi/anti probes.
-        hot_sims = (
-            keyed.groupBy("__sim")
-            .agg(F.count(F.lit(1)).alias("__sc"))
-            .where(F.col("__sc") > max_cluster)
-            .select("__sim")
-        )
-        hot = keyed.join(hot_sims, "__sim", "left_semi")
-        reps = hot.groupBy("__sim").agg(F.min("__id").alias("__id"))
-        stars = (
-            hot.join(reps.withColumnRenamed("__id", "id_a"), "__sim")
-            .where(F.col("__id") != F.col("id_a"))
-            .select(
-                "id_a",
-                F.col("__id").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
+        # Hot-sketch split BEFORE the C(m,k) explode: the probe is one
+        # narrow (sim, id) shuffle.
+        hot_sims = over_cap(keyed, ["__sim"], max_cluster).select("__sim")
+        reps, stars = _signature_stars(
+            keyed.join(hot_sims, "__sim", "left_semi"),
+            ["__sim"],
+            F.lit(0).cast("int").alias("hamming"),
         )
         # Representatives re-enter the combo join carrying the whole
         # group's sketch once, so hot groups still meet their
         # Hamming-close external neighbours.
         keyed = keyed.join(hot_sims, "__sim", "left_anti").unionByName(
-            reps.select("__id", "__sim")
+            reps.select(F.col("id_a").alias("__id"), "__sim")
         )
     combos = keyed.select(
         "__id",
@@ -1123,12 +1154,7 @@ def containment_pairs(
         )
         .select(F.col(id_col), "_n", F.xxhash64("_s").alias("s"))
     )
-    hot = (
-        shingles.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("_dfc"))
-        .where(F.col("_dfc") > max_df)
-        .select("s")
-    )
+    hot = over_cap(shingles, ["s"], max_df).select("s")
     posts = shingles.join(F.broadcast(hot), "s", "left_anti")
     a = posts.select(F.col(id_col).alias("doc_a"), "_n", "s")
     b = posts.select(F.col(id_col).alias("doc_b"), "s")
@@ -1304,13 +1330,6 @@ def ngram_tokens(col: Column | str) -> Column:
 
     col = F.col(col) if isinstance(col, str) else col
     return F.split(F.lower(F.trim(col)), PINNED_WS_RE)
-
-
-def token_ngrams(col: Column | str, n: int = 8) -> Column:
-    """Convenience composition — for hot paths stage
-    :func:`ngram_tokens` as its own projection and call
-    :func:`token_ngrams_from_tokens` (see its docstring for why)."""
-    return token_ngrams_from_tokens(ngram_tokens(col), n)
 
 
 def ngram_contamination(

@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectordb_light_spark.functions.vector import cosine_similarity, dot_product
-
+from vectordb_light_spark.operators.dedup import capped_band_pairs, over_cap
 from vectordb_light_spark.session import literal_array
 from vectordb_light_spark.session import persist_if_batch as _persist_if_batch
 
@@ -138,6 +138,30 @@ def add_srp_signature(
         dim = len(df.select(vec_col).first()[0])
     planes = srp_planes(dim, n_planes, seed)
     return df.withColumn(out_col, make_srp_udf(planes)(F.col(vec_col)))
+
+
+def srp_band_keys(sig: Column, n_planes: int, bands: int) -> Column:
+    """Split an ``n_planes``-bit SRP signature into ``bands`` band
+    values (``n_planes // bands`` bits each), the SRP twin of
+    :func:`~vectordb_light_spark.operators.dedup.lsh_band_keys`;
+    posexplode it so different bands never collide in the join key.
+
+    Raises ``ValueError`` for a zero-width band (``bands`` >
+    ``n_planes``): every row would share every band value and the
+    band join would silently go all-pairs."""
+    bits_per_band = n_planes // bands
+    if bits_per_band < 1:
+        raise ValueError(
+            f"zero-width SRP bands: bands={bands} exceeds n_planes={n_planes}"
+        )
+    mask = (1 << bits_per_band) - 1 if bits_per_band < 64 else -1
+    return F.array(
+        *[
+            F.shiftrightunsigned(sig, i * bits_per_band)
+            .bitwiseAND(F.lit(mask).cast("long"))
+            for i in range(bands)
+        ]
+    )
 
 
 def ann_topk_srp(
@@ -335,7 +359,7 @@ def cosine_pairs_exact(
     [arrow_batch × block_rows] instead of [arrow_batch × N], looping
     B-chunks inside the same stage — same output, same plan, O(N·d +
     batch·block) working set. Past driver-collect reach, the LSH tier
-    (:func:`embedding_near_dup_pairs` / ``_banded``) takes over.
+    (:func:`embedding_near_dup_pairs_banded`) takes over.
     """
     spark = df.sparkSession
     # Persist the projection: the broadcast-side collect below and the
@@ -616,10 +640,7 @@ def ann_topk_join_lsh(
             "left_salts) only holds for truncated right buckets; pass "
             "max_left_bucket=None to disable salting instead"
         )
-    bits_per_band = n_planes // bands
-    mask = (1 << bits_per_band) - 1 if bits_per_band < 64 else -1
-    # posexplode keeps (band index, band value) so different bands
-    # never collide in the join key.
+    band_vals = srp_band_keys(F.col("__sig"), n_planes, bands)
     if dim is None:  # dim hint (r6 item 6): skips the first() probe
         dim = len(left.select(left_vec).first()[0])
     planes = srp_planes(dim, n_planes, seed)
@@ -628,17 +649,7 @@ def ann_topk_join_lsh(
         sig = make_srp_udf(planes)(F.col(vec_col))
         with_sig = df.select(F.col(id_col), F.col(vec_col), sig.alias("__sig"))
         return with_sig.select(
-            id_col,
-            vec_col,
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftrightunsigned(F.col("__sig"), i * bits_per_band)
-                        .bitwiseAND(F.lit(mask).cast("long"))
-                        for i in range(bands)
-                    ]
-                )
-            ).alias("__b_idx", "__b_val"),
+            id_col, vec_col, F.posexplode(band_vals).alias("__b_idx", "__b_val")
         )
 
     a = banded(left, left_id, left_vec)
@@ -668,14 +679,12 @@ def ann_topk_join_lsh(
         # hot-key count and both probes once.
         a = _persist_if_batch(a)
         hot_keys = (
-            a.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__lc"))
-            .where(F.col("__lc") > max_left_bucket)
+            over_cap(a, keys, max_left_bucket)
             .withColumn(
                 "__salts",
                 F.least(
                     F.lit(left_salts),
-                    F.ceil(F.col("__lc") / F.lit(max_left_bucket)),
+                    F.ceil(F.col("__bc") / F.lit(max_left_bucket)),
                 ).cast("int"),
             )
             .select(*keys, "__salts")
@@ -765,9 +774,8 @@ def embedding_near_dup_pairs_banded(
     dim: int | None = None,
 ) -> DataFrame:
     """High-threshold near-dup pairs via SRP BANDING (minhash-style
-    S-curve, probabilistic recall) — the preferred scale path when
-    the threshold is high enough that the pigeonhole variant's coarse
-    blocks would flood the join.
+    S-curve, probabilistic recall) — the scale tier
+    :func:`cosine_pairs` dispatches to past broadcast reach.
 
     Three sieves, each far cheaper than the next stage's unit cost:
       1. band equi-join: 64-bit signature split into ``bands`` exact-
@@ -779,16 +787,16 @@ def embedding_near_dup_pairs_banded(
     Shuffle carries (band key, id, one long); vectors join back late.
 
     ``max_bucket`` is the hot-bucket star collapse shared with the
-    other LSH tiers: identical embeddings share every band key by
-    construction, so buckets above the cap link members to their
-    signature-group min id (still cosine-verified) instead of
-    emitting |bucket|²/2 pairs in one task.
+    other LSH tiers (``dedup.capped_band_pairs``): identical
+    embeddings share every band key by construction, so buckets above
+    the cap link members to their signature-group min id (still
+    cosine-verified) instead of emitting |bucket|²/2 pairs in one task.
     """
     import math
 
+    band_vals = srp_band_keys(F.col("__sig"), n_planes, bands)
     theta = math.acos(min(max(threshold, -1.0), 1.0))
     h_max = math.ceil(n_planes * theta / math.pi * hamming_slack)
-    bits_per_band = n_planes // bands
 
     indexed = _persist_if_batch(
         add_srp_signature(
@@ -797,166 +805,17 @@ def embedding_near_dup_pairs_banded(
         ).select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"), "__sig")
     )
 
-    mask = (1 << bits_per_band) - 1 if bits_per_band < 64 else -1
     banded = indexed.select(
-        "__id",
-        "__sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("__sig"), i * bits_per_band)
-                    .bitwiseAND(F.lit(mask).cast("long"))
-                    for i in range(bands)
-                ]
-            )
-        ).alias("__b_idx", "__b_val"),
+        "__id", "__sig", F.posexplode(band_vals).alias("__b_idx", "__b_val")
     )
-    keys = ["__b_idx", "__b_val"]
     if max_bucket is not None:
         banded = _persist_if_batch(banded)
-        hot_keys = (
-            banded.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__bc"))
-            .where(F.col("__bc") > max_bucket)
-            .select(*keys)
-        )
-        cold = banded.join(hot_keys, keys, "left_anti")
-        hot = banded.join(hot_keys, keys, "left_semi")
-    else:
-        cold, hot = banded, None
-    a = cold.select(
-        F.col("__id").alias("id_a"), F.col("__sig").alias("sig_a"),
-        *keys,
+    pairs = capped_band_pairs(
+        banded,
+        ["__b_idx", "__b_val"],
+        max_bucket,
+        verify=F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= h_max,
     )
-    b = cold.select(
-        F.col("__id").alias("id_b"), F.col("__sig").alias("sig_b"),
-        *keys,
-    )
-    pairs = (
-        a.join(b, keys)
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= h_max)
-        .select("id_a", "id_b")
-    )
-    if hot is not None:
-        mins = hot.groupBy(*keys, "__sig").agg(F.min("__id").alias("id_a"))
-        stars = (
-            hot.join(mins, [*keys, "__sig"])
-            .where(F.col("__id") != F.col("id_a"))
-            .select("id_a", F.col("__id").alias("id_b"))
-        )
-        pairs = pairs.unionByName(stars)
-    pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    va = indexed.select(F.col("__id").alias("id_a"), F.col("__v").alias("va"))
-    vb = indexed.select(F.col("__id").alias("id_b"), F.col("__v").alias("vb"))
-    return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", dot_product("va", "vb"))
-        .where(F.col("cosine") >= F.lit(threshold))
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    n_planes: int = DEFAULT_PLANES,
-    seed: int = DEFAULT_SEED,
-    max_hamming: int = 2,
-    n_docs_hint: int | None | str = "auto",
-    max_bucket: int | None = 128,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs at scale: SRP combo-block
-    join (equi-join on k-of-m signature block combinations within
-    Hamming ≤ max_hamming — the same scheme as
-    ``dedup.simhash_block_scheme``, output-invariant by pigeonhole +
-    the exact Hamming/cosine verify) → exact cosine verify.
-    ``n_docs_hint`` defaults to ``"auto"``: a ``df.count()`` sizes the
-    key width to the corpus so the adaptive scheme engages without
-    caller knowledge (pass an int or ``None`` to skip the count).
-
-    Shuffle carries (block key, id, signature); the O(N²) verify runs
-    only inside blocks. cos θ ≥ 0.9 ⇒ angle ≤ 25.8° ⇒ expected sig
-    Hamming ≤ n_planes·angle/π ≈ 2.3 bits at 16 planes — the default
-    radius is matched to the default threshold. At scale, pass
-    ``n_docs_hint`` (widens keys; raise ``n_planes`` with it — 16
-    sign bits cannot separate 10⁹ rows no matter the blocking) and
-    keep ``max_bucket`` on: identical embeddings share identical
-    signatures BY CONSTRUCTION, so a duplicate cluster of D rows
-    would emit D²/2 block-join pairs in one task; buckets above the
-    cap instead link members to their signature-group min id (a
-    star, still cosine-verified) — bounded at cap² pairs per bucket,
-    cluster connectivity preserved for identical-signature groups.
-    """
-    from vectordb_light_spark.operators.dedup import (
-        _block_combo_keys,
-        simhash_block_scheme,
-    )
-
-    if n_docs_hint == "auto":
-        n_docs_hint = df.count() if not df.isStreaming else None
-    m, k = simhash_block_scheme(max_hamming, n_planes, n_docs_hint)
-    indexed = _persist_if_batch(
-        add_srp_signature(
-            df, vec_col=vec_col, out_col="__sig", n_planes=n_planes,
-            seed=seed, dim=dim,
-        ).select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"), "__sig")
-    )
-
-    # Block join on (id, sig) ONLY — 16 bytes/row through the shuffle;
-    # vectors are joined back for the surviving candidates afterwards
-    # (late materialization, same principle as the read path's Q6).
-    slim = indexed.select("__id", "__sig")
-    blocks = slim.select(
-        "__id",
-        "__sig",
-        F.posexplode(
-            _block_combo_keys(F.col("__sig"), n_planes, m, k)
-        ).alias("__b_idx", "__b_val"),
-    )
-    keys = ["__b_idx", "__b_val"]
-    if max_bucket is not None:
-        blocks = _persist_if_batch(blocks)
-        hot_keys = (
-            blocks.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__bc"))
-            .where(F.col("__bc") > max_bucket)
-            .select(*keys)
-        )
-        cold = blocks.join(hot_keys, keys, "left_anti")
-        hot = blocks.join(hot_keys, keys, "left_semi")
-    else:
-        cold, hot = blocks, None
-    a = cold.select(
-        F.col("__id").alias("id_a"), F.col("__sig").alias("sig_a"),
-        *keys,
-    )
-    b = cold.select(
-        F.col("__id").alias("id_b"), F.col("__sig").alias("sig_b"),
-        *keys,
-    )
-    pairs = (
-        a.join(b, keys)
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= max_hamming
-        )
-        .select("id_a", "id_b")
-    )
-    if hot is not None:
-        mins = hot.groupBy(*keys, "__sig").agg(F.min("__id").alias("id_a"))
-        stars = (
-            hot.join(mins, [*keys, "__sig"])
-            .where(F.col("__id") != F.col("id_a"))
-            .select("id_a", F.col("__id").alias("id_b"))
-        )
-        pairs = pairs.unionByName(stars)
-    pairs = pairs.dropDuplicates(["id_a", "id_b"])
     va = indexed.select(F.col("__id").alias("id_a"), F.col("__v").alias("va"))
     vb = indexed.select(F.col("__id").alias("id_b"), F.col("__v").alias("vb"))
     return (
@@ -1629,8 +1488,8 @@ def sparse_cosine_matches(
     # dot join. The eager-localCheckpoint alternative (stops AQE's
     # concurrent stages racing the cache) was A/B-tested (r12) and
     # measured slightly slower on wall (2.48 vs 2.30 s median on
-    # pipe_semantic_decontaminate); flip to materialize_if_batch on a
-    # saturated cluster.
+    # pipe_semantic_decontaminate); flip to localCheckpoint(eager=True)
+    # on a saturated cluster.
     from vectordb_light_spark.session import persist_if_batch
 
     lp = persist_if_batch(lp)

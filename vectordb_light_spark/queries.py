@@ -2976,10 +2976,9 @@ def dd_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-Python feature-hash tier (functions/embedding.py
     feature_hash_weights): integer bucket weights densified to a
     64-dim vector JVM-side, which uniquely gives this entry an exact
-    DuckDB oracle. Beyond broadcast reach the LSH tiers take over —
-    embedding_near_dup_pairs (pigeonhole Hamming guarantee) and
-    embedding_near_dup_pairs_banded (S-curve banding), both
-    recall-tested in tests/test_similarity.py; auto-tier dispatch in
+    DuckDB oracle. Beyond broadcast reach the SRP-banded LSH tier
+    embedding_near_dup_pairs_banded (S-curve banding, recall-tested in
+    tests/test_similarity.py) takes over; auto-tier dispatch in
     operators/similarity.py picks by a count estimate."""
     from vectordb_light_spark.functions.embedding import feature_hash_weights
     from vectordb_light_spark.operators.similarity import cosine_pairs_exact

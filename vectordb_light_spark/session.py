@@ -216,24 +216,6 @@ def release_persisted() -> int:
     return n
 
 
-def materialize_if_batch(df: DataFrame) -> DataFrame:
-    """EAGERLY materialize a DataFrame consumed by multiple downstream
-    branches whose query stages AQE submits CONCURRENTLY (e.g. the two
-    sides of a self-join): a plain ``persist`` only helps once some
-    job has populated the cache, so concurrent consumer stages racing
-    before that each recompute the full upstream pipeline (r12
-    measurement: the banded-minhash signature stage ran twice inside
-    one leakage-split run, and a lazily checkpointed curate gate chain
-    ran four times — at 100 TB those are whole corpus passes). The
-    eager localCheckpoint runs the pipeline exactly once; every
-    consumer reads the materialized blocks. No-op for streaming
-    inputs (same contract as :func:`persist_if_batch`, which remains
-    the right tool when consumers run strictly sequentially)."""
-    if df.isStreaming:
-        return df
-    return df.localCheckpoint(eager=True)
-
-
 def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Widen a narrow DataFrame to the cluster's core count before an
     expensive per-row stage (pandas UDF / mapInPandas / heavy string

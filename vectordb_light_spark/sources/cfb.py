@@ -270,15 +270,6 @@ def _parse_sst(blocks: list[bytes]) -> list[str]:
     return [cur.read_string() for _ in range(min(unique, 1 << 22))]
 
 
-def _short_string(raw: bytes, off: int) -> str:
-    """BIFF8 ShortXLUnicodeString (1-byte length)."""
-    cch = raw[off]
-    grbit = raw[off + 1]
-    if grbit & 0x01:
-        return raw[off + 2 : off + 2 + cch * 2].decode("utf-16-le", "replace")
-    return raw[off + 2 : off + 2 + cch].decode("latin-1", "replace")
-
-
 def xls_text(data: bytes) -> str | None:
     """XLS → text: per sheet (BOUNDSHEET order), cells in (row, col)
     order, numbers rendered as Python floats (xlrd parity with the
