@@ -762,6 +762,78 @@ def test_srp_zero_width_bands_raise(spark):
         ann_topk_join_lsh(left, right, n_planes=16, bands=32)
 
 
+def test_banded_tier_verifies_unnormalized_cosine(spark):
+    """cosine_pairs(assume_normalized=False) past broadcast reach: the
+    banded tier takes the flag and verifies with the norm-guarded
+    cosine, so every pair's score is a true cosine in [-1, 1], not
+    the raw dot product of unnormalized vectors."""
+    from vectordb_light_spark.operators.similarity import cosine_pairs
+
+    rng = np.random.default_rng(5)
+    mat = rng.normal(size=(40, 16)) * rng.uniform(0.2, 20.0, size=(40, 1))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(mat)],
+        "vec_id long, embedding array<double>",
+    )
+    got = cosine_pairs(
+        df, tier="lsh", dim=16, assume_normalized=False, threshold=-1.0, bands=32
+    ).collect()
+    assert len(got) > 40
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    for r in got:
+        assert -1.0 <= r["cosine"] <= 1.0, r
+        assert abs(r["cosine"] - unit[r["id_a"]] @ unit[r["id_b"]]) < 1e-9, r
+
+
+def test_ann_tier_build_round_trip_cap(spark, emb, query):
+    """Building an ANN top-k is one parsed SQL text for the exact rank
+    (plus one parsed ADC expression for PQ): a bounded number of py4j
+    round trips, not one per expression node. Median of 3 warmed
+    builds — py4j garbage collection adds occasional spikes."""
+    import statistics
+
+    from vectordb_light_spark.operators.similarity import (
+        add_pq_codes,
+        ann_topk_pq,
+        train_pq_codebooks,
+    )
+
+    cents = train_ivf_centroids(emb, n_centroids=8, n_iters=3)
+    books = train_pq_codebooks(emb, m=16, n_codes=64)
+    srp = add_srp_signature(emb, n_planes=16)
+    ivf = add_ivf_cluster(emb, cents)
+    pq = add_pq_codes(emb, books)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def median_trips(build):
+        build()  # warm
+        counts = []
+        for _ in range(3):
+            calls = []
+
+            def counting(*a, **kw):
+                calls.append(1)
+                return send(*a, **kw)
+
+            client.send_command = counting
+            try:
+                build()
+            finally:
+                client.send_command = send
+            counts.append(len(calls))
+        return statistics.median(counts)
+
+    caps = {
+        "srp": (lambda: ann_topk_srp(srp, query, k=10, probe_hamming=6), 25),
+        "ivf": (lambda: ann_topk_ivf(ivf, cents, query, k=10, nprobe=3), 25),
+        "pq": (lambda: ann_topk_pq(pq, books, query, k=10, rerank_pool=50), 150),
+    }
+    for name, (build, cap) in caps.items():
+        trips = median_trips(build)
+        assert 0 < trips <= cap, (name, trips)
+
+
 def test_topk_join_left_bucket_salting_is_output_neutral(spark):
     """r4: a hot LEFT bucket (boilerplate cluster of lefts sharing a
     band key) is salted across reducers against replicas of the

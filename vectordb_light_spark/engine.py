@@ -203,6 +203,17 @@ class VectorDB:
         """Q1: embed with the database's own stored embedder spec."""
         return embed_query(query_text, self.meta["embedder"])
 
+    def _query_vector(
+        self, query_text: str | None, query_vector: list[float] | None
+    ) -> list[float]:
+        """The search entry points' query: ``query_vector`` as given,
+        else the embedding of ``query_text``."""
+        if query_vector is not None:
+            return query_vector
+        if query_text is None:
+            raise ValueError("need query_text or query_vector")
+        return self.embed(query_text)
+
     def _swap_vectors(
         self, tier: str, write, meta: dict, *, artifacts: dict | None = None
     ) -> None:
@@ -313,10 +324,7 @@ class VectorDB:
         from vectordb_light_spark.operators.ingest import load_index_artifacts
         from vectordb_light_spark.operators.similarity import ann_topk_pq
 
-        if query_vector is None:
-            if query_text is None:
-                raise ValueError("need query_text or query_vector")
-            query_vector = self.embed(query_text)
+        query_vector = self._query_vector(query_text, query_vector)
         books = np.asarray(load_index_artifacts(self.path)["pq_codebooks"])
         return ann_topk_pq(
             self.vectors,
@@ -375,10 +383,7 @@ class VectorDB:
         from vectordb_light_spark.operators.ingest import load_index_artifacts
         from vectordb_light_spark.operators.similarity import ann_topk_ivf
 
-        if query_vector is None:
-            if query_text is None:
-                raise ValueError("need query_text or query_vector")
-            query_vector = self.embed(query_text)
+        query_vector = self._query_vector(query_text, query_vector)
         centroids = np.asarray(load_index_artifacts(self.path)["ivf_centroids"])
         return ann_topk_ivf(
             self.vectors,
@@ -441,10 +446,7 @@ class VectorDB:
         :meth:`build_srp_index` or a stream maintained with
         ``index_srp=True``). At full radius (= n_planes) this degrades
         gracefully to the exact scan."""
-        if query_vector is None:
-            if query_text is None:
-                raise ValueError("need query_text or query_vector")
-            query_vector = self.embed(query_text)
+        query_vector = self._query_vector(query_text, query_vector)
         where = None
         if ann_radius is not None:
             if "srp_sig" not in self._columns:
@@ -452,17 +454,13 @@ class VectorDB:
                     "no SRP index on this database — run build_srp_index() "
                     "or ingest with index_srp=True"
                 )
-            from vectordb_light_spark.operators.similarity import (
-                srp_planes,
-                srp_signature_of,
-            )
+            from vectordb_light_spark.operators.similarity import srp_radius_sql
 
             spec = self.meta.get("srp_index", {"n_planes": 16, "seed": 42})
-            planes = srp_planes(
-                len(query_vector), int(spec["n_planes"]), int(spec["seed"])
+            where = srp_radius_sql(
+                query_vector, ann_radius,
+                n_planes=int(spec["n_planes"]), seed=int(spec["seed"]),
             )
-            qsig = srp_signature_of(query_vector, planes)
-            where = f"bit_count(srp_sig ^ {qsig}L) <= {int(ann_radius)}"
 
         # Write-path invariant: stored vectors are L2-normalized.
         scored, ranked, args = search_sql(
@@ -535,10 +533,7 @@ class VectorDB:
         mmr_score, mmr_rank, text, file_name) ordered by mmr_rank."""
         from vectordb_light_spark.operators.search import mmr_rerank
 
-        if query_vector is None:
-            if query_text is None:
-                raise ValueError("need query_text or query_vector")
-            query_vector = self.embed(query_text)
+        query_vector = self._query_vector(query_text, query_vector)
         pool = self.search(
             query_vector=query_vector,
             params=SearchParams(k=fetch_k, threshold=0.0),

@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_light_spark.session import rebalance
+
 DEFAULT_DIM = 64
 
 #: (dim, seed) → {token: (bucket, sign)} — per-process memo for the
@@ -435,39 +437,28 @@ def embed_documents(
     *,
     text_col: str = "text",
     out_col: str = "vector",
-    length_sort: bool = True,
-    encode_batch_size: int | None = None,
-    rebalance: bool = True,
 ) -> DataFrame:
     """Add an L2-normalized float32 ``array<float>`` embedding column.
 
     One mapInPandas stage; all input columns pass through. The encoder
-    is resolved per executor process from ``spec`` and cached. With
-    ``length_sort`` (E2) rows are pre-sorted within partitions by text
-    length so real transformer batches pad near-rectangularly; for the
+    is resolved per executor process from ``spec`` and cached, and
+    encodes ``model_encode_batch_size(spec)`` texts at a time (the E4
+    table). Rows are pre-sorted within partitions by text length (E2)
+    so real transformer batches pad near-rectangularly; for the
     hashing encoder it's a no-op cost-wise either way.
-    ``encode_batch_size=None`` resolves the model-aware size from the
-    E4 table (``model_encode_batch_size``).
 
-    ``rebalance`` widens narrow inputs (e.g. one small parquet file →
-    one partition) to the cluster's full core count before the embed
-    stage: encoding is the expensive stage of the write path, and a
-    narrow scan would otherwise serialize it on one core. The shuffle
-    moves only the pre-embed rows (id + text), never vectors.
+    Narrow inputs (e.g. one small parquet file → one partition) are
+    widened to the cluster's full core count first
+    (:func:`~vectordb_light_spark.session.rebalance`): encoding is the
+    expensive stage of the write path, and a narrow scan would
+    otherwise serialize it on one core. The shuffle moves only the
+    pre-embed rows (id + text), never vectors.
     """
-    if encode_batch_size is None:
-        encode_batch_size = model_encode_batch_size(spec)
+    encode_batch_size = model_encode_batch_size(spec)
     in_schema = df.schema
     fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema)
     out_schema = f"{fields}, `{out_col}` array<float>"
-
-    if rebalance and not df.isStreaming:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
-
-    if length_sort:
-        df = df.sortWithinPartitions(F.length(text_col).desc())
+    df = rebalance(df).sortWithinPartitions(F.length(text_col).desc())
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         enc = _cached_encoder(spec)

@@ -8,9 +8,12 @@ Reference pipeline (vector_db_query.py:140-263) in order:
   Q9 document-type equality filter → Q10 rank-ordered projection.
 
 Q2-Q10 are ONE SQL text rendered in one place (:func:`search_sql`)
-and run by both :func:`topk_cosine` and ``VectorDB.search`` in a
-single ``spark.sql`` call: a DataFrame-API build of the same plan
-costs hundreds of py4j round trips. Each row is scored once,
+and built in a single ``spark.sql`` call — by ``VectorDB.search``
+over its view, and by :func:`_exact_topk` for :func:`topk_cosine`
+and the ANN tiers' exact rank (operators/similarity.py: the SRP/IVF
+candidate filter is the text's ``where``, the PQ re-rank pool its
+source). A DataFrame-API build of the same plan costs hundreds of
+py4j round trips. Each row is scored once,
 JVM-side; the top-k order, the threshold and ``VectorDB``'s
 on-read stats all read that one column. User strings (the search
 term, the document type) are bound as named parameters, never
@@ -28,7 +31,10 @@ each task keeps a k-sized heap, the driver merges per-partition heaps;
 no shuffle of the full table, no sort. The scan prunes to
 (id, vector[, filter cols]) via Parquet column pruning. For repeated
 queries, batch them via :func:`topk_cosine_batch` (one scan for Q
-queries) rather than Q scans.
+queries) rather than Q scans. Its per-partition local top-k and
+per-query window rank (:func:`_batched_topk`) are also the batched
+ADC search's (``similarity.ann_topk_pq_batch``): the two differ only
+in how a score block is computed.
 """
 
 from __future__ import annotations
@@ -155,6 +161,34 @@ def search_sql(
     return scored, ranked, args
 
 
+def _exact_topk(
+    vectors: DataFrame,
+    query: list[float],
+    params: SearchParams,
+    *,
+    id_col: str,
+    vec_col: str,
+    where: str | None = None,
+) -> DataFrame:
+    """:func:`search_sql`'s ranked text over ``vectors``, its scan
+    narrowed by ``where``, built in one ``spark.sql`` call;
+    ``vectors`` is a temp view only while the text is analyzed."""
+    spark, view = vectors.sparkSession, f"topk_{uuid.uuid4().hex}"
+    _, ranked, args = search_sql(
+        view, vectors.columns, query, params,
+        id_col=id_col, vec_col=vec_col, where=where,
+    )
+    vectors.createOrReplaceTempView(view)
+    try:
+        return spark.sql(ranked, args)
+    finally:
+        # The session catalog's drop: spark.catalog.dropTempView, and so
+        # spark.sql(..., vectors=df), also uncaches the view's plan,
+        # which would unpersist a cached ``vectors`` for every later
+        # consumer. The analyzed result no longer needs the name.
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+
+
 def topk_cosine(
     vectors: DataFrame,
     query: list[float],
@@ -174,19 +208,7 @@ def topk_cosine(
     (the reference's numpy argpartition tie order is unspecified;
     SURVEY §2.8 requires an explicit tiebreaker).
     """
-    spark, view = vectors.sparkSession, f"topk_{uuid.uuid4().hex}"
-    _, ranked, args = search_sql(
-        view, vectors.columns, query, params, id_col=id_col, vec_col=vec_col
-    )
-    vectors.createOrReplaceTempView(view)
-    try:
-        return spark.sql(ranked, args)
-    finally:
-        # The session catalog's drop: spark.catalog.dropTempView, and so
-        # spark.sql(..., vectors=df), also uncaches the view's plan,
-        # which would unpersist a cached ``vectors`` for every later
-        # consumer. The analyzed result no longer needs the name.
-        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+    return _exact_topk(vectors, query, params, id_col=id_col, vec_col=vec_col)
 
 
 def range_search(
@@ -226,60 +248,34 @@ def range_search(
     )
 
 
-def topk_cosine_batch(
-    vectors: DataFrame,
-    queries: DataFrame,
+def _batched_topk(
+    scan: DataFrame,
+    qids: np.ndarray,
+    payload,
+    score_block,
     *,
-    k: int = 6,
-    threshold: float = 0.0,
-    id_col: str = "id",
-    vec_col: str = "vector",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    assume_normalized: bool = False,
+    k: int,
+    id_col: str,
+    query_id_col: str,
 ) -> DataFrame:
-    """Top-k for MANY queries in one scan of the vectors table.
-
-    The query set (small by contract — it is broadcast) is collected
-    into a dense matrix and shipped to executors; every vectors
-    partition computes its block × queriesᵀ with ONE BLAS matmul per
-    Arrow batch and emits only its per-query local top-k, so the
-    shuffle to the final per-query window rank carries ≤ k rows per
-    query per partition — the O(N·M) similarity matrix never exists as
-    rows. (A crossJoin + per-row higher-order-function dot product
-    computes the same thing ~20× slower: the HOF lambda runs in the
-    expression interpreter per row. SCALING.md's first table has this
-    operator's timings at x1–x16.)
-    Local and global orderings are identical (similarity desc, id asc),
-    which makes the two-phase top-k exact, ties included.
-
-    This is the scale path for query throughput and for N×M similarity
-    joins with a small N: one pass over 100 TB serves thousands of
-    queries. For large×large, use the LSH tiers in
-    operators.similarity instead.
+    """The one batched top-k: every partition of ``scan`` scores each
+    Arrow batch against ALL queries at once (``score_block(pdf,
+    payload)`` returns the [rows, queries] score block) and emits only
+    each query's local top-k, so the shuffle into the per-query window
+    rank carries ≤ k rows per query per partition. Local and global
+    orders are identical (score desc, id asc), which makes the
+    two-phase top-k exact, ties included. ``(qids, payload)`` is
+    broadcast once. Returns (query id, id, similarity_score, rank ≤ k).
     """
-    spark = vectors.sparkSession
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    if not assume_normalized and len(qmat):
-        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-        np.maximum(qn, 1e-12, out=qn)
-        qmat = qmat / qn
-    b_q = spark.sparkContext.broadcast((qids, qmat))
+    b = scan.sparkSession.sparkContext.broadcast((qids, payload))
 
     def run(batches):
-        qids_, qmat_ = b_q.value
+        qids_, payload_ = b.value
         for pdf in batches:
             if not len(pdf) or not len(qids_):
                 continue
             a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a_mat = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            if not assume_normalized:
-                n = np.linalg.norm(a_mat, axis=1, keepdims=True)
-                np.maximum(n, 1e-12, out=n)
-                a_mat = a_mat / n
-            sims = np.clip(a_mat @ qmat_.T, 0.0, 1.0)  # [n_block, n_queries]
+            sims = score_block(pdf, payload_)  # [n_block, n_queries]
             kk = min(k, sims.shape[0])
             out_q, out_i, out_s = [], [], []
             for j in range(sims.shape[1]):
@@ -301,17 +297,66 @@ def topk_cosine_batch(
                 }
             )
 
-    local = vectors.select(id_col, vec_col).mapInPandas(
+    local = scan.mapInPandas(
         run, schema=f"{query_id_col} long, {id_col} long, similarity_score double"
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("similarity_score").desc(), F.col(id_col).asc()
     )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(k))
-        .where(F.col("similarity_score") >= F.lit(threshold))
+    return local.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= F.lit(k)
     )
+
+
+def topk_cosine_batch(
+    vectors: DataFrame,
+    queries: DataFrame,
+    *,
+    k: int = 6,
+    threshold: float = 0.0,
+    id_col: str = "id",
+    vec_col: str = "vector",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    assume_normalized: bool = False,
+) -> DataFrame:
+    """Top-k for MANY queries in one scan of the vectors table.
+
+    The query set (small by contract — it is broadcast) is collected
+    into a dense matrix and shipped to executors; every vectors
+    partition computes its block × queriesᵀ with ONE BLAS matmul per
+    Arrow batch and keeps only its per-query local top-k
+    (:func:`_batched_topk`) — the O(N·M) similarity matrix never
+    exists as rows. (A crossJoin + per-row higher-order-function dot
+    product computes the same thing ~20× slower: the HOF lambda runs
+    in the expression interpreter per row. SCALING.md's first table
+    has this operator's timings at x1–x16.)
+
+    This is the scale path for query throughput and for N×M similarity
+    joins with a small N: one pass over 100 TB serves thousands of
+    queries. For large×large, use the LSH tiers in
+    operators.similarity instead.
+    """
+    qrows = queries.select(query_id_col, query_vec_col).collect()
+    qids = np.array([r[0] for r in qrows], dtype=np.int64)
+    qmat = np.array([list(r[1]) for r in qrows], dtype=np.float64)
+    if not assume_normalized and len(qmat):
+        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
+        np.maximum(qn, 1e-12, out=qn)
+        qmat = qmat / qn
+
+    def cosine_block(pdf, qmat_):
+        a_mat = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+        if not assume_normalized:
+            n = np.linalg.norm(a_mat, axis=1, keepdims=True)
+            np.maximum(n, 1e-12, out=n)
+            a_mat = a_mat / n
+        return np.clip(a_mat @ qmat_.T, 0.0, 1.0)
+
+    return _batched_topk(
+        vectors.select(id_col, vec_col), qids, qmat, cosine_block,
+        k=k, id_col=id_col, query_id_col=query_id_col,
+    ).where(F.col("similarity_score") >= F.lit(threshold))
 
 
 def mmr_rerank(

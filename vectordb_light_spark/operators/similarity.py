@@ -5,8 +5,11 @@ near-duplicate detection.
 The reference's FLAT index is an exact scan (SURVEY §2.5 Q2) — fine
 for one machine, linear-in-N per query. These operators are the
 100 TB path SURVEY §4.3.2 sketches: cut the scanned fraction with a
-cheap JVM-side prefilter, then run the exact dot-product ranking only
-inside the surviving candidate set. Both index types are plain
+cheap JVM-side prefilter, then run the exact search's rank only
+inside the surviving candidate set: the prefilter is SQL text
+(:func:`srp_radius_sql`, :func:`ivf_probe_sql`) passed as the
+``where`` of ``operators/search.py``'s one exact-rank text, and PQ's
+re-rank pool goes through the same text. Both index types are plain
 DataFrame columns — no native index structure, so they inherit
 Parquet partition pruning, predicate pushdown, and AQE for free:
 
@@ -39,7 +42,13 @@ from pyspark.sql import functions as F
 
 from vectordb_light_spark.functions.vector import cosine_similarity, dot_product
 from vectordb_light_spark.operators.dedup import capped_band_pairs, over_cap
-from vectordb_light_spark.session import literal_array
+from vectordb_light_spark.operators.search import (
+    SearchParams,
+    _batched_topk,
+    _exact_topk,
+    _quote,
+)
+from vectordb_light_spark.session import literal_array_sql
 from vectordb_light_spark.session import persist_if_batch as _persist_if_batch
 
 DEFAULT_PLANES = 16
@@ -58,35 +67,12 @@ def srp_planes(dim: int, n_planes: int = DEFAULT_PLANES, seed: int = DEFAULT_SEE
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def srp_signature_col(vec_col: Column | str, planes: np.ndarray) -> Column:
-    """Sign-bit signature as one long: bit i = 1 iff V·Pᵢ ≥ 0.
-    Pure Catalyst expression form — one dot product per plane, summed
-    bit weights. NOTE: higher-order-function dots run in the
-    expression interpreter (one lambda fold per plane per row); for
-    table-side indexing use :func:`make_srp_udf` (one BLAS matmul per
-    Arrow batch, ~50× faster at 64 planes). This form remains for
-    one-off/derived-column use where a Python stage is unwanted."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = []
-    for i, plane in enumerate(planes):
-        p = literal_array(plane, "double")
-        weight = -(1 << 63) if i == 63 else (1 << i)
-        bits.append(
-            F.when(dot_product(v, p) >= 0, F.lit(weight).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def make_srp_udf(planes: np.ndarray):
     """Arrow-batched SRP signature: [n,d] block @ planesᵀ → sign bits →
-    packed uint64 viewed as long (two's complement — identical words
-    to :func:`srp_signature_col` / :func:`srp_signature_of`; asserted
-    in tests). Null vectors sign to 0 like the expression form."""
+    packed uint64 viewed as long (two's complement — the same words as
+    the driver-side :func:`srp_signature_of`, which
+    ``tests/test_similarity.py`` checks on 16-plane signatures). Null
+    vectors sign to 0."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -164,6 +150,22 @@ def srp_band_keys(sig: Column, n_planes: int, bands: int) -> Column:
     )
 
 
+def srp_radius_sql(
+    query: list[float],
+    radius: int,
+    *,
+    sig_col: str = "srp_sig",
+    n_planes: int = DEFAULT_PLANES,
+    seed: int = DEFAULT_SEED,
+) -> str:
+    """The SRP Hamming-ball candidate filter as SQL:
+    ``bit_count(sig XOR qsig) <= radius`` — a long-int predicate with
+    zero vector math on pruned rows, shared by :func:`ann_topk_srp`
+    and ``VectorDB.search(ann_radius=)``."""
+    qsig = srp_signature_of(query, srp_planes(len(query), n_planes, seed))
+    return f"bit_count({_quote(sig_col)} ^ ({qsig}L)) <= {int(radius)}"
+
+
 def ann_topk_srp(
     indexed: DataFrame,
     query: list[float],
@@ -177,32 +179,22 @@ def ann_topk_srp(
     seed: int = DEFAULT_SEED,
     assume_normalized: bool = True,
 ) -> DataFrame:
-    """ANN top-k: Hamming-ball candidate filter on the signature, then
-    exact cosine rank within candidates.
+    """ANN top-k: Hamming-ball candidate filter on the signature
+    (:func:`srp_radius_sql`), then the exact search's cosine rank
+    within candidates. Returns the input columns minus the vector,
+    plus ``similarity_score``, in rank order.
 
-    The filter is ``bit_count(sig XOR qsig) <= probe_hamming`` — a
-    long-int scan with zero vector math on pruned rows. Expected
-    candidate fraction at radius r: Σ_{i≤r} C(n,i)·pⁱ(1-p)ⁿ⁻ⁱ over the
-    per-bit match probability p (angle-dependent); raise the radius
-    for recall, lower it for speed.
+    Expected candidate fraction at radius r: Σ_{i≤r} C(n,i)·pⁱ(1-p)ⁿ⁻ⁱ
+    over the per-bit match probability p (angle-dependent); raise the
+    radius for recall, lower it for speed.
     """
-    planes = srp_planes(len(query), n_planes, seed)
-    qsig = srp_signature_of(query, planes)
-    cand = indexed.where(
-        F.bit_count(F.col(sig_col).bitwiseXOR(F.lit(qsig))) <= probe_hamming
+    where = srp_radius_sql(
+        query, probe_hamming, sig_col=sig_col, n_planes=n_planes, seed=seed
     )
-    q = literal_array(query, "double")
-    sim = dot_product(vec_col, q)
-    if not assume_normalized:
-        from vectordb_light_spark.functions.vector import cosine_similarity
-
-        sim = cosine_similarity(vec_col, q)
-    return (
-        cand.withColumn("similarity_score", F.least(F.greatest(sim, F.lit(0.0)), F.lit(1.0)))
-        .orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .drop(vec_col)
-    )
+    params = SearchParams(k=k, threshold=0.0, assume_normalized=assume_normalized)
+    return _exact_topk(
+        indexed, query, params, id_col=id_col, vec_col=vec_col, where=where
+    ).drop("rank")
 
 
 # ---------------------------------------------------------------------------
@@ -249,28 +241,10 @@ def train_ivf_centroids(
     return centroids
 
 
-def _nearest_centroid_col(vec_col: str, centroids: np.ndarray) -> Column:
-    """argmax dot(v, cᵢ) over broadcast centroid literals (unit vectors
-    ⇒ max dot ≡ min L2). Expressed as a literal array of structs +
-    array_max; all JVM-side."""
-    scored = F.array(
-        *[
-            F.struct(
-                dot_product(vec_col, literal_array(c, "double")).alias("d"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    # array_max on struct<d,i> orders lexicographically: max d, then max i.
-    return F.array_max(scored)["i"]
-
-
 def make_ivf_assign_udf(centroids: np.ndarray):
     """Arrow-batched nearest-centroid assignment: one block matmul +
-    argmax per batch. Tie behavior matches the expression form
-    (:func:`_nearest_centroid_col`, array_max → LARGEST index on equal
-    dots): argmax runs on the reversed column order."""
+    argmax per batch. On equal dots the LARGEST centroid index wins:
+    argmax runs on the reversed column order."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import IntegerType
 
@@ -300,6 +274,22 @@ def add_ivf_cluster(
     return df.withColumn(out_col, make_ivf_assign_udf(centroids)(F.col(vec_col)))
 
 
+def ivf_probe_sql(
+    centroids: np.ndarray,
+    query: list[float],
+    nprobe: int,
+    *,
+    cluster_col: str = "ivf_cluster",
+) -> str:
+    """The IVF probe as SQL: ``cluster IN (...)`` over the ``nprobe``
+    centroids nearest the query, ranked driver-side (tiny). Shared by
+    :func:`ann_topk_ivf` and :func:`ann_topk_ivfpq`; on a store
+    partitioned by cluster id it is a partition filter."""
+    order = np.argsort(-(centroids @ np.asarray(query, dtype=np.float64)))
+    probes = ", ".join(str(int(c)) for c in order[:nprobe])
+    return f"{_quote(cluster_col)} IN ({probes})" if probes else "FALSE"
+
+
 def ann_topk_ivf(
     indexed: DataFrame,
     centroids: np.ndarray,
@@ -311,22 +301,15 @@ def ann_topk_ivf(
     vec_col: str = "embedding",
     cluster_col: str = "ivf_cluster",
 ) -> DataFrame:
-    """IVF probe: rank centroids against the query driver-side (tiny),
-    scan only the nprobe nearest clusters, exact-rank within them."""
-    qv = np.asarray(query, dtype=np.float64)
-    order = np.argsort(-(centroids @ qv))
-    probes = [int(c) for c in order[:nprobe]]
-    q = literal_array(query, "double")
-    return (
-        indexed.where(F.col(cluster_col).isin(probes))
-        .withColumn(
-            "similarity_score",
-            F.least(F.greatest(dot_product(vec_col, q), F.lit(0.0)), F.lit(1.0)),
-        )
-        .orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .drop(vec_col)
-    )
+    """IVF probe: scan only the nprobe nearest clusters
+    (:func:`ivf_probe_sql`), exact-rank within them through the exact
+    search's text. Returns the input columns minus the vector, plus
+    ``similarity_score``, in rank order."""
+    where = ivf_probe_sql(centroids, query, nprobe, cluster_col=cluster_col)
+    params = SearchParams(k=k, threshold=0.0, assume_normalized=True)
+    return _exact_topk(
+        indexed, query, params, id_col=id_col, vec_col=vec_col, where=where
+    ).drop("rank")
 
 
 # ---------------------------------------------------------------------------
@@ -772,6 +755,7 @@ def embedding_near_dup_pairs_banded(
     hamming_slack: float = 1.35,
     max_bucket: int | None = 128,
     dim: int | None = None,
+    assume_normalized: bool = True,
 ) -> DataFrame:
     """High-threshold near-dup pairs via SRP BANDING (minhash-style
     S-curve, probabilistic recall) — the scale tier
@@ -783,7 +767,9 @@ def embedding_near_dup_pairs_banded(
          (at cos ≥ 0.9 and 8×8 bands: ~94% recall; random pairs ~0%)
       2. full-signature Hamming prefilter at
          ceil(n_planes·θ_threshold/π·slack) bits — one bit_count(xor)
-      3. exact dot-product verify ≥ threshold
+      3. exact cosine verify ≥ threshold — a plain dot product under
+         ``assume_normalized`` (the store's unit vectors), else the
+         norm-guarded cosine, as in :func:`cosine_pairs_exact`
     Shuffle carries (band key, id, one long); vectors join back late.
 
     ``max_bucket`` is the hot-bucket star collapse shared with the
@@ -821,7 +807,10 @@ def embedding_near_dup_pairs_banded(
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cosine", dot_product("va", "vb"))
+        .withColumn(
+            "cosine",
+            (dot_product if assume_normalized else cosine_similarity)("va", "vb"),
+        )
         .where(F.col("cosine") >= F.lit(threshold))
         .select("id_a", "id_b", "cosine")
     )
@@ -907,6 +896,21 @@ def add_pq_codes(
     return df.withColumn(out_col, make_pq_encode_udf(codebooks)(F.col(vec_col)))
 
 
+def adc_sql(code_col: str, lut: np.ndarray) -> str:
+    """The asymmetric-distance (ADC) score of a PQ code column as SQL
+    text: the sum of m lookups of the byte code in the query's
+    [m, n_codes] table (``lut[s][code[s]]``), folded left from 0.0.
+    ONE parsed expression, like
+    :func:`~vectordb_light_spark.operators.search.similarity_sql`: the
+    lambda-built form paid a py4j round trip per node at every build."""
+    rows = ", ".join(literal_array_sql(row, "double") for row in lut)
+    return (
+        f"aggregate(zip_with(sequence(1, {len(lut)}), {_quote(code_col)}, "
+        f"(i, c) -> element_at(element_at(array({rows}), i), CAST(c AS INT) + 1)), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+
+
 def ann_topk_pq(
     encoded: DataFrame,
     codebooks: np.ndarray,
@@ -923,8 +927,8 @@ def ann_topk_pq(
     query stays un-quantized; per subspace the dot product against
     every codeword is precomputed driver-side into an m×n_codes
     lookup table, and each row's approximate score is the sum of m
-    table lookups on its byte code — a pure JVM expression
-    (transform + element_at + aggregate) over the m-byte column. The
+    table lookups on its byte code — one parsed JVM expression
+    (:func:`adc_sql`) over the m-byte column. The
     full vector column is never touched, so the scan reads codes+ids
     only; TakeOrderedAndProject keeps the result at k rows per task.
 
@@ -934,7 +938,9 @@ def ann_topk_pq(
     their FULL vectors back (broadcast of R ids against the vectors
     projection — at scale a bucketed/sorted-by-id store makes this a
     pruned point-fetch, not a second full scan) and exact-ranks the
-    final k: ADC decides WHAT to fetch, float math decides the
+    final k with the exact search's text (``operators/search.py``,
+    so the scores are clipped cosines): ADC decides WHAT to fetch,
+    float math decides the
     ORDER, so recall is bounded by pool membership instead of ADC
     distortion at +R·4·dim bytes of extra read.
     """
@@ -943,47 +949,23 @@ def ann_topk_pq(
     qv = np.asarray(query, dtype=np.float64)
     if qv.shape[0] != m * sub:
         raise ValueError(f"query dim {qv.shape[0]} != m*sub {m * sub}")
-    lut_np = np.stack([books[s] @ qv[s * sub : (s + 1) * sub] for s in range(m)])
-    # ONE parsed literal per subspace row instead of m*n_codes F.lit
-    # py4j round trips (r13: the 16x64 LUT cost ~0.5 s of plan BUILD
-    # per query - session.literal_array renders bit-identical doubles)
-    lut = F.array(*[literal_array(row, "double") for row in lut_np])
-    score = F.aggregate(
-        F.zip_with(
-            F.sequence(F.lit(1), F.lit(m)),
-            F.col(code_col),
-            lambda i, c: F.element_at(
-                F.element_at(lut, i), c.cast("int") + F.lit(1)
-            ),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    adc = (
-        encoded.select(id_col, code_col)
-        .withColumn("similarity_score", score)
-        .orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-    )
+    lut = np.stack([books[s] @ qv[s * sub : (s + 1) * sub] for s in range(m)])
+    adc = encoded.select(
+        id_col, F.expr(adc_sql(code_col, lut)).alias("similarity_score")
+    ).orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
     if not rerank_pool:
-        return adc.limit(k).drop(code_col)
+        return adc.limit(k)
     pool = adc.limit(int(rerank_pool)).select(id_col)
     # rerank_query: the vector the exact re-rank scores against —
     # differs from `query` when the ADC space is a transform of the
     # store space (OPQ rotates the query for ADC but re-ranks the
     # original vectors with the original query)
-    rq = np.asarray(rerank_query, dtype=np.float64) if rerank_query is not None else qv
-    q = literal_array(rq, "double")
-    exact = F.least(
-        F.greatest(dot_product(vec_col, q), F.lit(0.0)), F.lit(1.0)
-    )
-    return (
-        F.broadcast(pool)
-        .join(encoded.select(id_col, vec_col), id_col)
-        .withColumn("similarity_score", exact)
-        .orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .drop(vec_col)
-    )
+    rq = query if rerank_query is None else rerank_query
+    fetched = F.broadcast(pool).join(encoded.select(id_col, vec_col), id_col)
+    params = SearchParams(k=k, threshold=0.0, assume_normalized=True)
+    return _exact_topk(
+        fetched, rq, params, id_col=id_col, vec_col=vec_col
+    ).drop("rank")
 
 
 def ann_topk_ivfpq(
@@ -1009,11 +991,9 @@ def ann_topk_ivfpq(
     files and the ADC scan inside them touches codes+ids only — the
     two pruning axes multiply.
     """
-    qv = np.asarray(query, dtype=np.float64)
-    order = np.argsort(-(centroids @ qv))
-    probes = [int(c) for c in order[:nprobe]]
+    probe = ivf_probe_sql(centroids, query, nprobe, cluster_col=cluster_col)
     return ann_topk_pq(
-        indexed.where(F.col(cluster_col).isin(probes)),
+        indexed.where(probe),
         codebooks,
         query,
         k=k,
@@ -1295,15 +1275,12 @@ def ann_topk_pq_batch(
     code column. Per query the driver builds the m×n_codes lookup
     table; the broadcast LUT stack is [Q, m, n_codes] floats (tiny).
     Each partition gathers scores for all queries with numpy fancy
-    indexing over its code block and emits only its per-query local
-    top-k, so the final per-query rank shuffle carries ≤ k rows per
-    query per partition — the same two-phase exact-top-k shape as
-    operators.search.topk_cosine_batch, but the scan reads m bytes
-    per row instead of the vector. Query throughput at 100 TB: one
-    compressed pass serves thousands of queries.
+    indexing over its code block; the per-partition local top-k and
+    the per-query window rank are
+    operators.search.topk_cosine_batch's (``_batched_topk``), but the
+    scan reads m bytes per row instead of the vector. Query throughput
+    at 100 TB: one compressed pass serves thousands of queries.
     """
-    from pyspark.sql import Window
-
     books = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, n_codes, sub = books.shape
     qids = np.array([q[0] for q in queries], dtype=np.int64)
@@ -1316,52 +1293,18 @@ def ann_topk_pq_batch(
             for _, v in queries
         ]
     )  # [Q, m, n_codes]
-    spark = encoded.sparkSession
-    b = spark.sparkContext.broadcast((qids, luts))
 
-    def run(batches):
-        qids_, luts_ = b.value
-        for pdf in batches:
-            if not len(pdf) or not len(qids_):
-                continue
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf[code_col]]
-            )  # [n, m]
-            n = codes.shape[0]
-            kk = min(k, n)
-            rows = np.arange(m)[None, :]
-            out_q, out_i, out_s = [], [], []
-            for j in range(len(qids_)):
-                scores = luts_[j][rows, codes].sum(axis=1)  # [n]
-                idx = (
-                    np.argpartition(-scores, kk - 1)[:kk]
-                    if kk < n
-                    else np.arange(n)
-                )
-                idx = idx[np.lexsort((a_ids[idx], -scores[idx]))]
-                out_q.append(np.full(len(idx), qids_[j], dtype=np.int64))
-                out_i.append(a_ids[idx])
-                out_s.append(scores[idx])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    "similarity_score": np.concatenate(out_s),
-                }
-            )
+    def adc_block(pdf, luts_):
+        codes = np.stack(
+            [np.asarray(c, dtype=np.int64) for c in pdf[code_col]]
+        )  # [n, m]
+        rows = np.arange(m)[None, :]
+        return np.stack([lut[rows, codes].sum(axis=1) for lut in luts_], axis=1)
 
-    local = encoded.select(id_col, code_col).mapInPandas(
-        run, schema=f"query_id long, {id_col} long, similarity_score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("similarity_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _batched_topk(
+        encoded.select(id_col, code_col), qids, luts, adc_block,
+        k=k, id_col=id_col, query_id_col="query_id",
+    ).orderBy("query_id", "rank")
 
 
 # ---------------------------------------------------------------------------
