@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import dataclasses
 import math
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -178,7 +180,7 @@ def test_topk_cosine_keeps_a_cached_input_cached(spark):
     assert not [t for t in spark.catalog.listTables() if t.name.startswith("topk_")]
 
 
-def _build_db(spark, tmp_path, name, texts, *, cache=False):
+def _build_db(spark, tmp_path, name, texts, *, cache=False, target_files=1):
     from vectordb_light_spark.engine import VectorDB
     from vectordb_light_spark.operators.ingest import IngestConfig, create_database
     from vectordb_light_spark.sources.extract import load_directory
@@ -193,7 +195,7 @@ def _build_db(spark, tmp_path, name, texts, *, cache=False):
     create_database(
         spark, docs, str(db_root), name,
         IngestConfig(
-            chunk_size=150, chunk_overlap=30, target_files=1,
+            chunk_size=150, chunk_overlap=30, target_files=target_files,
             embedder_spec={"encoder": "hashing", "dim": 16, "seed": 3},
         ),
     )
@@ -302,6 +304,15 @@ def test_search_params_reject_unrenderable_values():
         with pytest.raises(ValueError, match="k must"):
             SearchParams(k=bad)
     assert SearchParams(k=0, threshold=-2).k == 0
+
+
+def test_search_params_reject_k_past_the_int_limit():
+    """Spark's LIMIT is an int: a k of 2**31 or more would only fail at
+    analysis, so it is rejected when the parameters are made."""
+    assert SearchParams(k=2**31 - 1).k == 2**31 - 1
+    for bad in (2**31, 2**40):
+        with pytest.raises(ValueError, match="k must"):
+            SearchParams(k=bad)
 
 
 #: Values that would break, or change the meaning of, SQL text they
@@ -448,6 +459,20 @@ def test_topk_batch_matches_single(spark):
     }
     assert got[(10, 1)] == 1 and got[(10, 2)] == 3
     assert got[(11, 1)] == 2 and got[(11, 2)] == 5  # id5 [.6,.8,0] → sim .8
+
+
+def test_topk_batch_threshold_keeps_ranks_and_must_be_finite(spark):
+    """The batch threshold filters the ranked top-k (ranks kept); it is
+    rendered into SQL text, so a non-finite one is rejected."""
+    vecs = _vecs(spark)
+    queries = spark.createDataFrame(
+        [(11, [0.0, 1.0, 0.0])], "query_id long, query_vec array<double>"
+    )
+    out = topk_cosine_batch(vecs, queries, k=3, threshold=0.75)
+    assert sorted((r["rank"], r["id"]) for r in out.collect()) == [(1, 2), (2, 5)]
+    for bad in (float("nan"), float("inf")):
+        with pytest.raises(ValueError, match="threshold must be a finite"):
+            topk_cosine_batch(vecs, queries, k=3, threshold=bad)
 
 
 def test_topk_prefix_monotonicity(spark):
@@ -1191,3 +1216,117 @@ def test_topk_contract_flipped_matches_v1_on_random_malformed_frames(spark):
             key=key,
         )
         assert v1 == v2, f"seed {seed}: {v1} != {v2}"
+
+
+@pytest.fixture(scope="module")
+def cached_db(spark, tmp_path_factory):
+    """A cached store of several files with an SRP index: the store
+    shape of a served database."""
+    db = _build_db(
+        spark, tmp_path_factory.mktemp("served"), "served",
+        [f"subject{i % 3} body words " * 30 for i in range(6)],
+        cache=True, target_files=4,
+    )
+    db.build_srp_index(n_planes=8, seed=1)
+    yield db
+    db.close()
+
+
+def _assert_rows_match_search(db, text, params, **kw):
+    """The collected top-k (``_search_rows``), ``rag_prompt`` and
+    ``chunks_only`` return what ``search().collect()`` returns."""
+    from vectordb_light_spark.engine import RAG_STRING
+
+    want = db.search(text, params=params, **kw).collect()
+    got = db._search_rows(text, params=params, **kw)
+    assert got == want, (params, kw)
+    assert [r.__fields__ for r in got] == [r.__fields__ for r in want]
+    if kw:
+        return want
+    assert db.chunks_only(text, params) == db.format_chunks(
+        [(r["text"], r["file_name"]) for r in want]
+    )
+    if want:
+        assert db.rag_prompt(text, params) == (
+            f"{RAG_STRING}\n\n---\n\n"
+            + "\n\n---\n\n".join(r["text"] for r in want)
+            + f"\n\n-----\n\n{text}"
+        )
+    else:
+        with pytest.raises(ValueError, match="No relevant contexts"):
+            db.rag_prompt(text, params)
+    return want
+
+
+@pytest.mark.parametrize("which", ["uncached", "cached"])
+def test_collected_search_matches_search(small_db, cached_db, which):
+    """Threshold edges, k=0, each post-filter alone and together, and
+    id tie-breaks between identical chunks (d0/d3 and d1/d4 hold the
+    same text): same rows, ranks, scores and text as ``search()``."""
+    db = small_db if which == "uncached" else cached_db
+    assert db.vectors.is_cached == (which == "cached")
+    text = "subject1 body"
+    full = _assert_rows_match_search(db, text, SearchParams(k=6, threshold=0.0))
+    assert len(full) == 6
+    assert any(
+        a["similarity_score"] == b["similarity_score"] and a["id"] < b["id"]
+        for a, b in zip(full, full[1:])
+    )
+    kth = full[3]["similarity_score"]
+    assert len(_assert_rows_match_search(db, text, SearchParams(k=4, threshold=kth))) == 4
+    assert not _assert_rows_match_search(db, text, SearchParams(k=4, threshold=1.01))
+    assert not _assert_rows_match_search(db, text, SearchParams(k=0, threshold=0.0))
+
+    dtype = full[0]["document_type"]  # every .txt chunk has the same type
+    wide = SearchParams(k=20, threshold=0.0)
+    ranks = {r["id"]: r["rank"] for r in db.search(text, params=wide).collect()}
+    for params, n in (
+        (dataclasses.replace(wide, document_type=dtype), len(ranks)),
+        (dataclasses.replace(wide, document_type="image"), 0),
+        (dataclasses.replace(wide, search_term="SUBJECT2"), None),
+        (dataclasses.replace(wide, search_term="subject0 body", document_type=dtype), None),
+    ):
+        rows = _assert_rows_match_search(db, text, params)
+        assert [r["rank"] for r in rows] == [ranks[r["id"]] for r in rows]
+        if n is None:  # the search term drops the top ranks; the rest keep theirs
+            assert 0 < len(rows) < len(ranks) and rows[0]["rank"] > 1, params
+        else:
+            assert len(rows) == n, params
+
+
+def test_collected_search_at_full_srp_radius_matches_exact(cached_db):
+    text, params = "subject2 words", SearchParams(k=5, threshold=0.0)
+    exact = cached_db.search(text, params=params).collect()
+    full = _assert_rows_match_search(cached_db, text, params, ann_radius=8)
+    assert full == exact
+
+
+def test_stats_after_rag_prompt_describe_its_search(cached_db):
+    cached_db.search("subject0 body")
+    text = "subject1 body"
+    cached_db.rag_prompt(text, SearchParams(k=3, threshold=0.0))
+    stats = cached_db.last_search_stats
+    assert stats["n_scanned"] == cached_db.meta["num_vectors"]
+    top = cached_db.search(text, params=SearchParams(k=1)).first()
+    assert stats["max_sim"] == top["similarity_score"]
+
+
+def test_rag_prompt_runs_one_job_of_one_stage(spark, cached_db):
+    """A warmed RAG prompt over a cached multi-partition store collects
+    the top-k at the root of its plan: one job, one stage (per-task
+    k-heaps merged on the driver; no shuffle into a rank Window)."""
+    sc = spark.sparkContext
+    assert cached_db.vectors.rdd.getNumPartitions() > 1
+    for _ in range(3):
+        cached_db.rag_prompt("subject1 body")
+    group = f"rag_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-shape assertion")
+    try:
+        cached_db.rag_prompt("subject1 body")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1

@@ -294,7 +294,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if a.cmd == "search":
-        out = db.search(
+        rows = db._search_rows(
             a.query,
             params=SearchParams(
                 k=a.k,
@@ -304,8 +304,7 @@ def main(argv: list[str] | None = None) -> int:
             ),
             ann_radius=a.ann_radius,
         )
-        cols = [c for c in out.columns if c != "vector"]
-        for r in out.select(*cols).collect():
+        for r in rows:
             _emit(r.asDict(recursive=True))
         return 0
     if a.cmd == "hybrid":

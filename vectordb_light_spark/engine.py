@@ -18,11 +18,16 @@ plus the three presentation operators:
     Q12 RAG prompt assembly (chat_llm.py:30-51)
     Q14 citation aggregation (operators.citations)
 
-Q2-Q10 run as ONE SQL text (operators/search.py:search_sql, shared
+Q2-Q10 are rendered once (operators/search.py:search_sql, shared
 with ``topk_cosine``) over a temp view of the vectors table private
-to each open ``VectorDB``. The reference's per-search stats
-(vector_db_query.py:184-201) are computed on read by
-``last_search_stats``.
+to each open ``VectorDB``. ``search`` returns the lazy ranked text
+for consumers that compose it (hybrid, diverse, citations, user
+code). The terminal consumers that end in at most k rows — Q11
+``chunks_only``, Q12 ``rag_prompt`` and the CLI ``search`` — collect
+the root top-k text instead (``_search_rows``): one stage, with the
+post-top-k predicate and the rank applied to the collected rows. The
+reference's per-search stats (vector_db_query.py:184-201) are
+computed on read by ``last_search_stats``, for either form.
 
 The per-database warm cache (Q15, vector_db_query.py:289-317) maps to
 ``DataFrame.cache()`` on the vectors table: the view reads the cached
@@ -38,7 +43,7 @@ import os
 import re
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_light_spark.functions.embedding import embed_query
@@ -426,6 +431,41 @@ class VectorDB:
             assume_normalized=True,
         )
 
+    def _search_text(
+        self,
+        query_text: str | None,
+        query_vector: list[float] | None,
+        params: SearchParams,
+        ann_radius: int | None,
+    ) -> tuple[str, str, dict]:
+        """:func:`search_sql`'s ``(ranked, top, args)`` over this
+        database's view, recorded as the latest search for
+        :attr:`last_search_stats`."""
+        query_vector = self._query_vector(query_text, query_vector)
+        where = None
+        if ann_radius is not None:
+            if "srp_sig" not in self._columns:
+                raise ValueError(
+                    "no SRP index on this database — run build_srp_index() "
+                    "or ingest with index_srp=True"
+                )
+            from vectordb_light_spark.operators.similarity import srp_radius_sql
+
+            spec = self.meta.get("srp_index", {"n_planes": 16, "seed": 42})
+            where = srp_radius_sql(
+                query_vector, ann_radius,
+                n_planes=int(spec["n_planes"]), seed=int(spec["seed"]),
+            )
+
+        # Write-path invariant: stored vectors are L2-normalized.
+        scored, ranked, top, args = search_sql(
+            self._view, self._columns, query_vector,
+            dataclasses.replace(params, assume_normalized=True),
+            drop=_INDEX_COLS, where=where,
+        )
+        self._last_search = (scored, params.threshold)
+        return ranked, top, args
+
     def search(
         self,
         query_text: str | None = None,
@@ -446,30 +486,31 @@ class VectorDB:
         :meth:`build_srp_index` or a stream maintained with
         ``index_srp=True``). At full radius (= n_planes) this degrades
         gracefully to the exact scan."""
-        query_vector = self._query_vector(query_text, query_vector)
-        where = None
-        if ann_radius is not None:
-            if "srp_sig" not in self._columns:
-                raise ValueError(
-                    "no SRP index on this database — run build_srp_index() "
-                    "or ingest with index_srp=True"
-                )
-            from vectordb_light_spark.operators.similarity import srp_radius_sql
-
-            spec = self.meta.get("srp_index", {"n_planes": 16, "seed": 42})
-            where = srp_radius_sql(
-                query_vector, ann_radius,
-                n_planes=int(spec["n_planes"]), seed=int(spec["seed"]),
-            )
-
-        # Write-path invariant: stored vectors are L2-normalized.
-        scored, ranked, args = search_sql(
-            self._view, self._columns, query_vector,
-            dataclasses.replace(params, assume_normalized=True),
-            drop=_INDEX_COLS, where=where,
-        )
-        self._last_search = (scored, params.threshold)
+        ranked, _, args = self._search_text(query_text, query_vector, params, ann_radius)
         return self.spark.sql(ranked, args)
+
+    def _search_rows(
+        self,
+        query_text: str | None = None,
+        *,
+        query_vector: list[float] | None = None,
+        params: SearchParams = SearchParams(),
+        ann_radius: int | None = None,
+    ) -> list[Row]:
+        """:meth:`search`'s rows, collected for the consumers that end
+        in them (Q11, Q12, the CLI): the :func:`search_sql` top-k text
+        is the root of its plan, so it runs as one stage with no rank
+        Window, and the post-top-k predicate is applied here to the
+        ≤k collected rows. A row's rank is its position in the
+        collected top-k, so surviving rows keep their original rank
+        exactly as in :meth:`search`."""
+        _, top, args = self._search_text(query_text, query_vector, params, ann_radius)
+        rows = self.spark.sql(top, args).collect()
+        return [  # __keep is the last column
+            Row(**dict(zip(r.__fields__[:-1], r[:-1])), rank=rank)
+            for rank, r in enumerate(rows, start=1)
+            if r["__keep"]
+        ]
 
     def search_hybrid(
         self,
@@ -703,20 +744,14 @@ class VectorDB:
 
     def chunks_only(self, query_text: str, params: SearchParams = SearchParams()) -> str:
         """Entry point B (SURVEY §3.2): search + Q11 formatting."""
-        rows = (
-            self.search(query_text, params=params)
-            .select("text", "file_name")
-            .collect()
-        )
+        rows = self._search_rows(query_text, params=params)
         return self.format_chunks([(r["text"], r["file_name"]) for r in rows])
 
     def rag_prompt(self, query_text: str, params: SearchParams = SearchParams()) -> str:
         """Q12: assemble the augmented RAG prompt (reference
         chat_llm.py:45-50). Raises if no contexts survive, like the
         reference."""
-        contexts = [
-            r["text"] for r in self.search(query_text, params=params).select("text").collect()
-        ]
+        contexts = [r["text"] for r in self._search_rows(query_text, params=params)]
         if not contexts:
             raise ValueError("No relevant contexts found.")
         return (

@@ -7,17 +7,21 @@ Reference pipeline (vector_db_query.py:140-263) in order:
   Q8 case-insensitive search-term substring filter →
   Q9 document-type equality filter → Q10 rank-ordered projection.
 
-Q2-Q10 are ONE SQL text rendered in one place (:func:`search_sql`)
-and built in a single ``spark.sql`` call — by ``VectorDB.search``
-over its view, and by :func:`_exact_topk` for :func:`topk_cosine`
-and the ANN tiers' exact rank (operators/similarity.py: the SRP/IVF
-candidate filter is the text's ``where``, the PQ re-rank pool its
-source). A DataFrame-API build of the same plan costs hundreds of
-py4j round trips. Each row is scored once,
-JVM-side; the top-k order, the threshold and ``VectorDB``'s
-on-read stats all read that one column. User strings (the search
-term, the document type) are bound as named parameters, never
-pasted into the text.
+Q2-Q10 are rendered in one place (:func:`search_sql`) and built in a
+single ``spark.sql`` call. The ranked text is run by
+``VectorDB.search`` over its view, and by :func:`_exact_topk` for
+:func:`topk_cosine` and the ANN tiers' exact rank
+(operators/similarity.py: the SRP/IVF candidate filter is the text's
+``where``, the PQ re-rank pool its source). The facade's terminal
+consumers (``VectorDB.rag_prompt``, ``chunks_only``, the CLI
+``search``) collect the root top-k text instead, which carries the
+same post-top-k predicate as a column: a top-k at the root of its
+plan runs in one stage, its per-task heaps merged on the driver. A
+DataFrame-API build of the same plan costs hundreds of py4j round
+trips. Each row is scored once, JVM-side; the top-k order, the
+threshold and ``VectorDB``'s on-read stats all read that one column.
+User strings (the search term, the document type) are bound as named
+parameters, never pasted into the text.
 
 Order is semantics, not optimization: the threshold and post-filters
 are applied to the top-k result, so pushing them below the limit would
@@ -32,9 +36,9 @@ no shuffle of the full table, no sort. The scan prunes to
 (id, vector[, filter cols]) via Parquet column pruning. For repeated
 queries, batch them via :func:`topk_cosine_batch` (one scan for Q
 queries) rather than Q scans. Its per-partition local top-k and
-per-query window rank (:func:`_batched_topk`) are also the batched
-ADC search's (``similarity.ann_topk_pq_batch``): the two differ only
-in how a score block is computed.
+per-query window rank (:func:`_batched_topk`, the rank one SQL text)
+are also the batched ADC search's (``similarity.ann_topk_pq_batch``):
+the two differ only in how a score block is computed.
 """
 
 from __future__ import annotations
@@ -47,7 +51,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_light_spark.session import literal_array_sql
@@ -58,8 +62,9 @@ class SearchParams:
     """Query-time knobs, mirroring the reference's config
     (reference config.py:28-32): k ('contexts') default 6, similarity
     threshold default 0.4, optional substring search term and
-    document-type equality filter. ``k`` must be a non-negative int and
-    ``threshold`` a finite number: both are rendered into SQL text."""
+    document-type equality filter. ``k`` must be a non-negative int
+    that fits Spark's int ``LIMIT`` and ``threshold`` a finite number:
+    both are rendered into SQL text."""
 
     k: int = 6
     threshold: float = 0.4
@@ -68,8 +73,14 @@ class SearchParams:
     assume_normalized: bool = False  # write-path vectors are L2-normalized
 
     def __post_init__(self):
-        if not isinstance(self.k, numbers.Integral) or isinstance(self.k, bool) or self.k < 0:
-            raise ValueError(f"SearchParams.k must be a non-negative int, got {self.k!r}")
+        if (
+            not isinstance(self.k, numbers.Integral)
+            or isinstance(self.k, bool)
+            or not 0 <= self.k < 2**31
+        ):
+            raise ValueError(
+                f"SearchParams.k must be a non-negative int below 2**31, got {self.k!r}"
+            )
         if (
             not isinstance(self.threshold, numbers.Real)
             or isinstance(self.threshold, bool)
@@ -123,9 +134,9 @@ def search_sql(
     vec_col: str = "vector",
     drop: tuple[str, ...] = (),
     where: str | None = None,
-) -> tuple[str, str, dict]:
+) -> tuple[str, str, str, dict]:
     """Render one exact search over the table or view ``source`` as
-    SQL: ``(scored, ranked, args)``.
+    SQL: ``(scored, ranked, top, args)``.
 
     ``scored`` is the scan: ``columns`` minus the vector (and ``drop``)
     plus ``similarity_score``, optionally behind a ``where`` predicate
@@ -133,8 +144,12 @@ def search_sql(
     k-heaps, TakeOrderedAndProject), ranks the ≤k rows, THEN applies
     the post-top-k filters Q5 → Q8 → Q9 as one predicate, so
     surviving rows keep their original rank; ties break on ``id_col``
-    ascending. ``search_term`` (lower-cased) and ``document_type`` are
-    bound as the named parameters in ``args``, never pasted."""
+    ascending. ``top`` is the same top-k as the root of its plan, with
+    that predicate as the ``__keep`` column: collected, it runs in one
+    stage (no rank Window to shuffle into), and its rows in collected
+    order are the ranks. ``search_term`` (lower-cased) and
+    ``document_type`` are bound as the named parameters in ``args``,
+    never pasted."""
     gone = {vec_col, *drop}
     keep = ", ".join(_quote(c) for c in columns if c not in gone)
     sim = similarity_sql(vec_col, query, assume_normalized=params.assume_normalized)
@@ -153,12 +168,29 @@ def search_sql(
         # Q9: exact equality on document_type (vector_db_query.py:252-257).
         cond.append("`document_type` = :document_type")
         args["document_type"] = params.document_type
+    post = " AND ".join(cond)
+    limited = f"{scored} ORDER BY {order} LIMIT {int(params.k)}"
     ranked = (
         f"SELECT * FROM (SELECT *, row_number() OVER (ORDER BY {order}) AS `rank` "
-        f"FROM ({scored} ORDER BY {order} LIMIT {int(params.k)}) AS top) AS ranked "
-        f"WHERE {' AND '.join(cond)} ORDER BY `rank`"
+        f"FROM ({limited}) AS top) AS ranked WHERE {post} ORDER BY `rank`"
     )
-    return scored, ranked, args
+    top = f"SELECT *, ({post}) AS __keep FROM ({limited}) AS top"
+    return scored, ranked, top, args
+
+
+def _sql_over(df: DataFrame, view: str, text: str, args: dict | None = None) -> DataFrame:
+    """``spark.sql(text, args)`` with ``df`` registered as the temp view
+    ``view`` only while the text is analyzed."""
+    spark = df.sparkSession
+    df.createOrReplaceTempView(view)
+    try:
+        return spark.sql(text, args)
+    finally:
+        # The session catalog's drop: spark.catalog.dropTempView, and so
+        # spark.sql(..., vectors=df), also uncaches the view's plan,
+        # which would unpersist a cached ``df`` for every later
+        # consumer. The analyzed result no longer needs the name.
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
 
 
 def _exact_topk(
@@ -171,22 +203,13 @@ def _exact_topk(
     where: str | None = None,
 ) -> DataFrame:
     """:func:`search_sql`'s ranked text over ``vectors``, its scan
-    narrowed by ``where``, built in one ``spark.sql`` call;
-    ``vectors`` is a temp view only while the text is analyzed."""
-    spark, view = vectors.sparkSession, f"topk_{uuid.uuid4().hex}"
-    _, ranked, args = search_sql(
+    narrowed by ``where``, built in one ``spark.sql`` call."""
+    view = f"topk_{uuid.uuid4().hex}"
+    _, ranked, _, args = search_sql(
         view, vectors.columns, query, params,
         id_col=id_col, vec_col=vec_col, where=where,
     )
-    vectors.createOrReplaceTempView(view)
-    try:
-        return spark.sql(ranked, args)
-    finally:
-        # The session catalog's drop: spark.catalog.dropTempView, and so
-        # spark.sql(..., vectors=df), also uncaches the view's plan,
-        # which would unpersist a cached ``vectors`` for every later
-        # consumer. The analyzed result no longer needs the name.
-        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+    return _sql_over(vectors, view, ranked, args)
 
 
 def topk_cosine(
@@ -257,6 +280,7 @@ def _batched_topk(
     k: int,
     id_col: str,
     query_id_col: str,
+    threshold: float | None = None,
 ) -> DataFrame:
     """The one batched top-k: every partition of ``scan`` scores each
     Arrow batch against ALL queries at once (``score_block(pdf,
@@ -265,8 +289,14 @@ def _batched_topk(
     rank carries ≤ k rows per query per partition. Local and global
     orders are identical (score desc, id asc), which makes the
     two-phase top-k exact, ties included. ``(qids, payload)`` is
-    broadcast once. Returns (query id, id, similarity_score, rank ≤ k).
+    broadcast once. The per-query rank (and the optional score
+    ``threshold`` above it) is one ``spark.sql`` text over a temp view
+    of the local top-k: the DataFrame-API Window costs a py4j round
+    trip per Column call. Returns (query id, id, similarity_score,
+    rank ≤ k).
     """
+    if threshold is not None and not math.isfinite(threshold):
+        raise ValueError(f"threshold must be a finite number, got {threshold!r}")
     b = scan.sparkSession.sparkContext.broadcast((qids, payload))
 
     def run(batches):
@@ -300,11 +330,16 @@ def _batched_topk(
     local = scan.mapInPandas(
         run, schema=f"{query_id_col} long, {id_col} long, similarity_score double"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("similarity_score").desc(), F.col(id_col).asc()
-    )
-    return local.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= F.lit(k)
+    cond = f"`rank` <= {int(k)}"
+    if threshold is not None:
+        cond += f" AND similarity_score >= {float(threshold)!r}D"
+    view = f"topk_{uuid.uuid4().hex}"
+    return _sql_over(
+        local, view,
+        f"SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY "
+        f"{_quote(query_id_col)} ORDER BY similarity_score DESC, "
+        f"{_quote(id_col)} ASC) AS `rank` FROM {_quote(view)}) AS ranked "
+        f"WHERE {cond}",
     )
 
 
@@ -355,8 +390,8 @@ def topk_cosine_batch(
 
     return _batched_topk(
         vectors.select(id_col, vec_col), qids, qmat, cosine_block,
-        k=k, id_col=id_col, query_id_col=query_id_col,
-    ).where(F.col("similarity_score") >= F.lit(threshold))
+        k=k, id_col=id_col, query_id_col=query_id_col, threshold=threshold,
+    )
 
 
 def mmr_rerank(
