@@ -164,6 +164,35 @@ def test_containment_ignores_too_short_docs(spark):
     assert containment_pairs(df, threshold=0.0).count() == 0
 
 
+def test_containment_hot_set_over_broadcast_cap_shuffles(spark, monkeypatch):
+    """A hot-shingle set above HOT_SHINGLE_BROADCAST_CAP drops the stop
+    shingles by a sort-merge anti join instead of a broadcast, with
+    the same pairs."""
+    from vectordb_light_spark.operators import dedup
+
+    import itertools
+
+    vocab = ["".join(p) for p in itertools.product("abcdefghij", repeat=3)]
+    footer = " ".join(vocab[900:910])  # hot: in every doc
+    rows = [
+        (i, " ".join(vocab[i * 40 : i * 40 + 60]) + " " + footer) for i in range(8)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def run():
+        out = dedup.containment_pairs(df, threshold=0.1, max_df=3)
+        got = sorted(tuple(r) for r in out.collect())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return got, [ln for ln in plan.splitlines() if "LeftAnti" in ln]
+
+    want, anti = run()
+    assert want and anti and all("BroadcastHashJoin" in ln for ln in anti), anti
+    monkeypatch.setattr(dedup, "HOT_SHINGLE_BROADCAST_CAP", 0)
+    got, anti = run()
+    assert got == want
+    assert anti and all("SortMergeJoin" in ln for ln in anti), anti
+
+
 def test_remove_boilerplate_strips_repeated_paragraphs(spark):
     """A footer shared by most docs disappears corpus-wide; unique
     paragraphs survive in order; a doc that is ALL boilerplate comes

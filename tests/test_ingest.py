@@ -299,6 +299,20 @@ def test_create_database_job_budget(spark, doc_dir, tmp_path):
     assert n_jobs <= 8
 
 
+def test_open_reads_documents_on_first_access(built_db, spark):
+    """Opening a database pays the vectors table's schema job only;
+    the documents table is read when first used."""
+    root, _, _ = built_db
+    db, n_jobs = _jobs_during(
+        spark, "open", lambda: VectorDB.open(spark, root, "testdb", cache=False)
+    )
+    assert n_jobs == 1
+    assert db.documents.columns == [
+        "file_path", "file_type", "file_name", "modification_date",
+        "text", "hash", "document_type",
+    ]
+
+
 def test_search_end_to_end(built_db, spark):
     root, _, _ = built_db
     db = VectorDB.open(spark, root, "testdb", cache=False)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import dataclasses
 import math
+import os
 import uuid
 
 import pytest
@@ -1315,7 +1316,11 @@ def test_rag_prompt_runs_one_job_of_one_stage(spark, cached_db):
     """A warmed RAG prompt over a cached multi-partition store collects
     the top-k at the root of its plan: one job, one stage (per-task
     k-heaps merged on the driver; no shuffle into a rank Window)."""
+    from vectordb_light_spark.operators.ingest import vector_files
+
     sc = spark.sparkContext
+    # the one-stage claim only has power on a multi-file store
+    assert len(vector_files(os.path.join(cached_db.path, "vectors"))) >= 2
     assert cached_db.vectors.rdd.getNumPartitions() > 1
     for _ in range(3):
         cached_db.rag_prompt("subject1 body")

@@ -787,8 +787,8 @@ def test_banded_tier_verifies_unnormalized_cosine(spark):
 
 def test_ann_tier_build_round_trip_cap(spark, emb, query):
     """Building an ANN top-k is one parsed SQL text for the exact rank
-    (plus one parsed ADC expression for PQ): a bounded number of py4j
-    round trips, not one per expression node."""
+    (plus one for the PQ ADC scan): a bounded number of py4j round
+    trips, not one per expression node."""
     from vectordb_light_spark.operators.similarity import (
         add_pq_codes,
         ann_topk_pq,
@@ -804,6 +804,7 @@ def test_ann_tier_build_round_trip_cap(spark, emb, query):
         "srp": (lambda: ann_topk_srp(srp, query, k=10, probe_hamming=6), 25),
         "ivf": (lambda: ann_topk_ivf(ivf, cents, query, k=10, nprobe=3), 25),
         "pq": (lambda: ann_topk_pq(pq, books, query, k=10, rerank_pool=50), 150),
+        "adc": (lambda: ann_topk_pq(pq, books, query, k=10), 25),
     }
     for name, (build, cap) in caps.items():
         trips = _median_round_trips(spark, build)

@@ -112,7 +112,18 @@ class VectorDB:
         self._view = f"vectordb_{uuid.uuid4().hex}"
         self._last_search: tuple[str, float] | None = None
         self._load_vectors()
-        self.documents = spark.read.parquet(os.path.join(path, "documents"))
+        self._documents: DataFrame | None = None
+
+    @property
+    def documents(self) -> DataFrame:
+        """The documents table, read on first access: nothing in the
+        package reads it, so an open pays no listing and schema job
+        for it."""
+        if self._documents is None:
+            self._documents = self.spark.read.parquet(
+                os.path.join(self.path, "documents")
+            )
+        return self._documents
 
     @property
     def vectors(self) -> DataFrame:
@@ -220,10 +231,19 @@ class VectorDB:
         return self.embed(query_text)
 
     def _swap_vectors(
-        self, tier: str, write, meta: dict, *, artifacts: dict | None = None
+        self,
+        tier: str,
+        df: DataFrame,
+        meta: dict,
+        *,
+        partition_by: str | None = None,
+        artifacts: dict | None = None,
     ) -> None:
-        """Replace ``vectors/`` with the store ``write(dir)`` writes and
-        record ``meta`` in ``_meta.json``, in the crash-safe order
+        """Replace ``vectors/`` with ``df``, written by
+        :func:`~vectordb_light_spark.operators.ingest.write_vectors` (in
+        IVF cluster directories when ``partition_by`` says so or the
+        store has them), and record ``meta`` in ``_meta.json``, in the
+        crash-safe order
         :meth:`_recover_interrupted_swap` relies on. ``artifacts`` are
         STAGED before the write and committed only after the vectors
         swap: committed artifacts must never get ahead of it (a crash
@@ -234,6 +254,9 @@ class VectorDB:
         from vectordb_light_spark.operators.ingest import (
             commit_index_artifacts,
             stage_index_artifacts,
+            store_partition,
+            vector_files,
+            write_vectors,
         )
 
         if artifacts:
@@ -242,7 +265,12 @@ class VectorDB:
         tmp_dir = f"{vectors_dir}.{tier}-tmp"
         old_dir = f"{vectors_dir}.{tier}-old"
         shutil.rmtree(tmp_dir, ignore_errors=True)
-        write(tmp_dir)
+        # at most as many files per directory as the store has now
+        files = vector_files(vectors_dir)
+        n_dirs = len({os.path.dirname(f) for f in files}) or 1
+        n_files = max(1, len(files) // n_dirs)
+        partition_by = partition_by or store_partition(vectors_dir)
+        write_vectors(df, tmp_dir, n_files, mode="error", partition_by=partition_by)
         # Release the old cached scan BEFORE the swap — re-caching
         # without unpersisting leaks the superseded blocks for the
         # session's lifetime.
@@ -281,7 +309,7 @@ class VectorDB:
             seed=seed, dim=int(self.meta.get("dimensions", 64)),
         )
         self._swap_vectors(
-            "srp", indexed.write.parquet,
+            "srp", indexed,
             {"srp_index": {"n_planes": n_planes, "seed": seed}},
         )
 
@@ -305,7 +333,7 @@ class VectorDB:
         )
         coded = add_pq_codes(fresh, books, vec_col="vector")
         self._swap_vectors(
-            "pq", coded.write.parquet,
+            "pq", coded,
             {"pq_index": {"m": m, "n_codes": n_codes}},
             artifacts={"pq_codebooks": books},
         )
@@ -360,8 +388,9 @@ class VectorDB:
         )
         clustered = add_ivf_cluster(fresh, centroids, vec_col="vector")
         self._swap_vectors(
-            "ivf", clustered.write.partitionBy("ivf_cluster").parquet,
+            "ivf", clustered,
             {"ivf_index": {"n_centroids": n_centroids}},
+            partition_by="ivf_cluster",
             artifacts={"ivf_centroids": centroids},
         )
 

@@ -57,6 +57,13 @@ DEFAULT_SEED = 42
 #: max: 44), so oracle-graded outputs are unchanged.
 DEFAULT_MAX_BUCKET = 128
 
+#: Most hot shingle keys :func:`containment_pairs` broadcasts (8-byte
+#: keys: a few MB of hash relation). The hot set is the corpus' Zipf
+#: head and far smaller in practice, but a small ``max_df`` on a large
+#: corpus can push it to total_postings / max_df keys; above the cap
+#: the stop-shingle anti join shuffles instead.
+HOT_SHINGLE_BROADCAST_CAP = 250_000
+
 
 # ---------------------------------------------------------------------------
 # Canonicalization & shingling
@@ -1098,7 +1105,8 @@ def containment_pairs(
     — the containment threshold applies directly on the pair
     aggregate's output, map-side after its partial agg.
     (3) Stop-shingles are dropped by broadcast ANTI join against the
-    HOT key set (df > max_df — the tiny Zipf head) instead of an
+    HOT key set (df > max_df — the tiny Zipf head; a sort-merge anti
+    join above ``HOT_SHINGLE_BROADCAST_CAP`` keys) instead of an
     equi-join against the huge rare set: the postings never shuffle
     for the prefilter, and the hot keys' posting rows are dropped
     map-side rather than hash-partitioned into one task (§2.5 — the
@@ -1155,7 +1163,14 @@ def containment_pairs(
         .select(F.col(id_col), "_n", F.xxhash64("_s").alias("s"))
     )
     hot = over_cap(shingles, ["s"], max_df).select("s")
-    posts = shingles.join(F.broadcast(hot), "s", "left_anti")
+    # One bounded count decides the join; it also fills the persisted
+    # shingles the pair join reads.
+    cap = HOT_SHINGLE_BROADCAST_CAP
+    if hot.limit(cap + 1).count() <= cap:
+        hot = F.broadcast(hot)
+    else:
+        hot = hot.hint("merge")
+    posts = shingles.join(hot, "s", "left_anti")
     a = posts.select(F.col(id_col).alias("doc_a"), "_n", "s")
     b = posts.select(F.col(id_col).alias("doc_b"), "s")
     return (

@@ -35,6 +35,8 @@ the exact scan on the driver's embeddings table.
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -47,6 +49,7 @@ from vectordb_light_spark.operators.search import (
     _batched_topk,
     _exact_topk,
     _quote,
+    _sql_over,
 )
 from vectordb_light_spark.session import literal_array_sql
 from vectordb_light_spark.session import persist_if_batch as _persist_if_batch
@@ -927,8 +930,8 @@ def ann_topk_pq(
     query stays un-quantized; per subspace the dot product against
     every codeword is precomputed driver-side into an m×n_codes
     lookup table, and each row's approximate score is the sum of m
-    table lookups on its byte code — one parsed JVM expression
-    (:func:`adc_sql`) over the m-byte column. The
+    table lookups on its byte code (:func:`adc_sql`), ranked in one
+    ``spark.sql`` text over the m-byte column. The
     full vector column is never touched, so the scan reads codes+ids
     only; TakeOrderedAndProject keeps the result at k rows per task.
 
@@ -950,12 +953,16 @@ def ann_topk_pq(
     if qv.shape[0] != m * sub:
         raise ValueError(f"query dim {qv.shape[0]} != m*sub {m * sub}")
     lut = np.stack([books[s] @ qv[s * sub : (s + 1) * sub] for s in range(m)])
-    adc = encoded.select(
-        id_col, F.expr(adc_sql(code_col, lut)).alias("similarity_score")
-    ).orderBy(F.col("similarity_score").desc(), F.col(id_col).asc())
+    view, key = f"adc_{uuid.uuid4().hex}", _quote(id_col)
+    adc = (
+        f"SELECT {key}, {adc_sql(code_col, lut)} AS similarity_score "
+        f"FROM {_quote(view)} ORDER BY similarity_score DESC, {key} ASC"
+    )
     if not rerank_pool:
-        return adc.limit(k)
-    pool = adc.limit(int(rerank_pool)).select(id_col)
+        return _sql_over(encoded, view, f"{adc} LIMIT {int(k)}")
+    pool = _sql_over(
+        encoded, view, f"SELECT {key} FROM ({adc} LIMIT {int(rerank_pool)}) AS pool"
+    )
     # rerank_query: the vector the exact re-rank scores against —
     # differs from `query` when the ADC space is a transform of the
     # store space (OPQ rotates the query for ADC but re-ranks the

@@ -18,7 +18,9 @@ reproduces the reference's polling cadence for a live folder.
 
 Scale: the file source lists incrementally (maxFilesPerTrigger bounds
 batch size); appends are new parquet files only — no rewrite of
-existing data; downstream readers see them on the next query. Text
+existing data; downstream readers see them on the next query. Each
+batch appends through the batch path's ``write_vectors``: at most
+``cfg.target_files`` document-clustered zstd files. Text
 formats stream via the wholetext text source; binary formats would
 use the same pipeline behind a binaryFile batch re-list (Spark's file
 stream source handles text-like formats natively).
@@ -32,7 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from vectordb_light_spark.operators.ingest import IngestConfig, build_chunks, build_vectors
+from vectordb_light_spark.operators.ingest import (
+    COMPRESSION,
+    IngestConfig,
+    build_chunks,
+    build_vectors,
+    write_vectors,
+)
 
 
 def watch_folder_stream(
@@ -141,9 +149,11 @@ def start_incremental_ingest(
             vectors = add_srp_signature(
                 vectors, vec_col="vector", dim=int(cfg.embedder_spec.get("dim", 64))
             )
-        vectors.write.mode("append").parquet(vectors_dir)
+        write_vectors(vectors, vectors_dir, cfg.target_files, mode="append")
         if dedup_content:
-            batch_df.select("hash").write.mode("append").parquet(manifest_dir)
+            batch_df.select("hash").write.mode("append").option(
+                "compression", COMPRESSION
+            ).parquet(manifest_dir)
             batch_df.unpersist()
 
     stream = watch_folder_stream(spark, source_dir)
