@@ -131,7 +131,7 @@ def test_python_ws_class_re2_twin_is_exact_on_bmp(spark):
     """The chunker oracles (pipe_chunk_fixed / pipe_pdf_page_chunks,
     r10 pin) strip with the RE2 class
     ``[\\x09-\\x0d\\x1c-\\x1f\\x85\\x{2028}\\x{2029}\\p{Zs}]`` as the
-    twin of the Spark side's ``pystrip`` (Java
+    twin of the Spark side's strip regex (Java
     ``[\\p{IsWhite_Space}\\x1c-\\x1f]``) and of Python ``str.strip()``
     inside the page-split UDF. Exhaustive BMP sweep: all three word
     classes agree on every codepoint. If a container upgrade moves any

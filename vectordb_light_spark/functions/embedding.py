@@ -33,6 +33,7 @@ L2-normalized float32, so cosine ≡ dot product on the read path.
 from __future__ import annotations
 
 import hashlib
+import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -40,8 +41,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from vectordb_light_spark.session import rebalance
+from vectordb_light_spark.session import quote_ident, rebalance, sql_over
 
 DEFAULT_DIM = 64
 
@@ -431,34 +433,28 @@ def _cached_encoder(spec: dict):
     return enc
 
 
-def embed_documents(
+def embed_map(
     df: DataFrame,
     spec: dict,
     *,
     text_col: str = "text",
     out_col: str = "vector",
 ) -> DataFrame:
-    """Add an L2-normalized float32 ``array<float>`` embedding column.
+    """The embed stage on ``df``'s own partitioning and row order: one
+    mapInPandas that adds an L2-normalized float32 ``array<float>``
+    column ``out_col`` after ``df``'s columns, which pass through.
 
-    One mapInPandas stage; all input columns pass through. The encoder
-    is resolved per executor process from ``spec`` and cached, and
-    encodes ``model_encode_batch_size(spec)`` texts at a time (the E4
-    table). Rows are pre-sorted within partitions by text length (E2)
-    so real transformer batches pad near-rectangularly; for the
+    The encoder is resolved per executor process from ``spec`` and
+    cached, and encodes ``model_encode_batch_size(spec)`` texts at a
+    time (the E4 table). Feed it each partition sorted by text length
+    (E2) so real transformer batches pad near-rectangularly; for the
     hashing encoder it's a no-op cost-wise either way.
-
-    Narrow inputs (e.g. one small parquet file → one partition) are
-    widened to the cluster's full core count first
-    (:func:`~vectordb_light_spark.session.rebalance`): encoding is the
-    expensive stage of the write path, and a narrow scan would
-    otherwise serialize it on one core. The shuffle moves only the
-    pre-embed rows (id + text), never vectors.
     """
     encode_batch_size = model_encode_batch_size(spec)
-    in_schema = df.schema
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema)
-    out_schema = f"{fields}, `{out_col}` array<float>"
-    df = rebalance(df).sortWithinPartitions(F.length(text_col).desc())
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in df.schema]
+        + [T.StructField(out_col, T.ArrayType(T.FloatType()))]
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         enc = _cached_encoder(spec)
@@ -472,7 +468,29 @@ def embed_documents(
             out[out_col] = [row for row in mat]
             yield out
 
-    return df.mapInPandas(run, schema=out_schema)
+    return df.mapInPandas(run, schema=schema)
+
+
+def embed_documents(
+    df: DataFrame,
+    spec: dict,
+    *,
+    text_col: str = "text",
+    out_col: str = "vector",
+) -> DataFrame:
+    """:func:`embed_map` over ``df`` with each partition sorted by text
+    length, widened to the cluster's core count first
+    (:func:`~vectordb_light_spark.session.rebalance`) when it is
+    narrower: encoding is the expensive stage of the write path, and a
+    narrow scan would otherwise serialize it on one core. The shuffle
+    moves only the pre-embed rows (id + text), never vectors.
+    """
+    view = f"embed_src_{uuid.uuid4().hex}"
+    by_length = sql_over(
+        rebalance(df), view,
+        f"SELECT * FROM {view} SORT BY length({quote_ident(text_col)}) DESC",
+    )
+    return embed_map(by_length, spec, text_col=text_col, out_col=out_col)
 
 
 def embed_query(text: str, spec: dict) -> list[float]:

@@ -26,12 +26,16 @@ T4 PDF page-aware splitter (reference document_processor.py:411-477):
 from __future__ import annotations
 
 import re
+import uuid
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+from vectordb_light_spark.session import quote_ident, sql_over
+from vectordb_light_spark.sql import ensure_sql_functions
 
 DEFAULT_CHUNK_SIZE = 1200  # reference config.py:26
 DEFAULT_CHUNK_OVERLAP = 600  # reference config.py:27
@@ -49,12 +53,51 @@ def chunk_step(chunk_size: int, chunk_overlap: int) -> int:
 #: alone is ASCII-only and would keep e.g. a lone NBSP chunk that the
 #: reference drops (found by hypothesis, tests/test_properties.py).
 _PY_WS = r"[\p{IsWhite_Space}\x1c-\x1f]"
+#: Python-``str.strip()`` as a ``regexp_replace`` pattern, a raw SQL
+#: literal (reference document_processor.py:393,400 strips all Python
+#: whitespace)
+_PY_STRIP_SQL = f"r'^{_PY_WS}+|{_PY_WS}+$'"
 
 
-def pystrip(col: Column) -> Column:
-    """Python-``str.strip()`` equivalent (reference
-    document_processor.py:393,400 strips all Python whitespace)."""
-    return F.regexp_replace(col, f"^{_PY_WS}+|{_PY_WS}+$", "")
+def fixed_size_chunks_sql(
+    source: str,
+    columns: list[str],
+    *,
+    text_col: str = "text",
+    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    chunk_overlap: int = DEFAULT_CHUNK_OVERLAP,
+    out_col: str = "chunk",
+    index_col: str = "chunk_index",
+) -> str:
+    """The T3 chunk rule as one SELECT over the relation ``source``
+    (a view or CTE name) whose columns are ``columns``: see
+    :func:`split_fixed_size` for its output. ``build_chunks`` embeds
+    the same text, so the rule has one copy.
+
+    Each row's kept pieces are built as one array — a transform over
+    the window starts, then a filter dropping the empty ones — and
+    numbered by ``posexplode``, so the plan is map-only: no window, no
+    exchange. The stripped text stages once: the piece lambda reads the
+    column instead of re-running the strip regex. No emptiness filter:
+    an empty or null text yields no kept piece, so posexplode emits
+    nothing for it. The array goes to posexplode as an expression, not
+    a staged column: on a column, Catalyst infers a size() > 0 filter
+    below the generator and would build every row's pieces twice."""
+    step = chunk_step(chunk_size, chunk_overlap)
+    keep = "".join(f"{quote_ident(c)}, " for c in columns if c != text_col)
+    out, idx = quote_ident(out_col), quote_ident(index_col)
+    pieces = (
+        f"filter(transform(sequence(0, greatest(length(__text) - 1, 0), {step}), "
+        f"s -> named_struct('chunk_start', s, '{out_col}', "
+        f"regexp_replace(substr(__text, s + 1, {int(chunk_size)}), {_PY_STRIP_SQL}, ''))), "
+        f"p -> p.{out} != '')"
+    )
+    return (
+        f"SELECT {keep}__p.chunk_start, __p.{out} AS {out}, {idx} FROM ("
+        f"SELECT {keep}posexplode({pieces}) AS ({idx}, __p) FROM ("
+        f"SELECT {keep}regexp_replace({quote_ident(text_col)}, {_PY_STRIP_SQL}, '') AS __text "
+        f"FROM {source}))"
+    )
 
 
 def split_fixed_size(
@@ -72,39 +115,17 @@ def split_fixed_size(
     Returns the input columns (text_col dropped) plus ``chunk_start``
     (offset into the stripped text), ``out_col`` (the stripped chunk)
     and ``index_col`` (0-based among this row's kept chunks, ordered
-    by offset).
-
-    Each row's kept pieces are built as one array — a transform over
-    the window starts, then a filter dropping the empty ones — and
-    numbered by ``posexplode``, so the plan is map-only: no window, no
-    exchange. ``partition_cols`` is accepted and ignored; numbering is
-    per row.
+    by offset). One ``spark.sql`` text
+    (:func:`fixed_size_chunks_sql`); ``partition_cols`` is accepted
+    and ignored: numbering is per row.
     """
-    step = chunk_step(chunk_size, chunk_overlap)
-    keep = [c for c in df.columns if c != text_col]
-
-    # the stripped text stages once: the piece lambda reads the column
-    # instead of re-running the strip regex. No emptiness filter: an
-    # empty or null text yields no kept piece, so posexplode emits
-    # nothing for it.
-    base = df.select(*keep, pystrip(F.col(text_col)).alias("__text"))
-    text = F.col("__text")
-    starts = F.sequence(F.lit(0), F.greatest(F.length(text) - 1, F.lit(0)), F.lit(step))
-    # the array goes to posexplode as an expression, not a staged
-    # column: on a column, Catalyst infers a size() > 0 filter below
-    # the generator and would build every row's pieces twice
-    pieces = F.filter(
-        F.transform(
-            starts,
-            lambda s: F.struct(
-                s.alias("chunk_start"),
-                pystrip(text.substr(s + 1, F.lit(chunk_size))).alias(out_col),
-            ),
+    view = f"chunk_src_{uuid.uuid4().hex}"
+    return sql_over(
+        df, view,
+        fixed_size_chunks_sql(
+            view, df.columns, text_col=text_col, chunk_size=chunk_size,
+            chunk_overlap=chunk_overlap, out_col=out_col, index_col=index_col,
         ),
-        lambda p: p[out_col] != "",
-    )
-    return base.select(*keep, F.posexplode(pieces).alias(index_col, "__p")).select(
-        *keep, "__p.chunk_start", F.col("__p")[out_col].alias(out_col), index_col
     )
 
 
@@ -117,9 +138,21 @@ _PAGE_CHUNK_SCHEMA = T.ArrayType(
     )
 )
 
+_PAGE_MARKER = re.compile(r"\[\[page(\d+)\]\]")
 
-def make_page_split_udf(chunk_size: int = DEFAULT_CHUNK_SIZE, chunk_overlap: int = DEFAULT_CHUNK_OVERLAP):
-    """Pandas UDF for the PDF page-aware splitter (reference T4,
+
+def _page_step(chunk_size: int, chunk_overlap: int) -> int:
+    """step = size - overlap with no ≥1 clamp (reference
+    document_processor.py:411-477); the reference's config rejects
+    overlap ≥ size (config.py:35-39), and so does this."""
+    step = chunk_size - chunk_overlap
+    if step <= 0:
+        raise ValueError("chunk_overlap must be < chunk_size")
+    return step
+
+
+def split_pages(text: str | None, chunk_size: int, chunk_overlap: int) -> list[tuple[str, int]] | None:
+    """The PDF page-aware splitter on one text (reference T4,
     document_processor.py:411-477).
 
     Semantics replicated exactly:
@@ -127,46 +160,76 @@ def make_page_split_udf(chunk_size: int = DEFAULT_CHUNK_SIZE, chunk_overlap: int
         marker-free text (cumulative marker-length offset subtraction)
       - text chunked WITHOUT a leading global strip (unlike T3)
       - iteration: start = 0; while start < len; start += size-overlap
-        (no ≥1 clamp here — caller must validate overlap < size, as
-        the reference's config does at config.py:35-39)
       - chunk attributed to the last marker at-or-before its start;
         no marker before it → page 1 (:440-448)
       - empty-after-strip chunks dropped
     """
-    step = chunk_size - chunk_overlap
-    if step <= 0:
-        raise ValueError("chunk_overlap must be < chunk_size")
+    if text is None:
+        return None
+    step = _page_step(chunk_size, chunk_overlap)
+    markers: list[tuple[int, int]] = []
+    offset = 0
+    for m in _PAGE_MARKER.finditer(text):
+        markers.append((m.start() - offset, int(m.group(1))))
+        offset += len(m.group(0))
+    clean = _PAGE_MARKER.sub("", text)
+    out: list[tuple[str, int]] = []
+    start = 0
+    while start < len(clean):
+        piece = clean[start : start + chunk_size].strip()
+        if piece:
+            page = 1
+            for pos, pg in reversed(markers):
+                if pos <= start:
+                    page = pg
+                    break
+            out.append((piece, page))
+        start += step
+    return out
 
-    marker_re = re.compile(r"\[\[page(\d+)\]\]")
 
-    def split_one(text: str | None) -> list[tuple[str, int]] | None:
-        if text is None:
-            return None
-        markers: list[tuple[int, int]] = []
-        offset = 0
-        for m in marker_re.finditer(text):
-            markers.append((m.start() - offset, int(m.group(1))))
-            offset += len(m.group(0))
-        clean = marker_re.sub("", text)
-        out: list[tuple[str, int]] = []
-        start = 0
-        while start < len(clean):
-            piece = clean[start : start + chunk_size].strip()
-            if piece:
-                page = 1
-                for pos, pg in reversed(markers):
-                    if pos <= start:
-                        page = pg
-                        break
-                out.append((piece, page))
-            start += step
-        return out
+def make_page_split_udf():
+    """Arrow-batched pandas UDF ``(text, chunk_size, chunk_overlap) →
+    array<struct<chunk, page_number>>`` over :func:`split_pages`;
+    registered for SQL as ``vdb_page_split``
+    (:func:`~vectordb_light_spark.sql.ensure_sql_functions`)."""
 
     @pandas_udf(_PAGE_CHUNK_SCHEMA)
-    def page_split(texts: pd.Series) -> pd.Series:
-        return texts.map(split_one)
+    def page_split(texts: pd.Series, sizes: pd.Series, overlaps: pd.Series) -> pd.Series:
+        return pd.Series(
+            [split_pages(t, int(s), int(o)) for t, s, o in zip(texts, sizes, overlaps)],
+            index=texts.index,
+        )
 
     return page_split
+
+
+def pdf_page_chunks_sql(
+    source: str,
+    columns: list[str],
+    *,
+    text_col: str = "text",
+    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    chunk_overlap: int = DEFAULT_CHUNK_OVERLAP,
+    partition_cols: list[str] | None = None,
+) -> str:
+    """The T4 page split as one SELECT over the relation ``source``
+    (columns ``columns``): see :func:`split_pdf_pages`. Needs the
+    session's ``vdb_page_split`` function.
+
+    The explode is ``posexplode_outer`` plus a not-null filter: a plain
+    ``posexplode`` of the UDF column makes Catalyst infer a
+    ``size(__chunks) > 0`` filter and push it below the generator,
+    which plans a second run of the splitter UDF."""
+    _page_step(chunk_size, chunk_overlap)
+    part = partition_cols or [c for c in columns if c != text_col]
+    keep = "".join(f"{quote_ident(c)}, " for c in part)
+    return (
+        f"SELECT {keep}chunk_index, __c.chunk AS chunk, __c.page_number AS page_number "
+        f"FROM (SELECT *, posexplode_outer(__chunks) AS (chunk_index, __c) FROM ("
+        f"SELECT *, vdb_page_split({quote_ident(text_col)}, {int(chunk_size)}, "
+        f"{int(chunk_overlap)}) AS __chunks FROM {source})) WHERE __c IS NOT NULL"
+    )
 
 
 def split_pdf_pages(
@@ -177,27 +240,17 @@ def split_pdf_pages(
     chunk_overlap: int = DEFAULT_CHUNK_OVERLAP,
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Apply the page-aware splitter and explode to one row per chunk
-    with ``chunk``, ``page_number`` and ``chunk_index`` columns.
-
-    The explode is ``posexplode_outer`` plus a not-null filter: a plain
-    ``posexplode`` of the UDF column makes Catalyst infer a
-    ``size(__chunks) > 0`` filter and push it below the generator,
-    which plans a second run of the splitter UDF."""
-    part = partition_cols or [c for c in df.columns if c != text_col]
-    udf = make_page_split_udf(chunk_size, chunk_overlap)
-    exploded = (
-        df.withColumn("__chunks", udf(F.col(text_col)))
-        .select("*", F.posexplode_outer("__chunks").alias("chunk_index", "__c"))
-        .where(F.col("__c").isNotNull())
-        .select(
-            *part,
-            "chunk_index",
-            F.col("__c.chunk").alias("chunk"),
-            F.col("__c.page_number").alias("page_number"),
-        )
+    """Apply the page-aware splitter and explode to one row per chunk:
+    ``partition_cols`` (default: every column but ``text_col``), then
+    ``chunk_index``, ``chunk`` and ``page_number``. One ``spark.sql``
+    text (:func:`pdf_page_chunks_sql`)."""
+    view = f"pages_src_{uuid.uuid4().hex}"
+    text = pdf_page_chunks_sql(
+        view, df.columns, text_col=text_col, chunk_size=chunk_size,
+        chunk_overlap=chunk_overlap, partition_cols=partition_cols,
     )
-    return exploded
+    ensure_sql_functions(df.sparkSession)
+    return sql_over(df, view, text)
 
 
 def split_token_windows(

@@ -22,9 +22,12 @@ Sink-semantics parity:
   K4  FLAT index ingest               → no-op: FLAT ≡ full scan of the
       vectors table (index = the L2-normalized vector column)
   K5  index metadata sidecar          → _meta.json with the same keys
-      (vector_db_creator.py:346-354) + the embedder spec
-  K6  SQLite documents/hash tables    → documents parquet (zstd); id→hash
-      is the doc_hash column on vectors (no separate join table)
+      (vector_db_creator.py:346-354) + the embedder spec;
+      ``num_vectors`` is the row count :func:`write_vectors` observes
+      in the write itself (no re-read of the store)
+  K6  SQLite documents/hash tables    → documents parquet (zstd, at most
+      ``target_files`` files); id→hash is the doc_hash column on
+      vectors (no separate join table)
   K7  exists guard                    → mkdir(exist_ok=False) parity
   K8  failed-write cleanup            → write to <db>.tmp-…, atomic
       rename on success, rmtree on failure
@@ -46,11 +49,13 @@ so zstd's window sees each shared half twice in a row; the
 round-robin snappy layout this replaces stored 2.22 bytes per corpus
 text byte on the benchmark's ``query`` store, this one 0.87.
 
-Scale: chunks inherit the scan's partitioning (narrow explode) and
-the embed stage is map-only; the one shuffle is the write's
-partitioning. The 64-chunk block keeps one huge document from landing
-in one file, and ``target_files`` is an upper bound: a bucket no key
-hashes to writes no file.
+Scale: chunk + normalize is one ``spark.sql`` text on the scan's
+partitioning (narrow explode), widened by a round-robin exchange to
+the core count when the scan is narrower; the embed stage is
+map-only; the other shuffle is the write's partitioning. The 64-chunk
+block keeps one huge document from landing in one file, and
+``target_files`` is an upper bound: a bucket no key hashes to writes
+no file.
 """
 
 from __future__ import annotations
@@ -59,19 +64,22 @@ import json
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from vectordb_light_spark.functions.embedding import DEFAULT_DIM, embed_documents
-from vectordb_light_spark.functions.text import make_normalize_udf
+from vectordb_light_spark.functions.embedding import DEFAULT_DIM, embed_map
 from vectordb_light_spark.operators.chunker import (
     DEFAULT_CHUNK_OVERLAP,
     DEFAULT_CHUNK_SIZE,
-    split_fixed_size,
-    split_pdf_pages,
+    fixed_size_chunks_sql,
+    pdf_page_chunks_sql,
 )
+from vectordb_light_spark.session import num_partitions, quote_ident, sql_over
+from vectordb_light_spark.sql import ensure_sql_functions
 
 META_FILE = "_meta.json"
 #: parquet codec of every table a database stores
@@ -106,57 +114,79 @@ def build_chunks(documents: DataFrame, cfg: IngestConfig) -> DataFrame:
     ``file_type``) go through the page-aware splitter; everything else
     through the fixed-size builtin splitter. Output adds chunk_index,
     page_number (null for non-PDF), chunk text in ``text``.
+
+    One ``spark.sql`` text over the documents: the chunk rule
+    (:func:`~vectordb_light_spark.operators.chunker.fixed_size_chunks_sql`),
+    the page split and the normalize explode, with the pandas UDFs
+    called by their registered names. The DataFrame-API build of the
+    same plan cost ~810 py4j round trips.
+
+    Widening: when ``documents`` has fewer partitions than the cluster
+    has cores, the text ends in a ``REPARTITION`` to the core count,
+    after normalize, so the embed stage that follows runs on every
+    core. The decision reads the documents' own partition count: the
+    chunk plan's union counts the PDF branch's partitions too, empty
+    or not. Each partition is then sorted by chunk length, longest
+    first, the order :func:`build_vectors`' encoder batches want (E2).
     """
-    meta_cols = [c for c in documents.columns if c != "text"]
-    is_pdf = F.col("file_type") == ".pdf"
-
-    plain = split_fixed_size(
-        documents.where(~is_pdf),
-        chunk_size=cfg.chunk_size,
-        chunk_overlap=cfg.chunk_overlap,
-    ).select(*meta_cols, "chunk_index", F.col("chunk"), F.lit(None).cast("int").alias("page_number"))
-
-    pdf = split_pdf_pages(
-        documents.where(is_pdf),
-        chunk_size=cfg.chunk_size,
-        chunk_overlap=cfg.chunk_overlap,
-        partition_cols=meta_cols,
-    ).select(*meta_cols, "chunk_index", F.col("chunk"), "page_number")
-
-    chunks = plain.unionByName(pdf)
-
+    columns = documents.columns
+    meta = "".join(f"{quote_ident(c)}, " for c in columns if c != "text")
+    split = {"chunk_size": cfg.chunk_size, "chunk_overlap": cfg.chunk_overlap}
+    view = f"ingest_docs_{uuid.uuid4().hex}"
     # T5 normalize (whitespace mode, reference stage_split.py:60-63);
     # empty-after-normalize chunks drop (normalize returns null). The
     # null-drop is fused into the SAME expression as the UDF — a
-    # separate Filter referencing the UDF column would get its own
+    # separate filter referencing the UDF column would get its own
     # ArrowEvalPython node and run normalize twice.
-    normalize = make_normalize_udf(preserve_whitespace=True)
-    keep = [c for c in chunks.columns if c != "chunk"]
-    return chunks.select(
-        *keep,
-        F.explode(
-            F.filter(F.array(normalize(F.col("chunk"))), lambda x: x.isNotNull())
-        ).alias("text"),
+    text = (
+        f"WITH plain_docs AS (SELECT * FROM {view} WHERE NOT (file_type = '.pdf')), "
+        f"pdf_docs AS (SELECT * FROM {view} WHERE file_type = '.pdf'), "
+        f"chunks AS ("
+        f"SELECT {meta}chunk_index, chunk, CAST(NULL AS INT) AS page_number "
+        f"FROM ({fixed_size_chunks_sql('plain_docs', columns, **split)}) "
+        f"UNION ALL SELECT {meta}chunk_index, chunk, page_number "
+        f"FROM ({pdf_page_chunks_sql('pdf_docs', columns, **split)})), "
+        f"normalized AS (SELECT {meta}chunk_index, page_number, explode(filter("
+        f"array(vdb_normalize_text(chunk)), x -> x IS NOT NULL)) AS text FROM chunks) "
+        f"SELECT {_widen_hint(documents)}* FROM normalized SORT BY length(text) DESC"
     )
+    ensure_sql_functions(documents.sparkSession)
+    return sql_over(documents, view, text)
+
+
+def _widen_hint(documents: DataFrame) -> str:
+    """A ``REPARTITION`` hint to the core count when ``documents`` is
+    narrower, else nothing."""
+    cores = documents.sparkSession.sparkContext.defaultParallelism
+    return f"/*+ REPARTITION({cores}) */ " if num_partitions(documents) < cores else ""
 
 
 def build_vectors(chunks: DataFrame, cfg: IngestConfig) -> DataFrame:
     """E-stage + K2: embed chunks, assign deterministic 64-bit ids.
 
-    id = xxhash64(doc_hash, file_name, chunk_index) — stable across
-    runs and executors, and distinct for two files with identical
-    content (chunk_index numbers each file's chunks from 0, so
-    (doc_hash, chunk_index) alone would collide); collision odds at
-    100 TB (~2^40 chunks) stay below the reference's own random-uint64
+    The embed map runs on ``chunks``' partitioning and order, which
+    :func:`build_chunks` has widened and sorted by length. id =
+    xxhash64(doc_hash, file_name, chunk_index) — stable across runs
+    and executors, and distinct for two files with identical content
+    (chunk_index numbers each file's chunks from 0, so (doc_hash,
+    chunk_index) alone would collide); collision odds at 100 TB
+    (~2^40 chunks) stay below the reference's own random-uint64
     scheme. The file NAME, not the full path: the same corpus gets the
     same ids wherever it is mounted. The loaders scan one flat
     directory, so names are unique within a load; identical content
     under one name in two directories of a glob load would share ids.
     """
-    embedded = embed_documents(chunks, cfg.embedder_spec, text_col="text")
-    return embedded.withColumn(
-        "id", F.xxhash64(F.col("hash"), F.col("file_name"), F.col("chunk_index"))
-    ).withColumnRenamed("hash", "doc_hash")
+    embedded = embed_map(chunks, cfg.embedder_spec, text_col="text")
+    ident = "xxhash64(`hash`, `file_name`, `chunk_index`) AS `id`"
+    columns = chunks.columns + ["vector"]
+    select = [
+        ident if c == "id" else "`hash` AS `doc_hash`" if c == "hash" else quote_ident(c)
+        for c in columns
+    ]
+    if "id" not in columns:
+        select.append(ident)
+    view = f"embedded_{uuid.uuid4().hex}"
+    return sql_over(embedded, view, f"SELECT {', '.join(select)} FROM {view}")
 
 
 def _meta_payload(cfg: IngestConfig, num_vectors: int) -> dict:
@@ -180,24 +210,34 @@ def write_vectors(
     *,
     mode: str,
     partition_by: str | None = None,
-) -> None:
+) -> int:
     """Write a ``vectors/`` store: at most ``n_files`` zstd parquet
     files (per ``partition_by`` directory), each holding whole 64-chunk
     blocks of documents sorted by (doc_hash, file_name, chunk_index).
+    Returns the number of rows written.
 
     The hash key is (doc_hash, file_name, chunk_index DIV 64), so a
     document's neighbouring, half-overlapping chunks sit next to each
     other in one file, where zstd compresses the shared halves, and a
     huge document still spreads over several files. ``partition_by``
     leads the sort, so the partitioned write keeps this order instead
-    of adding its own sort."""
+    of adding its own sort.
+
+    The row count is an ``observe`` metric of the write's result
+    stage, between the exchange and the sort: Spark merges each result
+    task's metrics once, so a retried task cannot count twice, and no
+    job re-reads the store. Below the sort, it leaves the sort's order
+    in sight of the partitioned write, which would otherwise plan a
+    sort of its own by ``partition_by``."""
     keys = ["doc_hash", "file_name", "chunk_index"]
     order = ([partition_by] if partition_by else []) + keys
+    written = Observation(f"write_vectors_{uuid.uuid4().hex}")
     w = (
         df.repartition(
             int(n_files), "doc_hash", "file_name",
             F.expr(f"chunk_index DIV {CHUNK_BLOCK}"),
         )
+        .observe(written, F.count(F.lit(1)).alias("rows"))
         .sortWithinPartitions(*order)
         .write.mode(mode)
         .option("compression", COMPRESSION)
@@ -205,6 +245,7 @@ def write_vectors(
     if partition_by:
         w = w.partitionBy(partition_by)
     w.parquet(path)
+    return int(written.get["rows"])
 
 
 def vector_files(vectors_dir: str) -> list[str]:
@@ -238,6 +279,10 @@ def create_database(
     Atomic: stages into <name>.tmp-<uuid>, renames on success, removes
     on any failure (K8). Raises FileExistsError if the database exists
     (K7, reference vector_db_creator.py:464-471).
+
+    The vectors write and the documents write run as concurrent jobs;
+    ``num_vectors`` is the count the vectors write observes, so nothing
+    re-reads the store.
     """
     final_dir = os.path.join(db_root, name)
     if os.path.exists(final_dir):
@@ -250,27 +295,34 @@ def create_database(
         # logs (docs extracted vector_db_creator.py:397, chunks after
         # split+normalize :438, stage_split.py:429-431) computed inside
         # the SAME job as the write, no extra scan.
-        from pyspark.sql import Observation
-
         obs_docs, obs_chunks = Observation("ingest_docs"), Observation("ingest_chunks")
-        documents = documents.observe(obs_docs, F.count(F.lit(1)).alias("n_docs"))
-        chunks = build_chunks(documents, cfg)
-        chunks = chunks.observe(
+        documents = documents.observe(obs_docs, F.expr("count(1) AS n_docs"))
+        chunks = build_chunks(documents, cfg).observe(
             obs_chunks,
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.avg(F.length("text")).alias("avg_chunk_chars"),
+            F.expr("count(1) AS n_chunks"),
+            F.expr("avg(length(text)) AS avg_chunk_chars"),
         )
-        vectors = build_vectors(chunks, cfg)
-        write_vectors(
-            vectors, os.path.join(tmp_dir, "vectors"), cfg.target_files, mode="error"
+        # the input's partitioning leaves one small file per scan split;
+        # coalescing merges them without a shuffle
+        docs_writer = documents.coalesce(cfg.target_files).write.mode("error").option(
+            "compression", COMPRESSION
         )
-        documents.write.mode("error").option("compression", COMPRESSION).parquet(
-            os.path.join(tmp_dir, "documents")
-        )
+        # documents/ is written while the vectors are: its small job
+        # runs on cores the chunk stage leaves idle. Leaving the pool
+        # waits for it, so a failed vectors write cleans up after both.
+        with ThreadPoolExecutor(1) as pool:
+            docs_written = pool.submit(
+                inheritable_thread_target(spark)(docs_writer.parquet),
+                os.path.join(tmp_dir, "documents"),
+            )
+            num_vectors = write_vectors(
+                build_vectors(chunks, cfg), os.path.join(tmp_dir, "vectors"),
+                cfg.target_files, mode="error",
+            )
+            docs_written.result()
 
-        written = spark.read.parquet(os.path.join(tmp_dir, "vectors"))
-        meta = _meta_payload(cfg, num_vectors=written.count())
-        stats = {**obs_docs.get, **obs_chunks.get}
+        meta = _meta_payload(cfg, num_vectors=num_vectors)
+        stats = {**_observed(obs_docs), **_observed(obs_chunks)}
         meta["observed"] = {
             k: (round(v, 3) if isinstance(v, float) else v)
             for k, v in stats.items()
@@ -284,6 +336,15 @@ def create_database(
     except BaseException:
         shutil.rmtree(tmp_dir, ignore_errors=True)
         raise
+
+
+def _observed(obs: Observation) -> dict:
+    """``obs``'s metrics, or nothing when the optimizer proved the
+    observed frame empty and dropped the metric node (an empty input:
+    PySpark's ``get`` fails on the empty row it then completes with)."""
+    if obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
 
 
 def delete_database(db_root: str, name: str) -> None:
@@ -359,7 +420,7 @@ def compact_vectors(
     tmp_dir = vectors_dir + ".compact-tmp"
     shutil.rmtree(tmp_dir, ignore_errors=True)
     try:
-        write_vectors(
+        num_vectors = write_vectors(
             df, tmp_dir, n_out, mode="error", partition_by=store_partition(vectors_dir)
         )
         n_written = len(vector_files(tmp_dir))
@@ -379,14 +440,14 @@ def compact_vectors(
     # Refresh the num_vectors size hint (r7): streaming micro-batches
     # append rows without touching _meta.json, and compaction is the
     # documented post-stream maintenance step — so this is where the
-    # hint re-synchronizes (count() on the fresh parquet is
-    # metadata-only). engine._size_hints feeds it to the tiered
-    # similarity operators in place of probe jobs.
+    # hint re-synchronizes, from the rows the rewrite wrote.
+    # engine._size_hints feeds it to the tiered similarity operators in
+    # place of probe jobs.
     meta_path = os.path.join(db_path, META_FILE)
     if os.path.exists(meta_path):
         with open(meta_path) as f:
             meta = json.load(f)
-        meta["num_vectors"] = spark.read.parquet(vectors_dir).count()
+        meta["num_vectors"] = num_vectors
         # Atomic swap, matching the manifest fold below: an in-place
         # open('w') truncates first, so a crash mid-dump corrupts the
         # store's metadata; os.replace of a fully-written temp cannot.

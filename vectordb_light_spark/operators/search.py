@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vectordb_light_spark.session import literal_array_sql
+from vectordb_light_spark.session import literal_array_sql, quote_ident, sql_over
 
 
 @dataclass(frozen=True)
@@ -91,11 +91,6 @@ class SearchParams:
             )
 
 
-def _quote(name: str) -> str:
-    """Back-quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def similarity_sql(vec_col: str, query: list[float], *, assume_normalized: bool) -> str:
     """Cosine similarity of a vector column against one literal query
     vector as SQL text, clipped to [0,1] like the reference's
@@ -104,7 +99,7 @@ def similarity_sql(vec_col: str, query: list[float], *, assume_normalized: bool)
     as ONE parsed SQL expression like ``session.literal_array``
     (lambda-built HOF trees pay a py4j round trip per node at every
     plan build)."""
-    q, vec = [float(v) for v in query], _quote(vec_col)
+    q, vec = [float(v) for v in query], quote_ident(vec_col)
     sim = (
         f"aggregate(zip_with({vec}, {literal_array_sql(q, 'double')}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
@@ -151,12 +146,12 @@ def search_sql(
     ``document_type`` are bound as the named parameters in ``args``,
     never pasted."""
     gone = {vec_col, *drop}
-    keep = ", ".join(_quote(c) for c in columns if c not in gone)
+    keep = ", ".join(quote_ident(c) for c in columns if c not in gone)
     sim = similarity_sql(vec_col, query, assume_normalized=params.assume_normalized)
-    scored = f"SELECT {keep}, {sim} AS similarity_score FROM {_quote(source)}"
+    scored = f"SELECT {keep}, {sim} AS similarity_score FROM {quote_ident(source)}"
     if where:
         scored += f" WHERE {where}"
-    order = f"similarity_score DESC, {_quote(id_col)} ASC"
+    order = f"similarity_score DESC, {quote_ident(id_col)} ASC"
     cond = [f"similarity_score >= {float(params.threshold)!r}D"]
     args = {}
     if params.search_term:
@@ -178,21 +173,6 @@ def search_sql(
     return scored, ranked, top, args
 
 
-def _sql_over(df: DataFrame, view: str, text: str, args: dict | None = None) -> DataFrame:
-    """``spark.sql(text, args)`` with ``df`` registered as the temp view
-    ``view`` only while the text is analyzed."""
-    spark = df.sparkSession
-    df.createOrReplaceTempView(view)
-    try:
-        return spark.sql(text, args)
-    finally:
-        # The session catalog's drop: spark.catalog.dropTempView, and so
-        # spark.sql(..., vectors=df), also uncaches the view's plan,
-        # which would unpersist a cached ``df`` for every later
-        # consumer. The analyzed result no longer needs the name.
-        spark._jsparkSession.sessionState().catalog().dropTempView(view)
-
-
 def _exact_topk(
     vectors: DataFrame,
     query: list[float],
@@ -209,7 +189,7 @@ def _exact_topk(
         view, vectors.columns, query, params,
         id_col=id_col, vec_col=vec_col, where=where,
     )
-    return _sql_over(vectors, view, ranked, args)
+    return sql_over(vectors, view, ranked, args)
 
 
 def topk_cosine(
@@ -334,11 +314,11 @@ def _batched_topk(
     if threshold is not None:
         cond += f" AND similarity_score >= {float(threshold)!r}D"
     view = f"topk_{uuid.uuid4().hex}"
-    return _sql_over(
+    return sql_over(
         local, view,
         f"SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY "
-        f"{_quote(query_id_col)} ORDER BY similarity_score DESC, "
-        f"{_quote(id_col)} ASC) AS `rank` FROM {_quote(view)}) AS ranked "
+        f"{quote_ident(query_id_col)} ORDER BY similarity_score DESC, "
+        f"{quote_ident(id_col)} ASC) AS `rank` FROM {quote_ident(view)}) AS ranked "
         f"WHERE {cond}",
     )
 

@@ -48,10 +48,8 @@ from vectordb_light_spark.operators.search import (
     SearchParams,
     _batched_topk,
     _exact_topk,
-    _quote,
-    _sql_over,
 )
-from vectordb_light_spark.session import literal_array_sql
+from vectordb_light_spark.session import literal_array_sql, quote_ident, sql_over
 from vectordb_light_spark.session import persist_if_batch as _persist_if_batch
 
 DEFAULT_PLANES = 16
@@ -166,7 +164,7 @@ def srp_radius_sql(
     zero vector math on pruned rows, shared by :func:`ann_topk_srp`
     and ``VectorDB.search(ann_radius=)``."""
     qsig = srp_signature_of(query, srp_planes(len(query), n_planes, seed))
-    return f"bit_count({_quote(sig_col)} ^ ({qsig}L)) <= {int(radius)}"
+    return f"bit_count({quote_ident(sig_col)} ^ ({qsig}L)) <= {int(radius)}"
 
 
 def ann_topk_srp(
@@ -290,7 +288,7 @@ def ivf_probe_sql(
     partitioned by cluster id it is a partition filter."""
     order = np.argsort(-(centroids @ np.asarray(query, dtype=np.float64)))
     probes = ", ".join(str(int(c)) for c in order[:nprobe])
-    return f"{_quote(cluster_col)} IN ({probes})" if probes else "FALSE"
+    return f"{quote_ident(cluster_col)} IN ({probes})" if probes else "FALSE"
 
 
 def ann_topk_ivf(
@@ -908,7 +906,7 @@ def adc_sql(code_col: str, lut: np.ndarray) -> str:
     lambda-built form paid a py4j round trip per node at every build."""
     rows = ", ".join(literal_array_sql(row, "double") for row in lut)
     return (
-        f"aggregate(zip_with(sequence(1, {len(lut)}), {_quote(code_col)}, "
+        f"aggregate(zip_with(sequence(1, {len(lut)}), {quote_ident(code_col)}, "
         f"(i, c) -> element_at(element_at(array({rows}), i), CAST(c AS INT) + 1)), "
         "0.0D, (acc, x) -> acc + x)"
     )
@@ -953,14 +951,14 @@ def ann_topk_pq(
     if qv.shape[0] != m * sub:
         raise ValueError(f"query dim {qv.shape[0]} != m*sub {m * sub}")
     lut = np.stack([books[s] @ qv[s * sub : (s + 1) * sub] for s in range(m)])
-    view, key = f"adc_{uuid.uuid4().hex}", _quote(id_col)
+    view, key = f"adc_{uuid.uuid4().hex}", quote_ident(id_col)
     adc = (
         f"SELECT {key}, {adc_sql(code_col, lut)} AS similarity_score "
-        f"FROM {_quote(view)} ORDER BY similarity_score DESC, {key} ASC"
+        f"FROM {quote_ident(view)} ORDER BY similarity_score DESC, {key} ASC"
     )
     if not rerank_pool:
-        return _sql_over(encoded, view, f"{adc} LIMIT {int(k)}")
-    pool = _sql_over(
+        return sql_over(encoded, view, f"{adc} LIMIT {int(k)}")
+    pool = sql_over(
         encoded, view, f"SELECT {key} FROM ({adc} LIMIT {int(rerank_pool)}) AS pool"
     )
     # rerank_query: the vector the exact re-rank scores against —

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -231,9 +232,55 @@ def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.isStreaming:
         return df
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if num_partitions(df) < target:
         return df.repartition(target)
     return df
+
+
+def num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s physical plan, read off its own
+    query execution: three py4j round trips, where ``df.rdd`` builds a
+    Python RDD over it first. Like ``df.rdd``, it runs the shuffle
+    stages of a plan with an exchange, so probe a frame that has none.
+    An ``observe``d frame keeps its metrics (``df._jdf.rdd()``, the
+    Dataset's own RDD, would complete them with zeros)."""
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
+def quote_ident(name: str) -> str:
+    """Back-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+#: SparkSession → its JVM session catalog, so :func:`sql_over`'s drop
+#: is one py4j round trip instead of three
+_SESSION_CATALOGS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _session_catalog(spark: SparkSession):
+    catalog = _SESSION_CATALOGS.get(spark)
+    if catalog is None:
+        catalog = _SESSION_CATALOGS[spark] = spark._jsparkSession.sessionState().catalog()
+    return catalog
+
+
+def sql_over(df: DataFrame, view: str, text: str, args: dict | None = None) -> DataFrame:
+    """``spark.sql(text, args)`` with ``df`` registered as the temp view
+    ``view`` only while the text is analyzed."""
+    spark = df.sparkSession
+    df.createOrReplaceTempView(view)
+    try:
+        if args:
+            return spark.sql(text, args)
+        # one py4j round trip, where spark.sql converts an empty
+        # argument list in four more
+        return DataFrame(spark._jsparkSession.sql(text), spark)
+    finally:
+        # The session catalog's drop: spark.catalog.dropTempView, and so
+        # spark.sql(..., vectors=df), also uncaches the view's plan,
+        # which would unpersist a cached ``df`` for every later
+        # consumer. The analyzed result no longer needs the name.
+        _session_catalog(spark).dropTempView(view)
 
 
 def pushdown_barrier(df: DataFrame) -> DataFrame:

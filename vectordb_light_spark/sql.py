@@ -15,11 +15,14 @@ the flagship search is one SQL statement::
     ORDER BY similarity DESC, vec_id LIMIT 6
 
 Only genuinely non-SQL computations register as functions: the NFKC
-normalizers run as the same Arrow-batched pandas UDFs the DataFrame
-API uses (``vdb_normalize_text`` / ``vdb_normalize_query``), so the
-SQL route pays no extra cost. Table registration is plain
-``createOrReplaceTempView`` over the parquet scans — every Catalyst
-optimization (pushdown, pruning, AQE) applies unchanged.
+normalizers (``vdb_normalize_text`` / ``vdb_normalize_query``) and the
+PDF page splitter (``vdb_page_split(text, chunk_size, chunk_overlap)``)
+run as Arrow-batched pandas UDFs. The write path's chunk text
+(``operators/ingest.build_chunks``) calls them by these names, so the
+SQL route and the engine's own plans are the same plans. Table
+registration is plain ``createOrReplaceTempView`` over the parquet
+scans — every Catalyst optimization (pushdown, pruning, AQE) applies
+unchanged.
 """
 
 from __future__ import annotations
@@ -48,6 +51,28 @@ SQL_IDIOMS = {
 }
 
 
+#: The Python-backed functions :func:`ensure_sql_functions` registers.
+SQL_FUNCTIONS = ("vdb_normalize_text", "vdb_normalize_query", "vdb_page_split")
+
+
+def _register_functions(spark: SparkSession) -> None:
+    from vectordb_light_spark.functions.text import make_normalize_udf
+    from vectordb_light_spark.operators.chunker import make_page_split_udf
+
+    spark.udf.register("vdb_normalize_text", make_normalize_udf(True))
+    spark.udf.register("vdb_normalize_query", make_normalize_udf(False))
+    # registered last: ensure_sql_functions probes this name
+    spark.udf.register("vdb_page_split", make_page_split_udf())
+
+
+def ensure_sql_functions(spark: SparkSession) -> None:
+    """Register :data:`SQL_FUNCTIONS` in ``spark`` unless they are
+    there. A registration costs ~18 py4j round trips per function,
+    the probe one."""
+    if not spark.catalog.functionExists(SQL_FUNCTIONS[-1]):
+        _register_functions(spark)
+
+
 def register_sql_surface(
     spark: SparkSession, sf_dir: str | None = None
 ) -> list[str]:
@@ -55,13 +80,10 @@ def register_sql_surface(
     pandas UDFs) for ``spark.sql``, and optionally the testdata
     tables at ``sf_dir`` as temp views. Returns the function names.
     Idempotent — re-registration replaces."""
-    from vectordb_light_spark.functions.text import make_normalize_udf
-
-    spark.udf.register("vdb_normalize_text", make_normalize_udf(True))
-    spark.udf.register("vdb_normalize_query", make_normalize_udf(False))
+    _register_functions(spark)
 
     if sf_dir:
         for t in TESTDATA_TABLES:
             load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
-    return ["vdb_normalize_text", "vdb_normalize_query"]
+    return list(SQL_FUNCTIONS)
