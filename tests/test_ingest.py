@@ -168,6 +168,36 @@ def built_db(spark, doc_dir, tmp_path_factory):
     return root, meta, rejects
 
 
+def test_load_directory_reads_the_files_as_they_are_now(spark, tmp_path):
+    """A second load of a directory in the same session sees an edited
+    and an added file: the first load's extraction is not served from
+    a cache."""
+    src = tmp_path / "src"
+    src.mkdir()
+    body = {name: " ".join([word] * 60) for name, word in
+            (("a.txt", "alpha"), ("b.txt", "bravo"))}
+    for name, text in body.items():
+        (src / name).write_text(text)
+    cfg = IngestConfig(
+        chunk_size=200,
+        chunk_overlap=50,
+        embedder_spec={"encoder": "hashing", "dim": 8, "seed": 0},
+        target_files=1,
+    )
+    root = str(tmp_path / "root")
+    docs, _ = load_directory(spark, str(src))
+    first = create_database(spark, docs, root, "v1", cfg)
+
+    body.update({"a.txt": " ".join(["hotel"] * 60), "c.txt": " ".join(["delta"] * 60)})
+    for name in ("a.txt", "c.txt"):
+        (src / name).write_text(body[name])
+    docs, _ = load_directory(spark, str(src))
+    assert {r["file_name"]: r["text"] for r in docs.collect()} == body
+    second = create_database(spark, docs, root, "v2", cfg)
+    assert first["observed"]["n_docs"] == 2 and second["observed"]["n_docs"] == 3
+    assert second["num_vectors"] * 2 == first["num_vectors"] * 3
+
+
 def test_load_directory_rejects(spark, doc_dir):
     docs, rejects = load_directory(spark, doc_dir)
     names = {r["file_name"] for r in docs.select("file_name").collect()}
@@ -355,6 +385,7 @@ def test_create_database_over_no_chunks(spark, tmp_path, texts):
     meta = create_database(spark, docs, str(tmp_path), "none", cfg)
     stored = spark.read.parquet(str(tmp_path / "none" / "vectors")).count()
     assert meta["num_vectors"] == 0 == stored
+    assert meta["observed"] == {"n_docs": len(texts), "n_chunks": 0}
 
 
 def test_documents_table_is_coalesced_to_target_files(built_db, spark, doc_dir):

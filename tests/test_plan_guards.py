@@ -373,3 +373,47 @@ def test_pdf_page_split_runs_once_per_document(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     arrow = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
     assert len(arrow) == 1 and "page_split(" in arrow[0], arrow
+
+
+def test_only_session_module_writes_conf():
+    """No module but ``session.py`` sets session conf: a conf write in
+    an operator or stream is visible to every concurrent query of the
+    caller's session."""
+    from pathlib import Path
+
+    import vectordb_light_spark
+
+    root = Path(vectordb_light_spark.__file__).parent
+    writers = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if ".conf.set(" in p.read_text() and p != root / "session.py"
+    )
+    assert writers == []
+
+
+def test_a_build_releases_the_previous_builds_cache(spark):
+    """Each top-level registry build unpersists what the previous one
+    persisted: Spark's CacheManager would otherwise serve a warm-up
+    build's cached intermediates to the timed builds. Three builds of
+    one ``persist_if_batch`` entry each leave the same number of cache
+    entries, and none of them is an earlier build's."""
+    from vectordb_light_spark.session import release_persisted
+
+    release_persisted()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    identity = spark._jvm.System.identityHashCode
+
+    def entries() -> set[int]:
+        data = cm.cachedData()
+        return {identity(data.apply(i)) for i in range(data.size())}
+
+    base = entries()
+    builds = []
+    for _ in range(3):
+        QUERIES["dd_minhash_candidates"](spark, SF).collect()
+        builds.append(entries() - base)
+    assert len(builds[0]) > 0
+    assert len(builds[0]) == len(builds[1]) == len(builds[2]), builds
+    assert not builds[0] & builds[1] and not builds[1] & builds[2], builds
+    release_persisted()

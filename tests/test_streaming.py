@@ -829,3 +829,68 @@ def test_windowed_quantiles_state_gc_retires_closed_windows(spark, tmp_path):
     # the 3 windows still inside the TTL horizon remain
     assert nogc_state == 4
     assert gc_state == 3
+
+
+def test_stateful_drain_leaves_the_callers_shuffle_partitions_alone(spark):
+    """A stateful registry entry drains its stream in a session of its
+    own: while a worker thread drains ``st_heavy_hitters``, the main
+    thread polls the caller's shuffle partition count and always reads
+    the value it had before the drain."""
+    import threading
+
+    from vectordb_light_spark.queries import QUERIES
+    from vectordb_light_spark.session import STREAM_STATE_PARTITIONS
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    # a count the stream session does not use, so a leak would show
+    before = str(STREAM_STATE_PARTITIONS + 3)
+    spark.conf.set(key, before)
+    try:
+        rows: list = []
+        done = threading.Event()
+
+        def run():
+            try:
+                rows.extend(QUERIES["st_heavy_hitters"](spark, SF).collect())
+            finally:
+                done.set()
+
+        worker = threading.Thread(target=run)
+        worker.start()
+        seen = []
+        while not done.wait(0.005):
+            seen.append(spark.conf.get(key))
+        worker.join(timeout=300)
+        assert not worker.is_alive() and rows
+        assert len(seen) > 1 and set(seen) == {before}, sorted(set(seen))
+        assert spark.conf.get(key) == before
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_stream_session_copies_runtime_conf_and_keeps_its_views(spark):
+    """The session ``read_events_stream`` starts a stream in carries
+    the caller's runtime conf (a time zone set after the session was
+    built) and the state partition count; the memory sink's view lands
+    in that session, not in the caller's catalog."""
+    from vectordb_light_spark.session import STREAM_STATE_PARTITIONS
+
+    tz_key = "spark.sql.session.timeZone"
+    prev_tz = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "America/New_York")
+    try:
+        stream = read_events_stream(spark, SF)
+    finally:
+        spark.conf.set(tz_key, prev_tz)
+    own = stream.sparkSession
+    assert own is not spark
+    assert own.conf.get(tz_key) == "America/New_York"
+    assert own.conf.get("spark.sql.shuffle.partitions") == str(STREAM_STATE_PARTITIONS)
+    assert spark.conf.get(tz_key) == prev_tz
+
+    name = "ev_own_session_q"
+    got = run_stream_to_memory(windowed_event_counts(stream), name)
+    assert got.count() > 0
+    assert own.catalog.tableExists(name)
+    assert not spark.catalog.tableExists(name)

@@ -3871,17 +3871,15 @@ def st_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states. Multi-batch incremental behavior is covered in
     tests/test_streaming.py."""
     from vectordb_light_spark.streaming.events import (
-        bounded_state_partitions,
         read_events_stream,
         run_stream_to_memory,
         running_user_totals,
     )
 
     stream = read_events_stream(spark, sf_dir)
-    with bounded_state_partitions(spark, 8):
-        out = run_stream_to_memory(
-            running_user_totals(stream), "st_user_totals_q", output_mode="update"
-        )
+    out = run_stream_to_memory(
+        running_user_totals(stream), "st_user_totals_q", output_mode="update"
+    )
     return out.select(
         "user_id", "n_events", F.round("total_value", 4).alias("total_value")
     ).orderBy("user_id")
@@ -3911,19 +3909,17 @@ def st_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     true + max_err; retention of every key above N/capacity) get
     dedicated unit tests."""
     from vectordb_light_spark.streaming.events import (
-        bounded_state_partitions,
         read_events_stream,
         run_stream_to_memory,
         streaming_heavy_hitters,
     )
 
     stream = read_events_stream(spark, sf_dir)
-    with bounded_state_partitions(spark, 8):
-        out = run_stream_to_memory(
-            streaming_heavy_hitters(stream, threshold=70),
-            "st_heavy_hitters_q",
-            output_mode="update",
-        )
+    out = run_stream_to_memory(
+        streaming_heavy_hitters(stream, threshold=70),
+        "st_heavy_hitters_q",
+        output_mode="update",
+    )
     return out.select("user_id", "est_count", "max_err").orderBy("user_id")
 
 
@@ -3953,7 +3949,6 @@ def st_windowed_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins exact per-window counts plus both equality flags.
     Compression-regime rank bounds (εn) get dedicated unit tests."""
     from vectordb_light_spark.streaming.events import (
-        bounded_state_partitions,
         read_events_stream,
         run_stream_to_memory,
         streaming_windowed_quantiles,
@@ -3961,12 +3956,11 @@ def st_windowed_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, sf_dir)
-    with bounded_state_partitions(spark, 8):
-        out = run_stream_to_memory(
-            streaming_windowed_quantiles(stream),
-            "st_windowed_quantiles_q",
-            output_mode="update",
-        )
+    out = run_stream_to_memory(
+        streaming_windowed_quantiles(stream),
+        "st_windowed_quantiles_q",
+        output_mode="update",
+    )
     exact = windowed_quantiles_batch(
         load_table(spark, sf_dir, "events")
     ).select(
@@ -5537,16 +5531,13 @@ def st_clicks_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_memory,
     )
 
-    from vectordb_light_spark.streaming.events import bounded_state_partitions
-
     stream = read_events_stream(spark, sf_dir)
     joined = clicks_to_purchases_join(
         stream.where(F.col("event_type") == "click"),
         stream.where(F.col("event_type") == "purchase"),
         horizon="30 minutes",
     )
-    with bounded_state_partitions(spark, 8):
-        out = run_stream_to_memory(joined, "st_attr_q", output_mode="append")
+    out = run_stream_to_memory(joined, "st_attr_q", output_mode="append")
     return out.select(
         "click_id",
         "buy_id",

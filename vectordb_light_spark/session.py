@@ -133,6 +133,23 @@ def _tune_session(spark: SparkSession) -> None:
         pass
 
 
+#: Shuffle partitions of a stateful stream's session: one state store
+#: each, so the count tracks state size, not the scan width. A
+#: checkpoint pins it at the query's first run.
+STREAM_STATE_PARTITIONS = 8
+
+
+def stream_session(spark: SparkSession) -> SparkSession:
+    """A copy of ``spark``'s session (runtime conf, UDFs, temp views;
+    ``newSession()`` would drop the runtime conf) with its own conf and
+    catalog, so a stream's partition count and memory-sink view never
+    reach the caller's session. Each copy leaves one streaming-listener
+    registration on the SparkContext."""
+    out = spark.__class__(spark.sparkContext, spark._jsparkSession.cloneSession())
+    out.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+    return out
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-provided parquet table.
 

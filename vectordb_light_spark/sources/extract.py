@@ -392,15 +392,12 @@ def extract_documents(scanned: DataFrame) -> DataFrame:
 def load_directory(spark: SparkSession, source_dir: str) -> tuple[DataFrame, DataFrame]:
     """End-to-end S1→S12: (documents, rejects) DataFrames.
 
-    The extraction output is persisted before the docs/rejects split —
-    both branches consume it, and without the persist each branch
-    would re-read and re-parse every source file.
+    The extraction is materialized once, before the docs/rejects split
+    that both consume, as a private local checkpoint: a cache would be
+    served to a later load of the same directory, stale files and all.
     """
-    from vectordb_light_spark.session import persist_if_batch
-
-    extracted = persist_if_batch(
-        extract_documents(scan_documents(spark, source_dir))
-    )
+    extracted = extract_documents(scan_documents(spark, source_dir))
+    extracted = extracted.localCheckpoint(eager=True)
     docs = extracted.where(F.col("reject_reason").isNull()).drop("reject_reason")
     rejects = extracted.where(F.col("reject_reason").isNotNull()).select(
         "file_path", "file_type", "reject_reason"

@@ -17,15 +17,16 @@ exactly-once guarantee made observable.
 
 Scale: watermark bounds the state store to (windows in flight ×
 keys); partial aggregation happens map-side per micro-batch; the
-shuffle carries only (window, key) partials.
+shuffle carries only (window, key) partials. Each stream runs in a
+session of its own (:func:`read_events_stream`).
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from vectordb_light_spark.session import stream_session
 
 #: Legacy schema of the driver's events table (Spark ≤3.x read
 #: parquet nanos as long under nanosAsLong). Kept for reference; the
@@ -35,29 +36,6 @@ EVENTS_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, "
     "value double, props string"
 )
-
-
-@contextmanager
-def bounded_state_partitions(spark: SparkSession, n: int = 8):
-    """Temporarily bound ``spark.sql.shuffle.partitions`` for a
-    stateful streaming run.
-
-    Stateful operators instantiate one state store PER shuffle
-    partition (a stream-stream join keeps four per side), so the
-    partition count should track state size/key cardinality — not the
-    batch engine's scan width. Spark pins a streaming query's state
-    partitioning at its FIRST run (it's in the checkpoint), so this
-    is also the knob that must be chosen before go-live on a real
-    deployment. Locally: 32 → 8 partitions cuts a micro-batch's
-    state-store setup ~3× with zero result change.
-    """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -82,10 +60,15 @@ def read_events_stream(
     """Streaming parquet source over an events directory (file
     streaming sources require a directory; ``glob`` narrows it).
 
+    The stream, and what its sinks return, lives in
+    :func:`session.stream_session` (a copy of ``spark``); those frames
+    join freely with the caller's.
+
     File streaming sources need an explicit schema; we sniff it from a
     batch read of the same files so the declared types always match
     what this Spark version produces, then normalize ``ts`` exactly
     like the batch loader (session.load_table)."""
+    spark = stream_session(spark)
     schema = (
         spark.read.option("pathGlobFilter", glob).parquet(events_dir).schema
     )
@@ -438,7 +421,8 @@ def run_stream_to_memory(
 ) -> DataFrame:
     """Drain a streaming aggregate into an in-memory table with an
     availableNow trigger and return the result as a batch DataFrame
-    (test/backfill harness)."""
+    (test/backfill harness). The view ``query_name`` is registered in
+    ``stream_df``'s session."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)
