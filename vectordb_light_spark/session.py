@@ -29,6 +29,10 @@ TESTDATA_TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+#: The module Spark runs as the Python worker daemon (``get_spark``).
+WORKER_DAEMON_MODULE = "vectordb_light_spark.worker_daemon"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "vectordb_light_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard conf.
@@ -40,6 +44,13 @@ def get_spark(app_name: str = "vectordb_light_spark", cpus: int | None = None) -
       data in Arrow record batches.
     - shuffle.partitions sized to the local core count; on a real
       cluster this is overridden per-deploy (or left to AQE).
+    - Python workers fork from :mod:`vectordb_light_spark.worker_daemon`,
+      which stops each task re-reading every zip archive on the
+      worker's path (~77 ms a task on 4 cores). The executors' Python
+      path gets this package's parent directory, which holds locally;
+      a cluster installs or ships the package to every executor. Both
+      are static confs: they apply only when this call creates the
+      SparkContext, not to a session that already exists.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
@@ -75,6 +86,10 @@ def get_spark(app_name: str = "vectordb_light_spark", cpus: int | None = None) -
         # TIMESTAMP_NTZ — load_table normalizes either to TIMESTAMP.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
+        # the daemon starts before any task ships code, so its package
+        # must be on the workers' path whatever their working directory
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if not SparkSession.getActiveSession():
