@@ -83,13 +83,28 @@ def test_info_nce_gradients_and_value():
 
 
 def test_training_forward_matches_inference_encode():
-    enc = MiniTransformerEmbedder(64, seed=9, weights_mode="seeded")
-    texts = ["parity one", "a longer text with many more bytes " * 3, ""]
-    z_inf = enc.encode(texts)
-    w64 = {k: v.astype(np.float64) for k, v in enc._w.items()}
-    tok, mask = et.tokenize_batch(texts, 128)
-    z_tr = et.forward(w64, tok, mask, 2, 4)
-    assert np.abs(z_inf - z_tr).max() < 1e-6
+    """The tiled float32 kernel against the float64 reference, over
+    four tiles: one unpadded (every text past max_seq), then padded
+    tiles of mixed lengths with "", a multibyte text and a text past
+    max_seq, and a short last tile. Encoders: the shipped pretrained-v1
+    d64 checkpoint and the registry's d32 / max_seq 64 spec, with the
+    weights it resolves and seeded."""
+    for enc in (
+        MiniTransformerEmbedder(64),
+        MiniTransformerEmbedder(32, seed=5, max_seq=64),
+        MiniTransformerEmbedder(32, seed=5, max_seq=64, weights_mode="seeded"),
+    ):
+        r = enc.tile_rows
+        full = [f"{i} " + "a longer text with many more bytes " * 5 for i in range(r)]
+        assert all(len(enc.tokenize(t)) == enc.max_seq for t in full)
+        mixed = ["", "parity one", "Zwölf Boxkämpfer jagen Viktor", "€" * enc.max_seq]
+        texts = full + mixed + [f"w{i} " * i for i in range(1, 2 * r)]
+        assert len(texts) > 3 * r
+        z_inf = enc.encode(texts)
+        w64 = {k: v.astype(np.float64) for k, v in enc._w.items()}
+        tok, mask = et.tokenize_batch(texts, enc.max_seq)
+        z_tr = et.forward(w64, tok, mask, enc.n_layers, enc.n_heads)
+        assert np.abs(z_inf - z_tr).max() <= 1e-6, enc.spec
 
 
 def test_short_training_run_reduces_loss_and_is_deterministic():

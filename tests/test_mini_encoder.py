@@ -22,8 +22,8 @@ import pytest
 
 from vectordb_light_spark.functions.embedding import (
     MiniTransformerEmbedder,
+    _attention,
     _gelu,
-    _softmax,
     embed_documents,
     embed_query,
     model_encode_batch_size,
@@ -39,6 +39,10 @@ TEXTS = [
     "x",
     "numbers 12345 and punctuation!!! — em-dash, ünïcödé",
 ]
+
+#: mixed lengths in no length order, spread over several encode tiles:
+#: empty, 1 byte, multibyte and texts past max_seq
+MIXED = TEXTS + [f"word{i} " * (i * i % 37) for i in range(1, 19)] + ["€" * 60, "y" * 300]
 
 
 def test_encode_shapes_unit_norm_determinism():
@@ -61,15 +65,20 @@ def test_batch_invariance_is_exact_to_float_noise():
     """Encoding a text alone and encoding it padded next to a much
     longer text must agree — this is exactly the attention-mask +
     masked-mean-pool contract; an unmasked implementation fails it
-    by a wide margin."""
+    by a wide margin. MIXED spans several tiles, so a row's vector must
+    also not depend on which tile it lands in."""
     enc = MiniTransformerEmbedder(32, n_layers=2, seed=3)
     alone = enc.encode(["tiny"])[0]
     batched = enc.encode(["tiny", "a much longer document " * 20])[0]
     assert np.allclose(alone, batched, atol=2e-5)
-    # whole-list vs one-at-a-time
-    all_at_once = enc.encode(TEXTS)
-    one_by_one = np.vstack([enc.encode([t]) for t in TEXTS])
-    assert np.allclose(all_at_once, one_by_one, atol=2e-5)
+    assert len(MIXED) > 2 * enc.tile_rows
+    for texts in (TEXTS, MIXED):
+        # whole-list vs one-at-a-time vs reversed
+        all_at_once = enc.encode(texts)
+        one_by_one = np.vstack([enc.encode([t]) for t in texts])
+        reversed_ = enc.encode(texts[::-1])[::-1]
+        assert np.allclose(all_at_once, one_by_one, atol=2e-5)
+        assert np.allclose(all_at_once, reversed_, atol=2e-5)
 
 
 def test_truncation_bounds_what_the_vector_sees():
@@ -112,14 +121,51 @@ def test_gelu_and_softmax_keep_the_input_dtype(dtype):
     np.testing.assert_allclose(g, want, rtol=tol, atol=tol)
     np.testing.assert_array_equal(x, before)
 
-    x[..., -1] = -1e4  # a masked key: its weight underflows to 0
-    before, x64 = x.copy(), x.astype(np.float64)
-    p = _softmax(x)
-    e = np.exp(x64 - x64.max(axis=-1, keepdims=True))
-    assert p.dtype == dtype
-    np.testing.assert_allclose(p, e / e.sum(axis=-1, keepdims=True), rtol=tol, atol=tol)
-    assert (p[..., -1] == 0).all()
-    np.testing.assert_array_equal(x, before)
+    # the tiled attention's softmax: a masked key gets exactly weight 0
+    rng = np.random.default_rng(1)
+    q, k, v = (rng.normal(0.0, 1.0, (2, 4, 16, 8)).astype(dtype) for _ in range(3))
+    bias = np.zeros((2, 1, 16, 1), dtype)
+    bias[0, :, -3:] = -1e4  # the first row's last 3 keys are padding
+    before = [a.copy() for a in (q, k, v, bias)]
+    ctx = _attention(q, k, v, bias)
+    assert ctx.dtype == dtype
+    q64, k64, v64 = (a.astype(np.float64) for a in (q, k, v))
+    s64 = q64 @ k64.swapaxes(-1, -2) / np.sqrt(8) + bias.astype(np.float64).swapaxes(-1, -2)
+    e = np.exp(s64 - s64.max(axis=-1, keepdims=True))
+    want = e / e.sum(axis=-1, keepdims=True) @ v64
+    np.testing.assert_allclose(ctx, want, rtol=tol, atol=tol)
+    for a, b in zip((q, k, v, bias), before):
+        np.testing.assert_array_equal(a, b)
+    v[0, :, -3:] = 1e3  # a masked key's value cannot reach the output
+    np.testing.assert_array_equal(_attention(q, k, v, bias), ctx)
+    assert _attention(q, k, v, None).dtype == dtype
+
+
+def test_load_weights_rejects_a_bad_checkpoint():
+    """A NaN weight would encode NaN vectors that create_database
+    stores; a wrong-shaped or missing array would fail deep inside a
+    Spark task. All of them raise at load_weights, and the weights in
+    use stay installed."""
+    enc = MiniTransformerEmbedder(32, seed=1, weights_mode="seeded")
+    good = {k: v.astype(np.float64) for k, v in enc._w.items()}
+    want = enc.encode(TEXTS)
+    nan = dict(good, ff1_1=good["ff1_1"].copy())
+    nan["ff1_1"][3, 5] = np.nan
+    with pytest.raises(ValueError, match="'ff1_1' has a non-finite"):
+        enc.load_weights(nan)
+    with pytest.raises(ValueError, match=r"'qkv_0' has shape \(32, 64\)"):
+        enc.load_weights(dict(good, qkv_0=good["qkv_0"][:, :64]))
+    with pytest.raises(ValueError, match=r"missing \['ln2_1_b'\]"):
+        enc.load_weights({k: v for k, v in good.items() if k != "ln2_1_b"})
+    with pytest.raises(ValueError, match=r"unexpected \['extra'\]"):
+        enc.load_weights(dict(good, extra=np.zeros(3)))
+    np.testing.assert_array_equal(enc.encode(TEXTS), want)
+    enc.load_weights(good)
+    np.testing.assert_array_equal(enc.encode(TEXTS), want)
+    # finite in the checkpoint, inf in float16 compute
+    e16 = MiniTransformerEmbedder(32, seed=1, dtype="float16", weights_mode="seeded")
+    with pytest.raises(ValueError, match="'tok_emb' has a non-finite float16"):
+        e16.load_weights(dict(good, tok_emb=good["tok_emb"] * 1e6))
 
 
 def test_e4_batch_table_matches_reference_semantics():

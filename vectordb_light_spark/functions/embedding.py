@@ -47,6 +47,11 @@ from vectordb_light_spark.session import quote_ident, rebalance, sql_over
 
 DEFAULT_DIM = 64
 
+#: Target size of one tile's ``[rows, heads, max_seq, max_seq]``
+#: attention-score buffer: small enough to stay in a core's cache while
+#: the softmax passes over it.
+_TILE_BYTES = 2 << 20
+
 #: (dim, seed) → {token: (bucket, sign)} — per-process memo for the
 #: hashing encoder (vocabulary-bounded).
 _TOKEN_MEMO: dict[tuple[int, int], dict[str, tuple[int, float]]] = {}
@@ -111,12 +116,29 @@ def _layer_norm(x: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
     return (x - mu) / np.sqrt(var + 1e-5) * g + b
 
 
-def _softmax(x: np.ndarray) -> np.ndarray:
-    """Softmax over the last axis in ``x``'s dtype; one buffer, the
-    max-shift, exp and divide all write into it."""
-    e = x - x.max(axis=-1, keepdims=True)
-    np.exp(e, out=e)
-    return np.divide(e, e.sum(axis=-1, keepdims=True), out=e)
+def _attention(
+    q: np.ndarray, k: np.ndarray, v: np.ndarray, bias: np.ndarray | None
+) -> np.ndarray:
+    """``softmax(q @ k.T / sqrt(h) + bias) @ v`` over ``[.., L, h]``
+    heads, in the inputs' dtype; ``bias`` is an additive ``[.., L, 1]``
+    key mask, None when no key is padded.
+
+    The 1/sqrt(h) scale goes on ``q``, ``[.., L, h]``, not on the
+    ``[.., L, L]`` scores. The scores are held key-major, ``p[.., key,
+    query]``, so the max and the sum run down axis -2, which numpy
+    vectorizes across queries (a last-axis max over 128 keys is ~3x
+    slower). One score buffer: the bias add, the max-shift and the exp
+    write into it. The softmax divide is deferred to the context,
+    ``(v.T @ p) / p.sum``, so it runs over ``[.., h, L]`` instead of
+    over the ``[.., L, L]`` weights."""
+    p = k @ (q * q.dtype.type(1.0 / np.sqrt(q.shape[-1]))).swapaxes(-1, -2)
+    if bias is not None:
+        p += bias
+    p -= p.max(axis=-2, keepdims=True)
+    np.exp(p, out=p)
+    ctx = v.swapaxes(-1, -2) @ p
+    ctx /= p.sum(axis=-2, keepdims=True)
+    return ctx.swapaxes(-1, -2)
 
 
 def _gelu(x: np.ndarray) -> np.ndarray:
@@ -149,13 +171,21 @@ class MiniTransformerEmbedder:
       token id, plus [CLS]=256; vocab 258 with [PAD]=257. Real ids,
       real truncation, no vocabulary asset to download.
     - E9 max-seq policy: truncate to ``max_seq`` tokens.
-    - E3 padding: per-batch right-pad to the longest row + boolean
-      attention mask; padded keys get -inf attention logits, so a
-      row's vector is INDEPENDENT of its batch-mates (tested:
-      batch-size invariance).
+    - Tiles: ``encode`` runs the whole forward over tiles of
+      ``tile_rows`` texts, sized from the shape so that one tile's
+      ``[rows, heads, max_seq, max_seq]`` attention scores take about
+      2 MiB (8 rows at d64 / 4 heads / max_seq 128 in float32, 32 at
+      max_seq 64) and stay in cache while the softmax passes over
+      them. The caller's batch size does not change the tile.
+    - E3 padding: per-tile right-pad to the tile's longest row +
+      boolean attention mask; padded keys get a large negative
+      attention logit whose weight is exactly 0, so a row's vector is
+      INDEPENDENT of its tile-mates (tested: batch-size invariance).
+      A tile with no padded row skips the key mask and the masked pool.
     - E5 forward: sinusoidal positions, ``n_layers`` pre-LN blocks
       (MHA + GELU FFN, residuals), masked mean-pool over non-pad
-      positions, L2-normalize.
+      positions, L2-normalize. Attention defers the softmax divide to
+      the ``[.., L, h]`` context (``_attention``).
     - E8 dtype policy: compute in ``dtype`` (float32|float16);
       STORAGE is always float32 (ingest.py enforces array<float>).
 
@@ -196,6 +226,11 @@ class MiniTransformerEmbedder:
         self.dim, self.n_layers, self.n_heads = dim, n_layers, n_heads
         self.max_seq, self.seed, self.dtype = max_seq, seed, dtype
         self._np_dtype = np.float32 if dtype == "float32" else np.float16
+        self.tile_rows = max(
+            1,
+            _TILE_BYTES
+            // (n_heads * max_seq * max_seq * np.dtype(self._np_dtype).itemsize),
+        )
         self.weights_tag = "seeded"
         rng = np.random.default_rng(seed)
         s = 1.0 / np.sqrt(dim)
@@ -215,6 +250,8 @@ class MiniTransformerEmbedder:
         pe[:, 0::2] = np.sin(pos * freq)
         pe[:, 1::2] = np.cos(pos * freq)
         w["pos_emb"] = pe
+        # what load_weights accepts: the seeded init's keys and shapes
+        self._shapes = {k: v.shape for k, v in w.items()}
         if weights_mode == "pretrained":
             import os
 
@@ -227,9 +264,29 @@ class MiniTransformerEmbedder:
         self.load_weights(w)
 
     def load_weights(self, weights: dict[str, np.ndarray]) -> None:
-        """Install a weight dict (same keys the constructor seeds) —
-        the hook a trained checkpoint would come through."""
-        self._w = {k: np.asarray(v, dtype=self._np_dtype) for k, v in weights.items()}
+        """Install a weight dict (same keys and shapes the constructor
+        seeds) — the hook a trained checkpoint comes through. Raises
+        ``ValueError`` on a missing, unexpected or wrong-shaped array and
+        on a value that is not finite in the compute dtype, so a bad
+        checkpoint fails here instead of encoding NaN vectors."""
+        shapes = self._shapes
+        if set(weights) != set(shapes):
+            raise ValueError(
+                f"weights do not fit {self.spec}: missing "
+                f"{sorted(set(shapes) - set(weights))}, unexpected "
+                f"{sorted(set(weights) - set(shapes))}"
+            )
+        w = {}
+        for k, v in weights.items():
+            with np.errstate(over="ignore"):  # overflow shows as inf below
+                w[k] = np.asarray(v, dtype=self._np_dtype)
+            if w[k].shape != shapes[k]:
+                raise ValueError(
+                    f"weight {k!r} has shape {w[k].shape}, expected {shapes[k]}"
+                )
+            if not np.isfinite(w[k]).all():
+                raise ValueError(f"weight {k!r} has a non-finite {self.dtype} value")
+        self._w = w
 
     @property
     def spec(self) -> dict:
@@ -251,49 +308,55 @@ class MiniTransformerEmbedder:
         return [256, *(text or "").encode("utf-8")][: self.max_seq]
 
     def encode(self, texts: list[str]) -> np.ndarray:
-        if not texts:
-            return np.zeros((0, self.dim), np.float32)
+        """L2-normalized float32 ``[len(texts), dim]`` vectors, one tile
+        of ``tile_rows`` texts at a time."""
+        out = np.empty((len(texts), self.dim), np.float32)
+        for s in range(0, len(texts), self.tile_rows):
+            out[s : s + self.tile_rows] = self._encode_tile(
+                texts[s : s + self.tile_rows]
+            )
+        return out
+
+    def _encode_tile(self, texts: list[str]) -> np.ndarray:
+        """The forward over one tile of at most ``tile_rows`` texts,
+        padded to the tile's own longest row."""
         w, dt = self._w, self._np_dtype
         ids = [self.tokenize(t) for t in texts]
-        L = max(len(t) for t in ids)
-        tok = np.full((len(ids), L), 257, dtype=np.int64)  # [PAD]
-        mask = np.zeros((len(ids), L), dtype=bool)
+        n, L = len(ids), max(len(t) for t in ids)
+        tok = np.full((n, L), 257, dtype=np.int64)  # [PAD]
+        mask = np.zeros((n, L), dtype=bool)
         for i, t in enumerate(ids):  # E3: right-pad + mask
             tok[i, : len(t)] = t
             mask[i, : len(t)] = True
-
-        x = w["tok_emb"][tok] + w["pos_emb"][:L][None, :, :]
-        h = self.dim // self.n_heads
+        padded = not mask.all()
         # additive mask on padded KEYS (broadcast over queries): large
         # finite negative — exp() underflows to exactly 0, and unlike
         # finfo.min it cannot overflow to -inf when added to a score
-        neg = dt(-1e4) if dt is np.float16 else dt(-1e9)
-        attn_bias = np.where(mask[:, None, None, :], dt(0), neg)
+        bias = None
+        if padded:
+            neg = dt(-1e4) if dt is np.float16 else dt(-1e9)
+            bias = np.where(mask[:, None, :, None], dt(0), neg)
+
+        x = w["tok_emb"][tok] + w["pos_emb"][:L][None, :, :]
+        H, h = self.n_heads, self.dim // self.n_heads
         for i in range(self.n_layers):
             y = _layer_norm(x, w[f"ln1_{i}_g"], w[f"ln1_{i}_b"])
-            qkv = y @ w[f"qkv_{i}"]  # [B, L, 3D]
-            q, k, v = np.split(qkv, 3, axis=-1)
-            # [B, L, D] → [B, H, L, h]
-            sh = (len(ids), L, self.n_heads, h)
-            q = q.reshape(sh).transpose(0, 2, 1, 3)
-            k = k.reshape(sh).transpose(0, 2, 1, 3)
-            v = v.reshape(sh).transpose(0, 2, 1, 3)
-            scores = q @ k.swapaxes(-1, -2)
-            scores /= np.sqrt(dt(h))
-            scores += attn_bias
-            ctx = _softmax(scores) @ v  # [B, H, L, h]
-            ctx = ctx.transpose(0, 2, 1, 3).reshape(len(ids), L, self.dim)
-            x = x + ctx @ w[f"attn_out_{i}"]
+            # [n, L, 3D] → q, k, v, each [n, H, L, h]
+            qkv = y @ w[f"qkv_{i}"]
+            q, k, v = qkv.reshape(n, L, 3, H, h).transpose(2, 0, 3, 1, 4)
+            ctx = _attention(q, k, v, bias).transpose(0, 2, 1, 3)
+            x = x + ctx.reshape(n, L, self.dim) @ w[f"attn_out_{i}"]
             y = _layer_norm(x, w[f"ln2_{i}_g"], w[f"ln2_{i}_b"])
             x = x + _gelu(y @ w[f"ff1_{i}"]) @ w[f"ff2_{i}"]
 
         # masked mean-pool: padded positions contribute nothing
-        m = mask[:, :, None].astype(dt)
-        pooled = (x * m).sum(axis=1) / np.maximum(m.sum(axis=1), dt(1))
+        if padded:
+            x *= mask[:, :, None]
+        pooled = x.sum(axis=1) / mask.sum(axis=1, keepdims=True).astype(dt)
         pooled = pooled.astype(np.float32)  # E8: storage dtype
         norms = np.linalg.norm(pooled, axis=1, keepdims=True)
         np.maximum(norms, 1e-12, out=norms)
-        return np.ascontiguousarray(pooled / norms, dtype=np.float32)
+        return pooled / norms
 
 
 #: E4 — per-model encode batch sizes (reference
@@ -445,10 +508,14 @@ def embed_map(
     column ``out_col`` after ``df``'s columns, which pass through.
 
     The encoder is resolved per executor process from ``spec`` and
-    cached, and encodes ``model_encode_batch_size(spec)`` texts at a
-    time (the E4 table). Feed it each partition sorted by text length
-    (E2) so real transformer batches pad near-rectangularly; for the
-    hashing encoder it's a no-op cost-wise either way.
+    cached, and is handed ``model_encode_batch_size(spec)`` texts at a
+    time (the E4 table). The mini-transformer splits each batch into
+    cache-sized tiles (``MiniTransformerEmbedder.tile_rows``, 8 texts at
+    its default shape) and defers each softmax divide to the attention
+    context. Feed it each partition sorted by text length (E2) so the
+    tiles pad near-rectangularly, and most tiles of truncated chunks
+    need no mask at all; for the hashing encoder it's a no-op cost-wise
+    either way.
     """
     encode_batch_size = model_encode_batch_size(spec)
     schema = T.StructType(

@@ -11,10 +11,13 @@ in-repo: a SimCSE-style unsupervised objective over two random spans
 of the same document (positives) against in-batch negatives
 (InfoNCE, symmetric, temperature τ).
 
-The forward here mirrors ``MiniTransformerEmbedder.encode`` op-for-op
-(pre-LN blocks, masked attention, masked mean-pool, L2 normalize) in
-float64, and a parity test pins the two paths to float32 tolerance —
-so the trained arrays drop into ``load_weights`` without touching the
+The forward here is the float64 reference that the inference kernel,
+``MiniTransformerEmbedder.encode``, is pinned to: the same math (pre-LN
+blocks, masked attention, masked mean-pool, L2 normalize) written
+plainly over one padded batch, while the kernel runs it in cache-sized
+tiles with a deferred softmax divide in float32/float16. A parity test
+over several tiles holds the two to max |Δ| ≤ 1e-6 in float32, so the
+trained arrays drop into ``load_weights`` without touching the
 execution path. The backward pass is hand-derived and verified
 against central finite differences (tests/test_encoder_train.py).
 
@@ -51,7 +54,7 @@ def load_checkpoint(path: str) -> dict[str, np.ndarray]:
 
 
 # ---------------------------------------------------------------------------
-# Forward with caches (float64 twin of MiniTransformerEmbedder.encode)
+# Forward with caches (the float64 reference for MiniTransformerEmbedder.encode)
 # ---------------------------------------------------------------------------
 
 
@@ -95,8 +98,9 @@ def _ln_backward(dy, cache, g):
 
 
 def tokenize_batch(texts, max_seq):
-    """[CLS] + UTF-8 bytes, truncated; right-pad + mask — identical
-    to MiniTransformerEmbedder.tokenize/encode (E1/E3/E9)."""
+    """[CLS] + UTF-8 bytes, truncated; right-pad to the batch's longest
+    row + mask — MiniTransformerEmbedder.tokenize's ids (E1/E9); its
+    encode pads each tile the same way (E3)."""
     ids = [[256, *(t or "").encode("utf-8")][:max_seq] for t in texts]
     L = max(len(t) for t in ids) if ids else 1
     tok = np.full((len(ids), L), 257, dtype=np.int64)
