@@ -121,7 +121,8 @@ def test_gelu_and_softmax_keep_the_input_dtype(dtype):
     np.testing.assert_allclose(g, want, rtol=tol, atol=tol)
     np.testing.assert_array_equal(x, before)
 
-    # the tiled attention's softmax: a masked key gets exactly weight 0
+    # the tiled attention's softmax (q carries the 1/sqrt(h) scale): a
+    # masked key gets exactly weight 0
     rng = np.random.default_rng(1)
     q, k, v = (rng.normal(0.0, 1.0, (2, 4, 16, 8)).astype(dtype) for _ in range(3))
     bias = np.zeros((2, 1, 16, 1), dtype)
@@ -130,12 +131,14 @@ def test_gelu_and_softmax_keep_the_input_dtype(dtype):
     ctx = _attention(q, k, v, bias)
     assert ctx.dtype == dtype
     q64, k64, v64 = (a.astype(np.float64) for a in (q, k, v))
-    s64 = q64 @ k64.swapaxes(-1, -2) / np.sqrt(8) + bias.astype(np.float64).swapaxes(-1, -2)
+    s64 = q64 @ k64.swapaxes(-1, -2) + bias.astype(np.float64).swapaxes(-1, -2)
     e = np.exp(s64 - s64.max(axis=-1, keepdims=True))
     want = e / e.sum(axis=-1, keepdims=True) @ v64
     np.testing.assert_allclose(ctx, want, rtol=tol, atol=tol)
     for a, b in zip((q, k, v, bias), before):
         np.testing.assert_array_equal(a, b)
+    # a given score buffer holds the same scores
+    np.testing.assert_array_equal(_attention(q, k, v, bias, np.empty((2, 4, 16, 16), dtype)), ctx)
     v[0, :, -3:] = 1e3  # a masked key's value cannot reach the output
     np.testing.assert_array_equal(_attention(q, k, v, bias), ctx)
     assert _attention(q, k, v, None).dtype == dtype

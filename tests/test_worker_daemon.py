@@ -11,6 +11,8 @@ import sys
 import zipfile
 import zipimport
 
+import pytest
+
 from vectordb_light_spark import worker_daemon
 from vectordb_light_spark.session import WORKER_DAEMON_MODULE
 
@@ -91,3 +93,51 @@ def test_a_warm_python_task_does_not_reread_the_zips(spark):
         ms = [r.ms for r in df.mapInPandas(time_invalidate, "ms double").collect()]
     assert len(ms) == n
     assert statistics.median(ms) < 10.0, ms
+
+
+def test_blas_coretype_follows_the_cpu_flags(tmp_path):
+    def core(flags):
+        path = tmp_path / "cpuinfo"
+        path.write_text(f"processor\t: 0\nflags\t\t: {flags}\nbugs\t\t:\n")
+        return worker_daemon.blas_coretype(str(path))
+
+    avx512 = "avx512f avx512cd avx512bw avx512dq avx512vl"
+    assert core(f"fpu sse2 avx avx2 fma {avx512} avx512_bf16") == "Cooperlake"
+    assert core(f"fpu sse2 avx avx2 fma {avx512}") == "SkylakeX"
+    assert core("fpu sse2 avx avx2 fma avx512f") == "Haswell"
+    assert core("fpu sse2 sse4_2 avx") is None
+    assert worker_daemon.blas_coretype(str(tmp_path / "missing")) is None
+
+
+def test_python_tasks_run_the_blas_kernels_the_cpu_supports(spark):
+    """OpenBLAS reads ``OPENBLAS_CORETYPE`` when numpy loads; the daemon
+    sets it before that, so the workers' OpenBLAS names the kernel family
+    the CPU's flags support (at the stock daemon a Xeon model OpenBLAS
+    does not know reports "Prescott")."""
+
+    def blas_core(batches):  # nested: pickled by value for the workers
+        import ctypes
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        with open("/proc/self/maps") as f:
+            libs = {ln.split()[-1] for ln in f if "libopenblas" in ln}
+        names = []
+        for lib in libs:
+            for fn in ("openblas_get_corename64_", "openblas_get_corename"):
+                get = getattr(ctypes.CDLL(lib), fn, None)
+                if get is not None:
+                    get.restype = ctypes.c_char_p
+                    names.append(get().decode())
+                    break
+        yield pd.DataFrame({"core": [",".join(names)]})
+
+    want = worker_daemon.blas_coretype()
+    if want is None or os.environ.get("OPENBLAS_CORETYPE"):
+        pytest.skip("no AVX2 in the CPU flags, or the core type is set from outside")
+    cores = {r.core for r in spark.range(0, 4, numPartitions=2).mapInPandas(blas_core, "core string").collect()}
+    if cores == {""}:
+        pytest.skip("numpy does not load OpenBLAS here")
+    assert cores == {want}

@@ -17,8 +17,16 @@ Design principles
   partition-count knobs on every wide operator, no driver-side loops.
 """
 
-from vectordb_light_spark.session import get_spark, load_tables
-
 __all__ = ["get_spark", "load_tables"]
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # session (and with it pyspark and numpy) loads on first use, so the
+    # worker daemon can set up its process before numpy loads
+    if name in __all__:
+        from vectordb_light_spark import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

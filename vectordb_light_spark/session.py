@@ -46,7 +46,8 @@ def get_spark(app_name: str = "vectordb_light_spark", cpus: int | None = None) -
       cluster this is overridden per-deploy (or left to AQE).
     - Python workers fork from :mod:`vectordb_light_spark.worker_daemon`,
       which stops each task re-reading every zip archive on the
-      worker's path (~77 ms a task on 4 cores). The executors' Python
+      worker's path (~77 ms a task on 4 cores) and has numpy's OpenBLAS
+      run the GEMM kernels the CPU's flags support. The executors' Python
       path gets this package's parent directory, which holds locally;
       a cluster installs or ships the package to every executor. Both
       are static confs: they apply only when this call creates the
